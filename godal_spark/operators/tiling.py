@@ -132,11 +132,13 @@ def with_overview_levels(df: DataFrame, w: str = "w", h: str = "h",
                     f"cast(floor(log2(floor({c} / {mp1}))) + 1 as int) "
                     f"ELSE 0 END)")
 
-        n = f"greatest({_kmax(w)}, {_kmax(h)})"
+        # at most 31 levels, like the Column form below; the factor 2^k is
+        # a bigint shift clamped to Int.MaxValue, since 2^31 overflows int
+        n = f"least(31, greatest({_kmax(w)}, {_kmax(h)}))"
         return df.withColumn("levels", F.expr(
             f"CASE WHEN {n} < 1 THEN cast(array() as array<int>) "
             f"ELSE transform(sequence(1, {n}), "
-            f"k -> cast(shiftleft(1, k) as int)) END"))
+            f"k -> cast(least(shiftleft(1L, k), 2147483647L) as int)) END"))
     m = min_size
     ks = F.sequence(F.lit(1), F.lit(31))
     # w >> (k-1) as floor(w / 2^(k-1)) — shiftright needs a literal count,
@@ -145,7 +147,8 @@ def with_overview_levels(df: DataFrame, w: str = "w", h: str = "h",
     cond = lambda k: (halved(w, k) > m) | (halved(h, k) > m)  # noqa: E731
     return df.withColumn(
         "levels",
-        F.transform(F.filter(ks, cond), lambda k: F.pow(F.lit(2.0), k.cast("double")).cast("int")))
+        F.transform(F.filter(ks, cond), lambda k: F.least(
+            F.pow(F.lit(2.0), k.cast("double")), F.lit(2147483647.0)).cast("int")))
 
 
 # ---------------------------------------------------------------------------

@@ -13,6 +13,27 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_cpus() -> int:
+    """CPUs this process may run on (what ``nproc`` prints)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:      # no affinity API (macOS)
+        return os.cpu_count() or 1
+
+
+def driver_mem_default() -> str:
+    """A sixth of the host's RAM, clamped to 1-4 GB: a local-mode driver
+    is the whole cluster, but the Python workers and the OS page cache
+    need the rest."""
+    try:
+        with open("/proc/meminfo") as fh:
+            total_mb = next(int(line.split()[1]) // 1024 for line in fh
+                            if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):    # no /proc (macOS): the cap
+        return "4096m"
+    return f"{min(4096, max(1024, total_mb // 6))}m"
+
+
 def get_spark(
     app_name: str = "godal_spark",
     cores: int | None = None,
@@ -24,7 +45,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    cores: local[N] thread count; defaults to $SPARK_GRAFT_CPUS or 32.
+    cores: local[N] thread count; defaults to $SPARK_GRAFT_CPUS or the
+    CPUs this process may run on.
+    The driver heap is $SPARK_GRAFT_DRIVER_MEM or driver_mem_default().
     shuffle_partitions: defaults to max(cores, 32) — at cluster scale this
     is instead sized by AQE's coalescing from an intentionally high value.
     executors: if set, use local-cluster[executors, executor_cores, mem]
@@ -35,7 +58,7 @@ def get_spark(
     packaging check.
     """
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cpus())
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 32)
     # under spark-submit the gateway JVM already carries --master /
@@ -62,7 +85,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or driver_mem_default())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")

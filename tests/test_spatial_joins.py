@@ -94,7 +94,8 @@ def test_knn_join_matches_bruteforce(spark):
 def test_knn_guarantee_fine_res(spark):
     """At res 10 / rings 1 cells are ~0.35° wide; neighbors ~1° away sit
     outside the ring block, so the bare ring pass would return wrong
-    top-k — the re-probe tier must recover the exact answer."""
+    top-k — the re-probe tier must recover the exact answer (and the
+    broadcast tier, which ignores res, must give the same)."""
     rng = np.random.default_rng(7)
     qs = [(float(x), float(y)) for x, y in zip(rng.uniform(0, 10, 20), rng.uniform(40, 50, 20))]
     ps = [(float(x), float(y)) for x, y in zip(rng.uniform(0, 10, 60), rng.uniform(40, 50, 60))]
@@ -145,6 +146,125 @@ def test_knn_incomplete_flag(spark):
     pdf = spark.createDataFrame(pd.DataFrame({"pid": [0], "lon": [0.1], "lat": [0.1]}))
     out = knn.knn_join(qdf, pdf, k=5, q_id="qid", p_id="pid", res=6, rings=1).collect()
     assert len(out) == 1 and not out[0].complete
+
+
+@pytest.mark.parametrize("case", [
+    test_knn_join_matches_bruteforce, test_knn_guarantee_fine_res,
+    test_knn_auto_res, test_knn_incomplete_flag],
+    ids=["bruteforce", "guarantee_fine_res", "auto_res", "incomplete_flag"])
+def test_knn_ring_tiers(spark, monkeypatch, case):
+    """The knn cases above with the broadcast tier off: any non-empty
+    point side is then over budget and runs the ring, re-probe and brute
+    tiers."""
+    monkeypatch.setattr(knn, "BROADCAST_BUDGET", 0)
+    case(spark)
+
+
+def _knn_brute(qs, ps, k):
+    """numpy reference: rows (qid, rank, pid, dist) and `complete` per
+    query that has rows, same formula and (dist, pid) order; rows with a
+    null or non-finite coordinate dropped on both sides."""
+    ok = lambda x, y: x is not None and y is not None and np.isfinite([x, y]).all()  # noqa: E731
+    ps = [p for p in ps if ok(p[1], p[2])]
+    pid = np.array([p[0] for p in ps], dtype=np.int64)
+    px = np.array([p[1] for p in ps], dtype=np.float64)
+    py = np.array([p[2] for p in ps], dtype=np.float64)
+    rows, complete = [], {}
+    for qid, qx, qy in qs:
+        if not ok(qx, qy):
+            continue
+        d = np.sqrt((qx - px) ** 2 + (qy - py) ** 2)
+        o = np.lexsort((pid, d))[:k]
+        rows += [(qid, r + 1, int(pid[j]), float(d[j])) for r, j in enumerate(o)]
+        if len(o):
+            complete[qid] = len(o) == k
+    return sorted(rows), complete
+
+
+@pytest.mark.parametrize("seed,k,n_p", [(0, 3, 240), (1, 1, 90), (2, 5, 3), (3, 2, 0)])
+def test_knn_paths_match_bruteforce_property(spark, monkeypatch, seed, k, n_p):
+    """Random inputs through both paths against numpy: exact lattice ties
+    and equidistant queries, duplicate points, k > |P|, queries far
+    outside P's bbox, points near ±180° (no wrap), null/NaN/inf
+    coordinates on either side, and a point side with no valid point.
+    Same (qid, rank, neighbor_id), dist bit-equal, same complete flags."""
+    rng = np.random.default_rng(seed)
+    m = n_p // 3
+    x = np.concatenate([rng.integers(0, 6, m).astype(float),        # lattice
+                        rng.uniform(-179.999, -179.9, m // 2),
+                        rng.uniform(179.9, 179.999, m - m // 2),
+                        rng.uniform(0, 6, n_p - 2 * m)])
+    y = np.concatenate([rng.integers(40, 46, m).astype(float),
+                        rng.uniform(-1, 1, m), rng.uniform(40, 46, n_p - 2 * m)])
+    ids = rng.permutation(n_p) * 7 + 3           # id order != row order
+    ps = [(int(i), float(a), float(b)) for i, a, b in zip(ids, x, y)]
+    ps += [(int(ids[j]) + 1, ps[j][1], ps[j][2]) for j in range(min(5, n_p // 2))]  # duplicates
+    ps += [(-1, None, 42.0), (-2, 1.0, float("nan")), (-3, float("inf"), 0.0)]
+    qs = [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(
+        np.concatenate([rng.integers(0, 6, 10) + 0.5, rng.uniform(-1, 7, 15),
+                        [179.95, -179.95, 120.0, 3.0]]),
+        np.concatenate([rng.integers(40, 46, 10) + 0.5, rng.uniform(39, 47, 15),
+                        [0.0, 0.5, -60.0, 89.0]])))]
+    qs += [(100, None, 41.0), (101, float("nan"), 42.0), (102, 2.0, float("-inf"))]
+    exp_rows, exp_complete = _knn_brute(qs, ps, k)
+    qdf = spark.createDataFrame(qs, "qid long, lon double, lat double")
+    pdf = spark.createDataFrame(ps, "pid long, lon double, lat double")
+    for budget in (knn.BROADCAST_BUDGET, 0):
+        monkeypatch.setattr(knn, "BROADCAST_BUDGET", budget)
+        out = knn.knn_join(qdf, pdf, k, q_id="qid", p_id="pid", res=8, rings=1).collect()
+        got = sorted((r.qid, r.rank, r.neighbor_id, r.dist) for r in out)
+        assert [g[:3] for g in got] == [e[:3] for e in exp_rows], f"budget {budget}"
+        assert [g[3] for g in got] == [e[3] for e in exp_rows], f"budget {budget}"
+        assert {r.qid: r.complete for r in out} == exp_complete
+
+
+@pytest.mark.parametrize("name", ["rings", "k"])
+def test_knn_rejects_bad_k_and_rings(spark, name):
+    """rings=0 used to spin the re-probe loop forever (r = 0 never
+    doubles); k or rings below 1 raise before any job runs."""
+    q = spark.createDataFrame([(0, 0.0, 0.0)], "qid long, lon double, lat double")
+    p = spark.createDataFrame([(0, 0.1, 0.1)], "pid long, lon double, lat double")
+    args = {"k": 3, "rings": 2, name: 0}
+
+    def call(guarantee):
+        with pytest.raises(ValueError, match=name):
+            knn.knn_join(q, p, args["k"], q_id="qid", p_id="pid",
+                         rings=args["rings"], guarantee=guarantee)
+
+    for guarantee in (True, False):
+        assert _jobs_of(spark, lambda: call(guarantee))[0] == 0
+
+
+def _jobs_of(spark, fn):
+    """(Spark jobs fn ran, fn's result): the job ids a one-off job group
+    collects around fn, from the StatusTracker."""
+    sc = spark.sparkContext
+    group = f"job-budget-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_knn_broadcast_job_budget(spark, tmp_path):
+    """The broadcast tier at sf0.001 size (150 points, parquet scans):
+    one job collects P, the query side's Arrow stage runs in the
+    caller's action. Budget 3 jobs for knn_join(...).collect(): the
+    re-probe chain it replaces ran 28 at the benchmark's sizes."""
+    rng = np.random.default_rng(5)
+    pd.DataFrame({"qid": np.arange(1000), "lon": rng.uniform(-180, 180, 1000),
+                  "lat": rng.uniform(-60, 60, 1000)}).to_parquet(tmp_path / "q.parquet")
+    pd.DataFrame({"pid": np.arange(150), "lon": rng.uniform(-180, 180, 150),
+                  "lat": rng.uniform(-60, 60, 150)}).to_parquet(tmp_path / "p.parquet")
+    q = spark.read.parquet(str(tmp_path / "q.parquet"))
+    p = spark.read.parquet(str(tmp_path / "p.parquet"))
+    n, rows = _jobs_of(spark, lambda: knn.knn_join(
+        q, p, 3, q_id="qid", p_id="pid").collect())
+    assert len(rows) == 3000 and all(r.complete for r in rows)
+    assert n <= 3, f"knn_join(...).collect() ran {n} jobs"
 
 
 def test_spatial_filter_golden(spark):

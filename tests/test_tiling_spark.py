@@ -38,6 +38,24 @@ def test_overview_level_plan_column(spark):
     assert rows["c"] == []
 
 
+@pytest.mark.parametrize("wtype", ["int", "bigint"])
+def test_overview_levels_near_int_max(spark, wtype):
+    """Metadata-only rows with w/h near 2^31 (and past it as bigint): at
+    min_size 0 the 31st level factor 2^31 does not fit an int. The
+    closed integer form used to wrap it to -2^31 (and a bigint dim gave
+    41 levels of shifted-mod-32 garbage); both forms now cap at 31
+    levels and clamp the last factor to Int.MaxValue."""
+    big = 2 ** 31 - 1 if wtype == "int" else 2 ** 40
+    df = spark.createDataFrame([("a", big, 5), ("b", 2 ** 30, 2 ** 30), ("c", 1000, 3)],
+                               f"image_id string, w {wtype}, h {wtype}")
+    want = [2 ** k for k in range(1, 31)] + [2 ** 31 - 1]
+    for m in (0, F.lit(0)):
+        rows = {r.image_id: r.levels for r in
+                tiling.with_overview_levels(df, min_size=m).collect()}
+        assert rows["a"] == want and rows["b"] == want
+        assert rows["c"] == [2 ** k for k in range(1, 11)]
+
+
 def test_explode_tiles_pixels_and_caption(spark):
     arr = datagen.pixels_ramp(63, 65)
     rows = [datagen.image_row("img_a", arr, "raw8"),
