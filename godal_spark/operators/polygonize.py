@@ -257,6 +257,30 @@ def polygonize_array(arr: np.ndarray, *, eight: bool = False,
 # sieve
 # ---------------------------------------------------------------------------
 
+def _component_stats(arr: np.ndarray, labels: np.ndarray, n: int):
+    """(value, n_pixels) per local label: the value of the label's first
+    pixel in scan order (its ORIGINAL value) and its pixel count."""
+    fl = labels.ravel()
+    iok = np.flatnonzero(fl >= 0)
+    first = np.full(n, fl.size, dtype=np.int64)
+    np.minimum.at(first, fl[iok], iok)
+    return arr.ravel()[first], np.bincount(fl[iok], minlength=n)
+
+
+def _adjacent_pairs(labels: np.ndarray) -> np.ndarray:
+    """Unique (a, b), a < b, label pairs of 4-adjacent pixels in different
+    components, masked pixels (-1) excluded — GDAL merges into the
+    largest 4-adjacent neighbor. Vectorized (the per-boundary-pixel
+    Python zip loop was O(boundary px), round 4)."""
+    pairs = []
+    for sl_a, sl_b in ((np.s_[:, 1:], np.s_[:, :-1]), (np.s_[1:, :], np.s_[:-1, :])):
+        la, lb = labels[sl_a].ravel(), labels[sl_b].ravel()
+        m = (la != lb) & (la >= 0) & (lb >= 0)
+        pairs.append(np.stack([np.minimum(la[m], lb[m]),
+                               np.maximum(la[m], lb[m])], axis=1))
+    return np.unique(np.concatenate(pairs), axis=0)
+
+
 def sieve_array(arr: np.ndarray, threshold: int, *, eight: bool = False,
                 valid: np.ndarray | None = None) -> np.ndarray:
     """Replace components < threshold px with their largest neighbor's
@@ -265,33 +289,17 @@ def sieve_array(arr: np.ndarray, threshold: int, *, eight: bool = False,
     labels, n = label_components(arr, eight=eight, valid=valid)
     if n == 0:
         return out
-    sizes = np.bincount(labels[labels >= 0].ravel(), minlength=n)
+    comp_val, sizes = _component_stats(arr, labels, n)
     small = np.nonzero(sizes < threshold)[0]
     if small.size == 0:
         return out
-    # adjacency via 4-neighborhood label pairs (GDAL merges into the
-    # largest 4-adjacent neighbor) — unique pairs vectorized (the
-    # per-boundary-pixel Python zip loop was O(boundary px), round 4)
-    pair_list = []
-    for sl_a, sl_b in ((np.s_[:, 1:], np.s_[:, :-1]), (np.s_[1:, :], np.s_[:-1, :])):
-        la, lb = labels[sl_a].ravel(), labels[sl_b].ravel()
-        m = (la != lb) & (la >= 0) & (lb >= 0)
-        if m.any():
-            pair_list.append(np.stack([np.minimum(la[m], lb[m]),
-                                       np.maximum(la[m], lb[m])], axis=1))
     adj: dict[int, set[int]] = {int(s): set() for s in small}
-    if pair_list:
-        for a, b in np.unique(np.concatenate(pair_list), axis=0).tolist():
-            if a in adj:
-                adj[a].add(b)
-            if b in adj:
-                adj[b].add(a)
-    # representative ORIGINAL value per component (first scan occurrence)
+    for a, b in _adjacent_pairs(labels).tolist():
+        if a in adj:
+            adj[a].add(b)
+        if b in adj:
+            adj[b].add(a)
     fl = labels.ravel()
-    iok = np.flatnonzero(fl >= 0)
-    first = np.full(n, fl.size, dtype=np.int64)
-    np.minimum.at(first, fl[iok], iok)
-    comp_val = arr.ravel()[first]
     # decision per small component (independent: sizes fixed, values
     # original), then ONE O(area) gather applies every merge — the
     # previous per-component `out[labels == s]` was O(n_small * area)
@@ -317,6 +325,11 @@ def sieve_array(arr: np.ndarray, threshold: int, *, eight: bool = False,
 
 FEATURES_SCHEMA = ("image_id string, band int, value double, n_pixels bigint, "
                    "geometry binary, area double")
+
+
+def _decode_tile(r) -> np.ndarray:
+    """A tile row's payload as its read-only (bh, bw) pixel array."""
+    return np.frombuffer(r.payload, dtype=np.dtype(r.dtype)).reshape(r.bh, r.bw)
 
 
 def polygonize(tiles: DataFrame, *, eight: bool = False,
@@ -352,8 +365,7 @@ def polygonize(tiles: DataFrame, *, eight: bool = False,
         dt = np.dtype(pdf["dtype"].iloc[0])
         full = np.zeros((h, w), dtype=dt)
         for r in pdf.itertuples(index=False):
-            full[r.y0:r.y0 + r.bh, r.x0:r.x0 + r.bw] = \
-                np.frombuffer(r.payload, dtype=dt).reshape(r.bh, r.bw)
+            full[r.y0:r.y0 + r.bh, r.x0:r.x0 + r.bw] = _decode_tile(r)
         return full
 
     def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -786,18 +798,152 @@ def _attach_roots(spark, comps: DataFrame, edges: DataFrame,
             .withColumn("root", F.coalesce("root", "cid")))
 
 
+def _label_tile(r, eight: bool, nodata: float | None):
+    """One tile row → (pixels, local labels, n): payload decode, the
+    nodata mask (nodata pixels label -1 when `nodata` is given) and
+    label_components. Local labels must fit the 21 low bits of the
+    _cid_base global id."""
+    arr = _decode_tile(r)
+    valid = None if nodata is None else arr != nodata
+    labels, n = label_components(arr, eight=eight, valid=valid)
+    if n >= (1 << 21):
+        raise ValueError(
+            f"tile ({r.block_x},{r.block_y}) of image {r.image_id!r} has "
+            f"{n} local components — exceeds the 21-bit component-id "
+            "budget; use tiles smaller than 2048x1024 px")
+    return arr, labels, n
+
+
+def _seam_strips(r, arr: np.ndarray, labels: np.ndarray, base: int,
+                 eight: bool) -> list[tuple]:
+    """(key, side, vals, cids) per border line the tile shares with a
+    neighbor tile. key names the line in global pixel coords: `v:x:y0`
+    (vertical), `h:x0:y` (horizontal) and, under 8-connectivity, the
+    tile corners a diagonal neighbor touches (`cd:` down-right, `ca:`
+    down-left; one pixel each). Side 'a' is the tile above / left of
+    the line, 'b' the one below / right. cids are global component ids,
+    -1 for masked pixels."""
+    x0, y0, bw, bh = int(r.x0), int(r.y0), int(r.bw), int(r.bh)
+    right, left = x0 + bw < int(r.w), x0 > 0
+    below, above = y0 + bh < int(r.h), y0 > 0
+    lines = []
+    if right:
+        lines.append((f"v:{x0 + bw}:{y0}", "a", np.s_[:, -1]))
+    if left:
+        lines.append((f"v:{x0}:{y0}", "b", np.s_[:, 0]))
+    if below:
+        lines.append((f"h:{x0}:{y0 + bh}", "a", np.s_[-1, :]))
+    if above:
+        lines.append((f"h:{x0}:{y0}", "b", np.s_[0, :]))
+    if eight:
+        if right and below:
+            lines.append((f"cd:{x0 + bw}:{y0 + bh}", "a", np.s_[-1:, -1]))
+        if left and above:
+            lines.append((f"cd:{x0}:{y0}", "b", np.s_[:1, 0]))
+        if left and below:
+            lines.append((f"ca:{x0}:{y0 + bh}", "a", np.s_[-1:, 0]))
+        if right and above:
+            lines.append((f"ca:{x0 + bw}:{y0}", "b", np.s_[:1, -1]))
+    return [(key, side, arr[sl].astype(np.float64).tolist(),
+             np.where(labels[sl] >= 0, labels[sl] | base, -1).tolist())
+            for key, side, sl in lines]
+
+
+def _labeled_tiles(pdf: pd.DataFrame, eight: bool, nodata: float | None):
+    """Phase 1's per-tile front half, shared by polygonize_tiles and
+    sieve_tiles: for each tile row of pdf yield (row, local labels,
+    cid base, per-label value, per-label pixel count, seam strips)."""
+    for r in pdf.itertuples(index=False):
+        arr, labels, n = _label_tile(r, eight, nodata)
+        base = _cid_base(int(r.block_x), int(r.block_y))
+        values, sizes = _component_stats(arr, labels, n)
+        yield (r, labels, base, values, sizes,
+               _seam_strips(r, arr, labels, base, eight))
+
+
+_SEAM_PAIRS = "array<struct<cid_a:bigint,cid_b:bigint,eq:boolean,c0:boolean>>"
+
+
+def _border_pairs(strips: DataFrame, eight: bool) -> DataFrame:
+    """The seam-pairing rule, the one place it is written: which
+    components touch across a tile border, and whether they are one
+    component.
+
+    The strips (image_id, band, key, side, vals, cids from _seam_strips)
+    meet per (image_id, band, key): an interior border line has exactly
+    one 'a' and one 'b' strip, so a groupBy with a conditional max pulls
+    both into one row with a single exchange. Pixel i of 'a' touches
+    pixel i of 'b', and i±1 too under 8-connectivity (a one-pixel corner
+    strip touches only its diagonal partner).
+
+    Returns distinct (image_id, band, cid_a, cid_b, eq) rows: eq = true
+    is an EQUIVALENCE (equal values, one component across the seam);
+    eq = false rows are the 4-adjacent pairs of different values,
+    sieve's cross-seam ADJACENCY. Masked pixels (cid < 0) never pair.
+    NaN equals nothing, as in label_components: Spark's `=` holds for
+    NaN = NaN, and NaN pixels arrive from the Arrow batch as nulls, so
+    eq is false for both.
+
+    JVM built-ins only (an aggregation plus higher-order array
+    functions); no Python crossing of the strips. Pairs are unique
+    within a key, and a cid pair names its two tiles and so one key,
+    which makes array_distinct a global distinct without a shuffle."""
+    from pyspark.sql import functions as F
+
+    def side(s):
+        return F.max(F.when(F.col("side") == s, F.struct("vals", "cids")))
+
+    jo = (strips.groupBy("image_id", "band", "key")
+          .agg(side("a").alias("sa"), side("b").alias("sb"))
+          .filter(F.col("sa").isNotNull() & F.col("sb").isNotNull()))
+    nlen = F.least(F.size("sa.vals"), F.size("sb.vals"))
+    corner = F.col("key").startswith("cd:") | F.col("key").startswith("ca:")
+    none = F.array().cast(_SEAM_PAIRS)
+
+    def pairs_at(off: int):
+        # 1-based i in [1 + max(0, -off), nlen - max(0, off)]; every use
+        # below guards nlen so the range never runs backwards
+        # (sequence(1, 0) is [1, 0], and element_at on an empty strip
+        # throws)
+        def pair(i):
+            x = F.element_at("sa.vals", i)
+            y = F.element_at("sb.vals", i + off)
+            return F.struct(
+                F.element_at("sa.cids", i).alias("cid_a"),
+                F.element_at("sb.cids", i + off).alias("cid_b"),
+                F.coalesce((x == y) & ~F.isnan(x), F.lit(False)).alias("eq"),
+                F.lit(off == 0).alias("c0"))
+
+        return F.transform(F.sequence(F.lit(1 + max(0, -off)),
+                                      nlen - max(0, off)), pair)
+
+    allp = F.when(nlen >= 1, pairs_at(0)).otherwise(none)
+    if eight:
+        diag = F.when(nlen >= 2, F.concat(pairs_at(1), pairs_at(-1))) \
+            .otherwise(none)
+        allp = F.when(corner, allp).otherwise(F.concat(allp, diag))
+    keep = F.filter(allp, lambda p: (p["cid_a"] >= 0) & (p["cid_b"] >= 0)
+                    & (p["eq"] | (p["c0"] & ~corner)))
+    dedup = F.array_distinct(F.transform(keep, lambda p: F.struct(
+        p["cid_a"].alias("cid_a"), p["cid_b"].alias("cid_b"),
+        p["eq"].alias("eq"))))
+    return (jo.select("image_id", "band", F.explode(dedup).alias("p"))
+            .select("image_id", "band", "p.cid_a", "p.cid_b", "p.eq"))
+
+
 def polygonize_tiles(tiles: DataFrame, *, eight: bool = False,
                      use_nodata_mask: bool = True, nodata: float | None = None,
                      max_geom_parts: int = 256,
                      max_border_edges: int = 500_000) -> DataFrame:
     """Distributed polygonize that NEVER gathers an image into one task:
 
-      1. per-tile labeling (mapInPandas): local connected components,
-         per-component partial stats + rectilinear rings in GLOBAL pixel
-         coords, plus the tile's border strips (values + component ids);
-      2. border equivalences: strips groupBy their shared border line —
-         vectorized equality per pixel (±1 offsets and tile-corner keys
-         for 8-connectivity) → (cid_a, cid_b) edges;
+      1. per-tile labeling (mapInPandas, the front half shared with
+         sieve_tiles): local connected components, per-component partial
+         stats + rectilinear rings in GLOBAL pixel coords, plus the
+         tile's border strips (values + component ids);
+      2. border equivalences: the eq pairs of _border_pairs, the seam
+         rule sieve_tiles uses too (±1 offsets and tile-corner keys for
+         8-connectivity, NaN never equal), in JVM built-ins;
       3. the edge graph (bounded by border-component count, ~data/tile_w)
          maps every provisional id to its root: union-find driver-side
          while it fits under max_border_edges, else a fully distributed
@@ -815,44 +961,29 @@ def polygonize_tiles(tiles: DataFrame, *, eight: bool = False,
     from pyspark.sql import functions as F
 
     spark = tiles.sparkSession
+    mask_nodata = nodata if use_nodata_mask else None
 
     def phase1(batches):
         for pdf in batches:
             rows = []
-            for r in pdf.itertuples(index=False):
-                dt = np.dtype(r.dtype)
-                arr = np.frombuffer(r.payload, dtype=dt).reshape(r.bh, r.bw)
-                valid = None
-                if use_nodata_mask and nodata is not None:
-                    valid = arr != nodata
-                labels, n = label_components(arr, eight=eight, valid=valid)
-                if n >= (1 << 21):
-                    raise ValueError(
-                        f"polygonize: tile ({r.block_x},{r.block_y}) has {n} "
-                        "local components — exceeds the 21-bit cid budget; "
-                        "use tiles smaller than 2048x1024 px")
-                base = _cid_base(int(r.block_x), int(r.block_y))
-                # per-component stats + bboxes in ONE vectorized pass,
-                # then trace each component inside ITS bbox slice only.
-                # The previous `labels == ci` over the full tile per
-                # component was O(n_components * tile_area) — quadratic
-                # on high-component tiles (round-4 finding: 28 s for a
+            for r, labels, base, values, sizes, strips in _labeled_tiles(
+                    pdf, eight, mask_nodata):
+                # bboxes in ONE vectorized pass, then trace each
+                # component inside ITS bbox slice only. The previous
+                # `labels == ci` over the full tile per component was
+                # O(n_components * tile_area) — quadratic on
+                # high-component tiles (round-4 finding: 28 s for a
                 # 256^2 random-categorical tile, 0.6 s now).
+                n = sizes.size
                 bh_, bw_ = labels.shape
                 fl = labels.ravel()
-                ok = fl >= 0
-                sizes = np.bincount(fl[ok], minlength=n)
-                iok = np.flatnonzero(ok)
-                first = np.full(n, fl.size, dtype=np.int64)
-                np.minimum.at(first, fl[iok], iok)
-                vals = arr.ravel()[first]
-                ys_g = iok // bw_
-                xs_g = iok % bw_
+                iok = np.flatnonzero(fl >= 0)
+                lo = fl[iok]
+                ys_g, xs_g = np.divmod(iok, bw_)
                 ymin = np.full(n, bh_, np.int64)
                 xmin = np.full(n, bw_, np.int64)
                 ymax = np.full(n, -1, np.int64)
                 xmax = np.full(n, -1, np.int64)
-                lo = fl[iok]
                 np.minimum.at(ymin, lo, ys_g)
                 np.minimum.at(xmin, lo, xs_g)
                 np.maximum.at(ymax, lo, ys_g)
@@ -865,40 +996,11 @@ def polygonize_tiles(tiles: DataFrame, *, eight: bool = False,
                                             float(r.y0), 0.0, 1.0],
                                      x_off=x0c, y_off=y0c)
                     rows.append(("comp", r.image_id, int(r.band), base | ci,
-                                 float(vals[ci]), int(sizes[ci]),
+                                 float(values[ci]), int(sizes[ci]),
                                  G.to_wkb(g), g.area(),
                                  None, None, None, None))
-
-                def cids_of(lab_line):
-                    return [int(base | v) if v >= 0 else -1 for v in lab_line]
-
-                def strip(key, side, vals, labs):
-                    rows.append(("strip", r.image_id, int(r.band), 0, 0.0, 0,
-                                 None, 0.0, key, side,
-                                 [float(v) for v in vals], cids_of(labs)))
-
-                x0, y0, bw, bh = int(r.x0), int(r.y0), int(r.bw), int(r.bh)
-                W, H = int(r.w), int(r.h)
-                if x0 + bw < W:   # right border exists
-                    strip(f"v:{x0 + bw}:{y0}", "a", arr[:, -1], labels[:, -1])
-                if x0 > 0:
-                    strip(f"v:{x0}:{y0}", "b", arr[:, 0], labels[:, 0])
-                if y0 + bh < H:   # bottom border
-                    strip(f"h:{x0}:{y0 + bh}", "a", arr[-1, :], labels[-1, :])
-                if y0 > 0:
-                    strip(f"h:{x0}:{y0}", "b", arr[0, :], labels[0, :])
-                if eight:  # tile-corner diagonals between diagonal tiles
-                    if x0 + bw < W and y0 + bh < H:
-                        strip(f"cd:{x0 + bw}:{y0 + bh}", "a",
-                              arr[-1:, -1], labels[-1:, -1])
-                    if x0 > 0 and y0 > 0:
-                        strip(f"cd:{x0}:{y0}", "b", arr[:1, 0], labels[:1, 0])
-                    if x0 > 0 and y0 + bh < H:
-                        strip(f"ca:{x0}:{y0 + bh}", "a",
-                              arr[-1:, 0], labels[-1:, 0])
-                    if x0 + bw < W and y0 > 0:
-                        strip(f"ca:{x0 + bw}:{y0}", "b",
-                              arr[:1, -1], labels[:1, -1])
+                rows += [("strip", r.image_id, int(r.band), 0, 0.0, 0,
+                          None, 0.0) + s for s in strips]
             cols = ["kind", "image_id", "band", "cid", "value", "n_pixels",
                     "wkb", "area", "key", "side", "vals", "cids"]
             yield pd.DataFrame(rows, columns=cols)
@@ -920,43 +1022,7 @@ def polygonize_tiles(tiles: DataFrame, *, eight: bool = False,
                            "n_pixels", "wkb", "area")
         strips = raw.filter(F.col("kind") == "strip") \
                     .select("image_id", "band", "key", "side", "vals", "cids")
-
-        def make_edges(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            a = pdf[pdf["side"] == "a"]
-            b = pdf[pdf["side"] == "b"]
-            if len(a) != 1 or len(b) != 1:
-                return pd.DataFrame({"image_id": [], "band": [],
-                                     "cid_a": [], "cid_b": []})
-            va = np.asarray(a["vals"].iloc[0], dtype=np.float64)
-            ca = np.asarray(a["cids"].iloc[0], dtype=np.int64)
-            vb = np.asarray(b["vals"].iloc[0], dtype=np.float64)
-            cb = np.asarray(b["cids"].iloc[0], dtype=np.int64)
-            offs = (0,) if not eight or key[2].startswith(("cd", "ca")) \
-                else (-1, 0, 1)
-            pairs = set()
-            n = min(len(va), len(vb))
-            for off in offs:
-                lo, hi = max(0, -off), min(n, n - off)
-                if hi <= lo:
-                    continue
-                ia = np.arange(lo, hi)
-                ib = ia + off
-                m = ((va[ia] == vb[ib]) & (ca[ia] >= 0) & (cb[ib] >= 0))
-                for x, y in zip(ca[ia][m].tolist(), cb[ib][m].tolist()):
-                    pairs.add((x, y))
-            if not pairs:
-                return pd.DataFrame({"image_id": [], "band": [],
-                                     "cid_a": [], "cid_b": []})
-            arr = np.array(sorted(pairs), dtype=np.int64)
-            return pd.DataFrame({"image_id": key[0], "band": key[1],
-                                 "cid_a": arr[:, 0], "cid_b": arr[:, 1]})
-
-        edges = _declare_parallelism(strips, "image_id", "band", "key") \
-            .groupBy("image_id", "band", "key").applyInPandas(
-            make_edges,
-            schema="image_id string, band int, cid_a long, cid_b long"
-        ).distinct()
-
+        edges = _border_pairs(strips, eight).filter(F.col("eq")).drop("eq")
         comps = _attach_roots(spark, comps, edges, max_border_edges)
 
         def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1000,34 +1066,27 @@ _SV_SCHEMA = ("kind string, image_id string, band int, cid long, cid_b long, "
 
 def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
                 use_nodata_mask: bool = True, nodata: float | None = None,
-                max_border_edges: int = 500_000,
-                max_small_components: int = 5_000_000) -> DataFrame:
+                max_border_edges: int = 500_000) -> DataFrame:
     """Distributed SieveFilter: components smaller than `threshold`
     (GLOBAL size, summed across tile borders) take the ORIGINAL value of
     their largest neighboring component — sieve_array semantics lifted
     onto the polygonize_tiles border machinery, without ever gathering a
     raster into one task.
 
-    `max_small_components` is IGNORED since the decision phase went
-    fully distributed (round 4: per-root max_by aggregation, no driver
-    gather to bound) — a non-default value raises DeprecationWarning so
-    callers relying on the old error-first ceiling see the contract
-    change.
-
     Plan shape (the scale path for a 100k x 100k categorical raster):
-      1. per-tile labeling (mapInPandas): component partials
-         (cid, value, n_pixels), border strips, and intra-tile
-         4-neighbor adjacency label pairs;
-      2. border strips pair up per shared border line: equal values →
-         EQUIVALENCE edges (same component), different values →
-         ADJACENCY edges (merge candidates). Roots via _attach_roots
-         (driver union-find under the guard, pointer doubling beyond);
+      1. per-tile labeling (mapInPandas, the front half shared with
+         polygonize_tiles): component partials (cid, value, n_pixels),
+         border strips, and intra-tile 4-neighbor adjacency label pairs;
+      2. _border_pairs, the seam rule polygonize_tiles uses too: equal
+         values across a seam → EQUIVALENCE edges (same component),
+         different values → ADJACENCY edges (merge candidates). Roots
+         via _attach_roots (driver union-find under the guard, pointer
+         doubling beyond);
       3. global sizes = one groupBy(root) sum; merge decisions are a
          pure per-small-root max_by aggregation (sizes fixed + values
          original for the whole pass makes smallest-first order
          irrelevant) — fully distributed, no driver collect, no
-         component-count ceiling. max_small_components is retained for
-         API compatibility but no longer consulted;
+         component-count ceiling;
       4. rewrite: decisions map back to (tile, local label) via the cid
          encoding; a cogrouped applyInPandas relabels each touched tile
          once. Untouched tiles pass through byte-identical.
@@ -1038,16 +1097,8 @@ def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
     """
     from pyspark.sql import functions as F
 
-    if max_small_components != 5_000_000:
-        import warnings
-
-        warnings.warn(
-            "sieve_tiles: max_small_components is ignored since the "
-            "decision phase went fully distributed (no driver gather to "
-            "bound); the parameter will be removed",
-            DeprecationWarning, stacklevel=2)
-
     spark = tiles.sparkSession
+    mask_nodata = nodata if use_nodata_mask else None
     tiles = tiles.select("image_id", "band", "level", "block_x", "block_y",
                          "x0", "y0", "bw", "bh", "w", "h", "dtype",
                          "payload", "caption")
@@ -1055,78 +1106,16 @@ def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
     def phase1(batches):
         for pdf in batches:
             rows = []
-            for r in pdf.itertuples(index=False):
-                dt = np.dtype(r.dtype)
-                arr = np.frombuffer(r.payload, dtype=dt).reshape(r.bh, r.bw)
-                valid = None
-                if use_nodata_mask and nodata is not None:
-                    valid = arr != nodata
-                labels, n = label_components(arr, eight=eight, valid=valid)
-                if n >= (1 << 21):
-                    raise ValueError(
-                        f"sieve: tile ({r.block_x},{r.block_y}) has {n} local "
-                        "components — exceeds the 21-bit cid budget; use "
-                        "tiles smaller than 2048x1024 px")
-                base = _cid_base(int(r.block_x), int(r.block_y))
-                fl = labels.ravel()
-                av = arr.ravel().astype(np.float64)
-                ok = fl >= 0
-                if ok.any():
-                    sizes = np.bincount(fl[ok], minlength=n)
-                    idx = np.flatnonzero(ok)
-                    # first occurrence per label (scan order) = the
-                    # component's representative value
-                    first = np.full(n, len(fl), dtype=np.int64)
-                    np.minimum.at(first, fl[idx], idx)
-                    for ci in range(n):
-                        rows.append(("comp", r.image_id, int(r.band),
-                                     base | ci, -1, float(av[first[ci]]),
-                                     int(sizes[ci]), None, None, None, None))
-                # intra-tile 4-neighbor adjacency between components
-                for sl_a, sl_b in ((np.s_[:, 1:], np.s_[:, :-1]),
-                                   (np.s_[1:, :], np.s_[:-1, :])):
-                    la, lb = labels[sl_a].ravel(), labels[sl_b].ravel()
-                    m = (la != lb) & (la >= 0) & (lb >= 0)
-                    if not m.any():
-                        continue
-                    pairs = np.unique(
-                        np.stack([np.minimum(la[m], lb[m]),
-                                  np.maximum(la[m], lb[m])], axis=1), axis=0)
-                    for a, b in pairs.tolist():
-                        rows.append(("adj", r.image_id, int(r.band),
-                                     base | a, base | b, 0.0, 0,
-                                     None, None, None, None))
-
-                def cids_of(lab_line):
-                    return [int(base | v) if v >= 0 else -1 for v in lab_line]
-
-                def strip(key, side, vals, labs):
-                    rows.append(("strip", r.image_id, int(r.band), 0, -1,
-                                 0.0, 0, key, side,
-                                 [float(v) for v in vals], cids_of(labs)))
-
-                x0, y0, bw, bh = int(r.x0), int(r.y0), int(r.bw), int(r.bh)
-                W, H = int(r.w), int(r.h)
-                if x0 + bw < W:
-                    strip(f"v:{x0 + bw}:{y0}", "a", arr[:, -1], labels[:, -1])
-                if x0 > 0:
-                    strip(f"v:{x0}:{y0}", "b", arr[:, 0], labels[:, 0])
-                if y0 + bh < H:
-                    strip(f"h:{x0}:{y0 + bh}", "a", arr[-1, :], labels[-1, :])
-                if y0 > 0:
-                    strip(f"h:{x0}:{y0}", "b", arr[0, :], labels[0, :])
-                if eight:
-                    if x0 + bw < W and y0 + bh < H:
-                        strip(f"cd:{x0 + bw}:{y0 + bh}", "a",
-                              arr[-1:, -1], labels[-1:, -1])
-                    if x0 > 0 and y0 > 0:
-                        strip(f"cd:{x0}:{y0}", "b", arr[:1, 0], labels[:1, 0])
-                    if x0 > 0 and y0 + bh < H:
-                        strip(f"ca:{x0}:{y0 + bh}", "a",
-                              arr[-1:, 0], labels[-1:, 0])
-                    if x0 + bw < W and y0 > 0:
-                        strip(f"ca:{x0 + bw}:{y0}", "b",
-                              arr[:1, -1], labels[:1, -1])
+            for r, labels, base, values, sizes, strips in _labeled_tiles(
+                    pdf, eight, mask_nodata):
+                head = (r.image_id, int(r.band))
+                rows += [("comp", *head, base | ci, -1, float(values[ci]),
+                          int(sizes[ci]), None, None, None, None)
+                         for ci in range(sizes.size)]
+                rows += [("adj", *head, base | a, base | b, 0.0, 0,
+                          None, None, None, None)
+                         for a, b in _adjacent_pairs(labels).tolist()]
+                rows += [("strip", *head, 0, -1, 0.0, 0) + s for s in strips]
             cols = ["kind", "image_id", "band", "cid", "cid_b", "value",
                     "n_pixels", "key", "side", "vals", "cids"]
             yield pd.DataFrame(rows, columns=cols)
@@ -1136,83 +1125,18 @@ def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
     try:
         comps = raw.filter(F.col("kind") == "comp") \
                    .select("image_id", "band", "cid", "value", "n_pixels")
-        strips = raw.filter(F.col("kind") == "strip") \
-                    .select("image_id", "band", "key", "side", "vals", "cids")
         adj_local = raw.filter(F.col("kind") == "adj") \
                        .select("image_id", "band",
                                F.col("cid").alias("cid_a"), "cid_b")
-
-        # Border pairing is pure elementwise array comparison — run it as
-        # ONE JVM aggregation + higher-order expressions instead of the
-        # former repartition + applyInPandas (guide §4.1: built-ins over
-        # Python; the Python version cost a 32-task Arrow stage of
-        # near-empty worker round-trips on small inputs and a full
-        # Python crossing of every border strip at scale). phase1 emits
-        # exactly one 'a' and one 'b' strip per interior border line, so
-        # a groupBy(key) with conditional max pulls both sides into one
-        # row with a single exchange (no self-join, no sort); the pair
-        # lists are then zip-compared via element_at, and array_distinct
-        # replaces the old per-key set-dedup without a shuffle.
+        strips = raw.filter(F.col("kind") == "strip") \
+                    .select("image_id", "band", "key", "side", "vals", "cids")
         # explicit keyed repartition sized from the input: the persist()
-        # on `pairs` disables AQE re-optimization inside the cached
-        # fragment (canChangeCachedPlanOutputPartitioning default), so
-        # without this the agg exchange runs at the full
-        # shuffle-partition count with no runtime coalescing — 32 reduce
-        # tasks for a 6-tile input
+        # keeps AQE from re-optimizing inside the cached fragment
+        # (canChangeCachedPlanOutputPartitioning default), so without it
+        # the pairing exchange runs at the full shuffle-partition count —
+        # 32 reduce tasks for a 6-tile input
         strips = _declare_parallelism(strips, "image_id", "band", "key")
-        jo = (strips.groupBy("image_id", "band", "key")
-              .agg(F.max(F.when(F.col("side") == "a",
-                                F.struct(F.col("vals"), F.col("cids"))))
-                   .alias("__sa"),
-                   F.max(F.when(F.col("side") == "b",
-                                F.struct(F.col("vals"), F.col("cids"))))
-                   .alias("__sb"))
-              .filter(F.col("__sa").isNotNull() & F.col("__sb").isNotNull())
-              .select("image_id", "band", "key",
-                      F.col("__sa.vals").alias("va"),
-                      F.col("__sa.cids").alias("ca"),
-                      F.col("__sb.vals").alias("vb"),
-                      F.col("__sb.cids").alias("cb")))
-        nlen = F.least(F.size("va"), F.size("vb"))
-        corner = (F.col("key").startswith("cd:")
-                  | F.col("key").startswith("ca:"))
-
-        def pairs_for(off: int):
-            # 1-based index range [1+max(0,-off), n-max(0,off)].
-            # Equality must be NaN-exclusive: Spark's `=` treats
-            # NaN = NaN as TRUE, but the numpy pass this replaces (and
-            # label_components' intra-tile test) treat NaN pixels as
-            # never-equal singletons — a NaN-NaN border pair is an
-            # ADJACENCY, not an equivalence.
-            seq = F.sequence(F.lit(1 + max(0, -off)), nlen - F.lit(max(0, off)))
-
-            def mk(i):
-                x = F.element_at("va", i)
-                y = F.element_at("vb", i + off)
-                return F.struct(
-                    F.element_at("ca", i).alias("cid_a"),
-                    F.element_at("cb", i + off).alias("cid_b"),
-                    ((x == y) & ~(F.isnan(x) & F.isnan(y))).alias("eq"),
-                    F.lit(off == 0).alias("c0"))
-
-            return F.transform(seq, mk)
-
-        allp = pairs_for(0)
-        if eight:
-            diag = F.when(nlen >= 2, F.concat(pairs_for(1), pairs_for(-1))) \
-                .otherwise(F.array().cast(
-                    "array<struct<cid_a:bigint,cid_b:bigint,eq:boolean,c0:boolean>>"))
-            allp = F.when(corner, allp).otherwise(F.concat(allp, diag))
-        keep = F.filter(allp, lambda x: (x["cid_a"] >= 0) & (x["cid_b"] >= 0)
-                        & (x["eq"] | (x["c0"] & ~corner)))
-        dedup = F.array_distinct(F.transform(keep, lambda x: F.struct(
-            x["cid_a"].alias("cid_a"), x["cid_b"].alias("cid_b"),
-            x["eq"].alias("eq"))))
-        pairs = (jo.select("image_id", "band",
-                           F.explode(dedup).alias("p"))
-                 .select("image_id", "band", F.col("p.cid_a").alias("cid_a"),
-                         F.col("p.cid_b").alias("cid_b"),
-                         F.col("p.eq").alias("eq"))).persist()
+        pairs = _border_pairs(strips, eight).persist()
         # full materialization before _attach_roots' LIMIT-bounded
         # collect (limits short-circuit -> partial caches -> the rewrite
         # job re-ran phase1; round-4 scaling series finding)
@@ -1297,16 +1221,12 @@ def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
                 return out
             payloads = []
             for r in tpdf.itertuples(index=False):
-                dt = np.dtype(r.dtype)
-                arr = np.frombuffer(r.payload, dtype=dt).reshape(r.bh, r.bw).copy()
-                valid = None
-                if use_nodata_mask and nodata is not None:
-                    valid = arr != nodata
-                labels, _ = label_components(arr, eight=eight, valid=valid)
+                arr, labels, _ = _label_tile(r, eight, mask_nodata)
+                arr = arr.copy()
                 for d in dpdf.itertuples(index=False):
                     local = int(d.cid) & ((1 << 21) - 1)
                     arr[labels == local] = np.asarray(
-                        d.new_value).astype(dt)
+                        d.new_value).astype(arr.dtype)
                 payloads.append(arr.tobytes())
             out["payload"] = payloads
             return out

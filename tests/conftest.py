@@ -1,3 +1,4 @@
+import itertools
 import os
 import sys
 
@@ -13,3 +14,25 @@ def spark():
     s = get_spark("godal_spark_tests", cores=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
                   shuffle_partitions=8)
     yield s
+
+
+_JOB_GROUPS = itertools.count()
+
+
+@pytest.fixture
+def jobs_of(spark):
+    """jobs_of(fn) -> (Spark jobs fn ran, fn's result): the job ids a
+    one-off job group collects around fn, from the StatusTracker."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"job-budget-{next(_JOB_GROUPS)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    return run

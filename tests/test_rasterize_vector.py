@@ -118,28 +118,55 @@ def test_loose_casts(spark):
     assert gotf == [12.0, 3.7, 0.0, 0.0]
 
 
-@pytest.mark.parametrize("eight", [False, True])
-def test_polygonize_tiles_matches_gathered(spark, eight):
-    """Cross-tile distributed polygonize == per-image gather on feature
-    (value, n_pixels) multisets and total area, incl. components that
-    snake across many tiles."""
-    from godal_spark.operators import polygonize as PZ, tiling as TL
-    from godal_spark import datagen
-
+def _toy_polygonize_raster():
     rng = np.random.default_rng(13)
     arr = rng.integers(0, 4, (24, 33), dtype=np.uint8) * 50
     arr[5, :] = 200     # full-width stripe crossing all tile columns
     arr[:, 11] = 200    # full-height stripe -> one big cross component
-    images = datagen.images_df(spark, [datagen.image_row("big", arr, "raw8")])
+    return arr
+
+
+@pytest.mark.parametrize("eight,nan_seams", [
+    (False, False), (True, False), (False, True), (True, True)],
+    ids=["False", "True", "nan-False", "nan-True"])
+def test_polygonize_tiles_matches_gathered(spark, eight, nan_seams):
+    """Cross-tile distributed polygonize == per-image gather on feature
+    (value, n_pixels) multisets and total area, incl. components that
+    snake across many tiles. The nan_seams case is a float raster with
+    NaN runs across vertical and horizontal seams and NaN pairs across
+    both tile-corner diagonals: NaN never equals NaN, so every NaN pixel
+    stays a 1-px feature on both paths."""
+    import math
+
+    from godal_spark.operators import polygonize as PZ, tiling as TL
+    from godal_spark import datagen
+
+    arr = _toy_polygonize_raster()
+    fmt = "raw8"
+    if nan_seams:
+        arr = arr.astype(np.float32)
+        arr[14, 12:31] = np.nan   # crosses the x=16 and x=24 seams
+        arr[6:21, 20] = np.nan    # crosses the y=8 and y=16 seams
+        arr[7, 7] = arr[8, 8] = np.nan      # "cd" corner at (8, 8)
+        arr[15, 16] = arr[16, 15] = np.nan  # "ca" corner at (16, 16)
+        fmt = "rawf32"
+    images = datagen.images_df(spark, [datagen.image_row("big", arr, fmt)])
     tiles = TL.explode_tiles(images, bw=8, bh=8)
     assert tiles.count() > 8  # genuinely multi-tile
 
     gathered = PZ.polygonize(tiles, eight=eight).collect()
     dist = PZ.polygonize_tiles(tiles, eight=eight).collect()
 
-    gm = sorted((r.value, r.n_pixels) for r in gathered)
-    dm = sorted((r.value, r.n_pixels) for r in dist)
+    def feats(rows):
+        # a NaN value leaves the Arrow batch as null on both paths;
+        # -1 (no real value) makes the multisets sort and compare
+        return sorted((-1.0 if r.value is None or math.isnan(r.value)
+                       else r.value, r.n_pixels) for r in rows)
+    gm, dm = feats(gathered), feats(dist)
     assert gm == dm
+    if nan_seams:
+        assert [f for f in dm if f[0] == -1.0] == \
+            [(-1.0, 1)] * int(np.isnan(arr).sum())
     assert sum(r.area for r in gathered) == pytest.approx(sum(r.area for r in dist))
     # the cross component spans many tiles and must come back as ONE row
     big = [r for r in dist if r.n_pixels >= 24 + 33 - 1]
@@ -163,6 +190,46 @@ def test_polygonize_tiles_matches_gathered(spark, eight):
                 out.append((len(r), tuple(sorted(pts))))
         return sorted(out)
     assert canon(g) == canon(gg)
+
+
+@pytest.mark.parametrize("eight", [False, True])
+def test_tiles_empty_seam_strip(spark, eight):
+    """A zero-height raster in two zero-height tiles: phase 1 emits one
+    empty strip per side of the x=4 seam. The seam pairing must yield no
+    pairs for it (a 1-based index range over an empty strip used to run
+    past its start), so polygonize finds no features and sieve returns
+    the tiles unchanged."""
+    from godal_spark.operators import polygonize as PZ
+    from godal_spark.operators.tiling import TILE_SCHEMA
+
+    rows = [("z", 0, 0, bx, 0, 4 * bx, 0, 4, 0, 8, 0, "uint8", b"", None)
+            for bx in (0, 1)]
+    tiles = spark.createDataFrame(rows, TILE_SCHEMA)
+    assert PZ.polygonize_tiles(tiles, eight=eight).collect() == []
+    out = PZ.sieve_tiles(tiles, 2, eight=eight).collect()
+    assert sorted((r.block_x, bytes(r.payload)) for r in out) == \
+        [(0, b""), (1, b"")]
+
+
+def test_polygonize_sieve_job_budget(spark, jobs_of):
+    """Spark jobs of polygonize_tiles(...).collect() and
+    sieve_tiles(...).collect() on the toy rasters, 4-connected. Budgets
+    are the counts with a separate Python seam-pairing stage in
+    polygonize (11 and 27 jobs) plus one for AQE; with the shared JVM
+    pairing they run 10 and 26-27."""
+    from godal_spark.operators import polygonize as PZ, tiling as TL
+
+    images = datagen.images_df(spark, [
+        datagen.image_row("big", _toy_polygonize_raster(), "raw8")])
+    tiles = TL.explode_tiles(images, bw=8, bh=8)
+    n, rows = jobs_of(lambda: PZ.polygonize_tiles(tiles).collect())
+    assert rows and n <= 12, f"polygonize_tiles(...).collect() ran {n} jobs"
+    images = datagen.images_df(spark, [
+        datagen.image_row("sv", _toy_sieve_raster(), "raw8")])
+    tiles = TL.explode_tiles(images, bw=8, bh=8)
+    n, rows = jobs_of(lambda: PZ.sieve_tiles(tiles, 5).collect())
+    assert len(rows) == 6 and n <= 28, \
+        f"sieve_tiles(...).collect() ran {n} jobs"
 
 
 def test_polygonize_tiles_distributed_root_resolution(spark):
@@ -251,6 +318,15 @@ def test_rasterize_tiles_match_monolithic(spark):
             == want.tolist()
 
 
+def _toy_sieve_raster():
+    arr = np.zeros((16, 24), dtype=np.uint8)
+    arr[3, 6:12] = 7      # 6-px run straddling the bw=8 seam at x=8
+    arr[10, 10] = 9       # 1-px speck (dies)
+    arr[12:14, 15:17] = 5 # 4-px blob inside one tile (dies at t=5)
+    arr[0:6, 20:24] = 3   # 24-px region (lives; the "largest neighbor")
+    return arr
+
+
 @pytest.mark.parametrize("eight", [False, True])
 def test_sieve_tiles_matches_gathered(spark, eight):
     """Distributed sieve == per-array sieve_array on a multi-tile raster
@@ -259,11 +335,7 @@ def test_sieve_tiles_matches_gathered(spark, eight):
     must survive threshold 5 even though each half is < 5)."""
     from godal_spark.operators import polygonize as PZ, tiling as TL
 
-    arr = np.zeros((16, 24), dtype=np.uint8)
-    arr[3, 6:12] = 7      # 6-px run straddling the bw=8 seam at x=8
-    arr[10, 10] = 9       # 1-px speck (dies)
-    arr[12:14, 15:17] = 5 # 4-px blob inside one tile (dies at t=5)
-    arr[0:6, 20:24] = 3   # 24-px region (lives; the "largest neighbor")
+    arr = _toy_sieve_raster()
     images = datagen.images_df(spark, [datagen.image_row("sv", arr, "raw8")])
     tiles = TL.explode_tiles(images, bw=8, bh=8)
     assert tiles.count() == 6
@@ -596,3 +668,26 @@ def test_sieve_tiles_float_nan_border(spark):
     want = PZ.sieve_array(arr, 3)
     same = (out == want) | (np.isnan(out) & np.isnan(want))
     assert same.all()
+
+
+def test_sieve_tiles_nan_seam_adjacency(spark):
+    """A NaN pixel whose only non-NaN neighbor lies across a tile seam:
+    NaN reaches the seam pairing as null, and that pair must still count
+    as an ADJACENCY (different values), or the speck only sees its NaN
+    neighbors and keeps NaN. sieve_array gives it the 1.0 region."""
+    from godal_spark import datagen
+    from godal_spark.operators import polygonize as PZ, tiling as TL
+
+    arr = np.full((8, 16), 1.0, dtype=np.float32)
+    arr[2:5, 7] = np.nan
+    arr[3, 6] = np.nan    # (3, 7) is boxed in by NaN inside its tile
+    images = datagen.images_df(spark, [datagen.image_row("f", arr, "rawf32")])
+    tiles = TL.explode_tiles(images, bw=8, bh=8)
+    got_rows = PZ.sieve_tiles(tiles, 3, use_nodata_mask=False).collect()
+    out = np.zeros_like(arr)
+    for r in got_rows:
+        out[r.y0:r.y0 + r.bh, r.x0:r.x0 + r.bw] = \
+            np.frombuffer(r.payload, np.dtype(r.dtype)).reshape(r.bh, r.bw)
+    want = PZ.sieve_array(arr, 3)
+    assert (want == 1.0).all()
+    assert np.array_equal(out, want), out

@@ -219,7 +219,7 @@ def test_knn_paths_match_bruteforce_property(spark, monkeypatch, seed, k, n_p):
 
 
 @pytest.mark.parametrize("name", ["rings", "k"])
-def test_knn_rejects_bad_k_and_rings(spark, name):
+def test_knn_rejects_bad_k_and_rings(spark, jobs_of, name):
     """rings=0 used to spin the re-probe loop forever (r = 0 never
     doubles); k or rings below 1 raise before any job runs."""
     q = spark.createDataFrame([(0, 0.0, 0.0)], "qid long, lon double, lat double")
@@ -232,24 +232,10 @@ def test_knn_rejects_bad_k_and_rings(spark, name):
                          rings=args["rings"], guarantee=guarantee)
 
     for guarantee in (True, False):
-        assert _jobs_of(spark, lambda: call(guarantee))[0] == 0
+        assert jobs_of(lambda: call(guarantee))[0] == 0
 
 
-def _jobs_of(spark, fn):
-    """(Spark jobs fn ran, fn's result): the job ids a one-off job group
-    collects around fn, from the StatusTracker."""
-    sc = spark.sparkContext
-    group = f"job-budget-{id(fn)}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group)), out
-
-
-def test_knn_broadcast_job_budget(spark, tmp_path):
+def test_knn_broadcast_job_budget(spark, jobs_of, tmp_path):
     """The broadcast tier at sf0.001 size (150 points, parquet scans):
     one job collects P, the query side's Arrow stage runs in the
     caller's action. Budget 3 jobs for knn_join(...).collect(): the
@@ -261,7 +247,7 @@ def test_knn_broadcast_job_budget(spark, tmp_path):
                   "lat": rng.uniform(-60, 60, 150)}).to_parquet(tmp_path / "p.parquet")
     q = spark.read.parquet(str(tmp_path / "q.parquet"))
     p = spark.read.parquet(str(tmp_path / "p.parquet"))
-    n, rows = _jobs_of(spark, lambda: knn.knn_join(
+    n, rows = jobs_of(lambda: knn.knn_join(
         q, p, 3, q_id="qid", p_id="pid").collect())
     assert len(rows) == 3000 and all(r.complete for r in rows)
     assert n <= 3, f"knn_join(...).collect() ran {n} jobs"

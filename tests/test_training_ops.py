@@ -124,23 +124,6 @@ def test_topk_unbounded_query_side_errors(spark, emb, monkeypatch):
         emb, query_ids=list(range(12)), k=3).count() > 0
 
 
-def test_sieve_tiles_max_small_components_deprecated(spark):
-    import warnings
-
-    from godal_spark import datagen
-    from godal_spark.operators import polygonize as PZ, tiling as TL
-
-    arr = np.zeros((8, 8), dtype=np.uint8)
-    arr[0, 0] = 7
-    images = datagen.images_df(
-        spark, [datagen.image_row("dep", arr, "raw8")])
-    tiles = TL.explode_tiles(images, bw=8, bh=8)
-    with warnings.catch_warnings(record=True) as rec:
-        warnings.simplefilter("always")
-        PZ.sieve_tiles(tiles, 2, max_small_components=7)
-    assert any(issubclass(w.category, DeprecationWarning) for w in rec)
-
-
 def test_ivf_topk_recall(spark, emb):
     # the synthetic embeddings are isotropic (no cluster structure — the
     # WORST case for IVF), so recall tracks nprobe/nlist; probe 6/8 and
