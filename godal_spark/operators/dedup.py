@@ -360,6 +360,18 @@ def jaccard_verify(docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
             .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard")))
 
 
+def _verify_broadcast_ok(n_cand: int, avg_shingles: float, num_hashes: int,
+                         max_heap: int) -> bool:
+    """Whether the verify may broadcast n_cand candidate pairs: their
+    estimated build width (both sides' shingle + minhash arrays, plus
+    row overhead) must stay under min(1 GB, max_heap / 8). The driver
+    holds the whole build side while it broadcasts, so the ceiling
+    follows its heap (max_heap, the JVM's Runtime.maxMemory()); Spark
+    itself hard-caps broadcasts at 8 GB."""
+    est_bytes = n_cand * (16 * avg_shingles + 16 * num_hashes + 48)
+    return est_bytes < min(1 << 30, max_heap // 8)
+
+
 def minhash_lsh_dedup(docs: DataFrame, *, k: int = 5, num_hashes: int = 64,
                       bands: int = 16, threshold: float = 0.8,
                       id_col: str = "doc_id", text_col: str = "text",
@@ -420,13 +432,15 @@ def minhash_lsh_dedup(docs: DataFrame, *, k: int = 5, num_hashes: int = 64,
     # shingle + minhash arrays, so the guard must bound bytes, not rows:
     # small pair sets broadcast unconditionally; mid-size sets pay one
     # cheap agg on the checkpointed signatures to estimate the build
-    # width against a 1 GB ceiling (Spark hard-caps broadcasts at 8 GB);
-    # anything larger keeps the round-5 shuffle-join verify
+    # width against the driver heap (_verify_broadcast_ok); anything
+    # larger keeps the round-5 shuffle-join verify
     broadcast_ok = n_cand <= 200_000
     if not broadcast_ok and n_cand <= 2_000_000:
         avg_sh = sig.agg(F.avg(F.size("shingle_hashes"))).first()[0] or 0.0
-        est_bytes = n_cand * (16 * avg_sh + 16 * num_hashes + 48)
-        broadcast_ok = est_bytes < (1 << 30)
+        jvm = docs.sparkSession.sparkContext._jvm
+        broadcast_ok = _verify_broadcast_ok(
+            n_cand, avg_sh, num_hashes,
+            jvm.java.lang.Runtime.getRuntime().maxMemory())
     # no output checkpoint: sig and cand are already materialized, so
     # the verify is a cheap narrow plan over checkpointed blocks — an
     # eager result checkpoint would just compute it twice (once into

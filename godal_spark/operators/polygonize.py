@@ -427,6 +427,8 @@ def _cid_base(bx: int, by: int) -> int:
     return (bx << 42) | (by << 21)
 
 
+_LOCAL = (1 << 21) - 1  # the local-label bits of a _cid_base global id
+
 
 def _dissolve_pixel_rings_slow(polys: list) -> "G.Geom":
     """Reference path for the degenerate cases the vectorized dissolve
@@ -738,39 +740,44 @@ def _resolve_roots_distributed(edges: DataFrame, max_iters: int = 25) -> DataFra
     return lab
 
 
-def _declare_parallelism(df: DataFrame, *keys: str) -> DataFrame:
+def _declare_parallelism(df: DataFrame, *keys: str,
+                         width_from: DataFrame | None = None) -> DataFrame:
     """Explicit keyed repartition before a Python-heavy applyInPandas:
     AQE's size-based coalescing assumes IO-bound tasks and serializes
     CPU-bound Arrow kernels (PLANS.md round-3 lesson; measured 19 s -> 3 s
     on the overview reduce). Explicit-N repartitions are exempt from
-    coalescing and satisfy the grouping's required distribution."""
-    from pyspark.sql import functions as F  # noqa: F401
+    coalescing and satisfy the grouping's required distribution.
 
+    The width scales with the partition count of `width_from` (default
+    `df`). Under AQE, `getNumPartitions()` executes the query stages of
+    a plan with an exchange or a broadcast, so pass a frame whose plan
+    has none (a checkpoint scan) to keep the sizing free of jobs."""
     dp = df.sparkSession.sparkContext.defaultParallelism
-    # width scales with the incoming partitioning (cheap plan-side
-    # metadata, no job): a 6-tile toy input doesn't pay for 4*dp empty
-    # tasks, a wide scan still fans out to the full 4*dp. Floor is 8 —
-    # not dp — because an empty Python task still costs a worker
-    # round-trip (~0.15 s of pure scheduling per 32-task stage measured
-    # on the toy sieve input); 2x the incoming width keeps mid-size
-    # scans at full fan-out.
-    n = max(8, min(dp * 4, df.rdd.getNumPartitions() * 2))
+    src = df if width_from is None else width_from
+    # width scales with the incoming partitioning: a 6-tile toy input
+    # doesn't pay for 4*dp empty tasks, a wide scan still fans out to
+    # the full 4*dp. Floor is 8 — not dp — because an empty Python task
+    # still costs a worker round-trip (~0.15 s of pure scheduling per
+    # 32-task stage measured on the toy sieve input); 2x the incoming
+    # width keeps mid-size scans at full fan-out.
+    n = max(8, min(dp * 4, src.rdd.getNumPartitions() * 2))
     return df.repartition(n, *keys)
 
 
-def _attach_roots(spark, comps: DataFrame, edges: DataFrame,
-                  max_border_edges: int) -> DataFrame:
-    """comps + a `root` column from the border-equivalence edge graph:
-    driver union-find while the edge list fits under max_border_edges
-    (one bounded metadata collect), else the fully distributed
-    pointer-doubling propagation — no driver collect at any scale."""
-    from pyspark.sql import functions as F
+def _collect_bounded(df: DataFrame, max_rows: int):
+    """df as one Arrow table when it has at most max_rows rows, else
+    None. One bounded step, `limit(max_rows + 1).toArrow()`: a single
+    evaluation of the plan, never collect()'s incremental
+    partition-by-partition take (one job per probe round)."""
+    tbl = df.limit(max_rows + 1).toArrow()
+    return None if tbl.num_rows > max_rows else tbl
 
-    edge_rows = edges.limit(max_border_edges + 1).collect()
-    if len(edge_rows) > max_border_edges:
-        mdf = _resolve_roots_distributed(edges)
-        return (comps.join(mdf, ["image_id", "band", "cid"], "left")
-                .withColumn("root", F.coalesce("root", "cid")))
+
+def _driver_roots(edges) -> dict:
+    """Union-find over equivalence edges, (image_id, band, cid_a, cid_b)
+    tuples, on the driver: {(image_id, band, cid): root} for every cid
+    on an edge. The root is the component's minimum cid, the fixed
+    point of the distributed pointer doubling too."""
     parent: dict = {}
 
     def find(k):
@@ -779,23 +786,47 @@ def _attach_roots(spark, comps: DataFrame, edges: DataFrame,
             k = parent[k]
         return k
 
-    for e in edge_rows:
-        ka = (e.image_id, e.band, e.cid_a)
-        kb = (e.image_id, e.band, e.cid_b)
-        for k in (ka, kb):
-            if k not in parent:
-                parent[k] = k
+    for image_id, band, a, b in edges:
+        ka, kb = (image_id, band, a), (image_id, band, b)
+        parent.setdefault(ka, ka)
+        parent.setdefault(kb, kb)
         ra, rb = find(ka), find(kb)
         if ra != rb:
-            parent[max(ra, rb, key=lambda t: t[2])] = min(
-                ra, rb, key=lambda t: t[2])
-    mapping = [(k[0], k[1], k[2], find(k)[2]) for k in list(parent)]
-    if not mapping:
-        return comps.withColumn("root", F.col("cid"))
-    mdf = spark.createDataFrame(
-        mapping, "image_id string, band int, cid long, root long")
-    return (comps.join(F.broadcast(mdf), ["image_id", "band", "cid"], "left")
+            lo, hi = (ra, rb) if ra[2] < rb[2] else (rb, ra)
+            parent[hi] = lo
+    return {k: find(k)[2] for k in parent}
+
+
+def _attach_roots(comps: DataFrame, edges: DataFrame,
+                  max_border_edges: int) -> DataFrame:
+    """comps + a `root` column from the border-equivalence edge graph:
+    driver union-find while the edge list fits under max_border_edges
+    (one bounded Arrow collect, the map joined back by broadcast), else
+    the fully distributed pointer-doubling propagation — no driver
+    collect at any scale. A cid on no edge is its own root."""
+    from pyspark.sql import functions as F
+
+    meta = _collect_bounded(edges, max_border_edges)
+    if meta is None:
+        mdf = _resolve_roots_distributed(edges)
+    else:
+        roots = _driver_roots(zip(*(meta.column(c).to_pylist() for c in (
+            "image_id", "band", "cid_a", "cid_b"))))
+        if not roots:
+            return comps.withColumn("root", F.col("cid"))
+        mdf = F.broadcast(comps.sparkSession.createDataFrame(
+            pd.DataFrame([(*k, r) for k, r in roots.items()],
+                         columns=["image_id", "band", "cid", "root"]),
+            "image_id string, band int, cid long, root long"))
+    return (comps.join(mdf, ["image_id", "band", "cid"], "left")
             .withColumn("root", F.coalesce("root", "cid")))
+
+
+def _release(ckpt: DataFrame) -> None:
+    """Drop the blocks of an eager localCheckpoint now, not when the JVM
+    ContextCleaner next collects its RDD, so no phase-1 data outlives
+    the operator call. Any later read of `ckpt` fails."""
+    ckpt._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def _label_tile(r, eight: bool, nodata: float | None):
@@ -822,10 +853,22 @@ def _seam_strips(r, arr: np.ndarray, labels: np.ndarray, base: int,
     tile corners a diagonal neighbor touches (`cd:` down-right, `ca:`
     down-left; one pixel each). Side 'a' is the tile above / left of
     the line, 'b' the one below / right. cids are global component ids,
-    -1 for masked pixels."""
+    -1 for masked pixels.
+
+    A tile with no rows (bh = 0) has no strip to offer a neighbor above
+    or below it, nor a tile with no columns one left or right: that is a
+    ValueError naming the tile. A zero-height raster (h = 0) has no such
+    neighbor and is valid."""
     x0, y0, bw, bh = int(r.x0), int(r.y0), int(r.bw), int(r.bh)
     right, left = x0 + bw < int(r.w), x0 > 0
     below, above = y0 + bh < int(r.h), y0 > 0
+    for size, name, axis, sides in ((bh, "bh", "row", below or above),
+                                    (bw, "bw", "column", right or left)):
+        if size == 0 and sides:
+            raise ValueError(
+                f"tile ({r.block_x},{r.block_y}) of image {r.image_id!r} has "
+                f"an empty {axis} axis ({name}=0) but shares a seam with a "
+                f"neighbor tile (x0={x0}, y0={y0} in a {r.w}x{r.h} raster)")
     lines = []
     if right:
         lines.append((f"v:{x0 + bw}:{y0}", "a", np.s_[:, -1]))
@@ -859,6 +902,14 @@ def _labeled_tiles(pdf: pd.DataFrame, eight: bool, nodata: float | None):
         values, sizes = _component_stats(arr, labels, n)
         yield (r, labels, base, values, sizes,
                _seam_strips(r, arr, labels, base, eight))
+
+
+def _strips(raw: DataFrame) -> DataFrame:
+    """The seam strip rows of a phase-1 frame, in _border_pairs' shape."""
+    from pyspark.sql import functions as F
+
+    return raw.filter(F.col("kind") == "strip") \
+              .select("image_id", "band", "key", "side", "vals", "cids")
 
 
 _SEAM_PAIRS = "array<struct<cid_a:bigint,cid_b:bigint,eq:boolean,c0:boolean>>"
@@ -940,27 +991,35 @@ def polygonize_tiles(tiles: DataFrame, *, eight: bool = False,
       1. per-tile labeling (mapInPandas, the front half shared with
          sieve_tiles): local connected components, per-component partial
          stats + rectilinear rings in GLOBAL pixel coords, plus the
-         tile's border strips (values + component ids);
+         tile's border strips (values + component ids); materialized by
+         ONE eager localCheckpoint, so every later branch reads it;
       2. border equivalences: the eq pairs of _border_pairs, the seam
          rule sieve_tiles uses too (±1 offsets and tile-corner keys for
          8-connectivity, NaN never equal), in JVM built-ins;
-      3. the edge graph (bounded by border-component count, ~data/tile_w)
-         maps every provisional id to its root: union-find driver-side
-         while it fits under max_border_edges, else a fully distributed
-         min-label propagation with pointer doubling (O(log diameter)
-         rounds) — no driver collect at any scale;
+      3. roots: while the equivalence edges number at most
+         max_border_edges (the metadata rows the driver collects), ONE
+         bounded Arrow collect brings them to the driver, a union-find
+         maps every provisional id to its root (the minimum cid), and
+         a broadcast join attaches the map to the components
+         (_attach_roots). Above the guard (max_border_edges=0 forces
+         it) a fully distributed min-label propagation with pointer
+         doubling (O(log diameter) rounds) runs instead — no driver
+         collect at any scale;
       4. merge: one row per root — n_pixels summed, area summed, and the
          part rings DISSOLVED across tile borders (unit-edge
          decomposition on the integer pixel grid; shared border runs are
          exact opposite edges and cancel) when the component spans
          ≤ max_geom_parts tiles (geometry NULL beyond that: a
-         continent-sized component's outline is not a row).
+         continent-sized component's outline is not a row). Its
+         repartition width comes from the phase-1 checkpoint (no job).
 
-    Runs eagerly (phases 2-3 require an action).
+    Runs eagerly (phases 2-3 require an action); on the driver path
+    that is the checkpoint job, the collect's two, the root map's
+    broadcast and the merge's two. The phase-1 checkpoint is dropped
+    before the call returns.
     """
     from pyspark.sql import functions as F
 
-    spark = tiles.sparkSession
     mask_nodata = nodata if use_nodata_mask else None
 
     def phase1(batches):
@@ -1005,54 +1064,45 @@ def polygonize_tiles(tiles: DataFrame, *, eight: bool = False,
                     "wkb", "area", "key", "side", "vals", "cids"]
             yield pd.DataFrame(rows, columns=cols)
 
+    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        image_id, band, _ = key
+        n_parts = len(pdf)
+        geom = None
+        if n_parts <= max_geom_parts:
+            polys = []
+            for buf in pdf["wkb"]:
+                polys.extend(G.from_wkb(bytes(buf)).polygons())
+            if len(polys) == 1:
+                g = G.Geom("Polygon", polys[0])
+            else:
+                # true cross-tile dissolve: shared border runs cancel
+                g = _dissolve_pixel_rings(polys)
+            geom = G.to_wkb(g)
+        return pd.DataFrame({
+            "image_id": [image_id], "band": [band],
+            "value": [float(pdf["value"].iloc[0])],
+            "n_pixels": [int(pdf["n_pixels"].sum())],
+            "n_parts": [n_parts], "geometry": [geom],
+            "area": [float(pdf["area"].sum())]})
+
     raw = tiles.select("image_id", "band", "block_x", "block_y",
                        "x0", "y0", "bw", "bh", "w", "h", "dtype",
-                       "payload").mapInPandas(phase1, schema=_P1_SCHEMA)
-    raw = raw.persist()
+                       "payload").mapInPandas(phase1, schema=_P1_SCHEMA) \
+        .localCheckpoint(eager=True)
     try:
-        # EAGER materialization: the first consumer is a LIMIT-bounded
-        # collect, and Spark short-circuits limits — it computes only
-        # enough partitions to fill 500k rows, leaving the cache PARTIAL
-        # and every later branch re-running phase1 for the rest (round-4
-        # scaling series finding: the feature pass redid most of the
-        # Arrow labeling). One count() pays the phase1 cost exactly once.
-        raw.count()
         comps = raw.filter(F.col("kind") == "comp") \
                    .select("image_id", "band", "cid", "value",
                            "n_pixels", "wkb", "area")
-        strips = raw.filter(F.col("kind") == "strip") \
-                    .select("image_id", "band", "key", "side", "vals", "cids")
-        edges = _border_pairs(strips, eight).filter(F.col("eq")).drop("eq")
-        comps = _attach_roots(spark, comps, edges, max_border_edges)
-
-        def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            image_id, band, _ = key
-            n_parts = len(pdf)
-            geom = None
-            if n_parts <= max_geom_parts:
-                polys = []
-                for buf in pdf["wkb"]:
-                    polys.extend(G.from_wkb(bytes(buf)).polygons())
-                if len(polys) == 1:
-                    g = G.Geom("Polygon", polys[0])
-                else:
-                    # true cross-tile dissolve: shared border runs cancel
-                    g = _dissolve_pixel_rings(polys)
-                geom = G.to_wkb(g)
-            return pd.DataFrame({
-                "image_id": [image_id], "band": [band],
-                "value": [float(pdf["value"].iloc[0])],
-                "n_pixels": [int(pdf["n_pixels"].sum())],
-                "n_parts": [n_parts], "geometry": [geom],
-                "area": [float(pdf["area"].sum())]})
-
-        out = _declare_parallelism(comps, "image_id", "band", "root") \
+        edges = _border_pairs(_strips(raw), eight).filter(F.col("eq")) \
+            .drop("eq")
+        comps = _attach_roots(comps, edges, max_border_edges)
+        out = _declare_parallelism(comps, "image_id", "band", "root",
+                                   width_from=raw) \
             .groupBy("image_id", "band", "root").applyInPandas(
             merge, schema=_FEATURES2_SCHEMA)
-        out = out.localCheckpoint(eager=True)
+        return out.localCheckpoint(eager=True)
     finally:
-        raw.unpersist()
-    return out
+        _release(raw)
 
 
 # ---------------------------------------------------------------------------
@@ -1064,6 +1114,98 @@ _SV_SCHEMA = ("kind string, image_id string, band int, cid long, cid_b long, "
               "key string, side string, vals array<double>, cids array<long>")
 
 
+def _sieve_decisions(meta, threshold: int) -> dict:
+    """The sieve's merge decisions, solved on the driver from the
+    collected phase-1 metadata (an Arrow table of kind, image_id, band,
+    cid, cid_b, value, n_pixels rows: 'comp' rows carry a component's
+    partial size and value, 'eq' and 'adj' rows a cid pair). The same
+    answer as the distributed chain: roots by union-find over the 'eq'
+    pairs, global sizes per root, and for each small root with a
+    neighbor the ORIGINAL value of the neighbor with the largest
+    (size, -root). A NaN value arrives as null and stays NaN.
+
+    Returns {(image_id, band, block_x, block_y): (local labels, new
+    values)} for every tile holding a cid that takes a new value."""
+    kind, img, band, ca, cb, npx = (meta.column(c).to_pylist() for c in (
+        "kind", "image_id", "band", "cid", "cid_b", "n_pixels"))
+    val = meta.column("value").to_numpy(zero_copy_only=False)
+    rows = list(zip(kind, img, band, ca, cb))
+    roots = _driver_roots((i, b, x, y) for k, i, b, x, y in rows if k == "eq")
+
+    def root(i, b, c):
+        return i, b, roots.get((i, b, c), c)
+
+    size: dict = {}
+    rval: dict = {}
+    comps = []
+    for (k, i, b, c, _), n, v in zip(rows, npx, val):
+        if k == "comp":
+            r = root(i, b, c)
+            size[r] = size.get(r, 0) + n
+            rval[r] = v  # one value per root: eq pairs join equal values
+            comps.append((r, i, b, c))
+    best: dict = {}  # small root -> ((size, -root) of its best neighbor, value)
+    for k, i, b, x, y in rows:
+        if k != "adj":
+            continue
+        ra, rb = root(i, b, x), root(i, b, y)
+        if ra == rb:
+            continue
+        for s, t in ((ra, rb), (rb, ra)):
+            if size[s] < threshold:
+                rank = (size[t], -t[2])
+                if s not in best or rank > best[s][0]:
+                    best[s] = (rank, rval[t])
+    out: dict = {}
+    for r, i, b, c in comps:
+        if r in best:
+            local, new = out.setdefault((i, b, c >> 42, (c >> 21) & _LOCAL),
+                                        ([], []))
+            local.append(c & _LOCAL)
+            new.append(best[r][1])
+    return {t: (np.asarray(lo, np.int64), np.asarray(nv, np.float64))
+            for t, (lo, nv) in out.items()}
+
+
+def _relabel_tile(r, local: np.ndarray, new: np.ndarray, eight: bool,
+                  nodata: float | None) -> bytes:
+    """A tile row's payload with every pixel of local label local[i]
+    set to new[i] (cast to the tile dtype), in one O(area) gather."""
+    arr, labels, n = _label_tile(r, eight, nodata)
+    hit = np.zeros(n, dtype=bool)
+    hit[local] = True
+    vals = np.zeros(n, dtype=arr.dtype)
+    vals[local] = new.astype(arr.dtype)
+    fl = labels.ravel()
+    sel = (fl >= 0) & hit[np.maximum(fl, 0)]
+    out = arr.ravel().copy()
+    out[sel] = vals[fl[sel]]
+    return out.tobytes()
+
+
+def _rewrite_tiles(tiles: DataFrame, decisions: dict, eight: bool,
+                   nodata: float | None) -> DataFrame:
+    """tiles with the driver's decisions applied: ONE map stage over the
+    tiles, the decisions broadcast keyed by (image_id, band, block_x,
+    block_y). Tiles without a decision pass through byte-identical."""
+    from godal_spark.operators.tiling import TILE_SCHEMA
+
+    bc = tiles.sparkSession.sparkContext.broadcast(decisions)
+
+    def rewrite(batches):
+        dec = bc.value
+        for pdf in batches:
+            payloads = pdf["payload"].tolist()
+            for i, r in enumerate(pdf.itertuples(index=False)):
+                d = dec.get((r.image_id, int(r.band), int(r.block_x),
+                             int(r.block_y)))
+                if d is not None:
+                    payloads[i] = _relabel_tile(r, *d, eight, nodata)
+            yield pdf.assign(payload=payloads)
+
+    return tiles.mapInPandas(rewrite, schema=TILE_SCHEMA)
+
+
 def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
                 use_nodata_mask: bool = True, nodata: float | None = None,
                 max_border_edges: int = 500_000) -> DataFrame:
@@ -1073,31 +1215,40 @@ def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
     onto the polygonize_tiles border machinery, without ever gathering a
     raster into one task.
 
-    Plan shape (the scale path for a 100k x 100k categorical raster):
+    Plan shape:
       1. per-tile labeling (mapInPandas, the front half shared with
          polygonize_tiles): component partials (cid, value, n_pixels),
-         border strips, and intra-tile 4-neighbor adjacency label pairs;
+         border strips, and intra-tile 4-neighbor adjacency label pairs,
+         materialized by ONE eager localCheckpoint;
       2. _border_pairs, the seam rule polygonize_tiles uses too: equal
          values across a seam → EQUIVALENCE edges (same component),
-         different values → ADJACENCY edges (merge candidates). Roots
-         via _attach_roots (driver union-find under the guard, pointer
-         doubling beyond);
-      3. global sizes = one groupBy(root) sum; merge decisions are a
-         pure per-small-root max_by aggregation (sizes fixed + values
-         original for the whole pass makes smallest-first order
-         irrelevant) — fully distributed, no driver collect, no
-         component-count ceiling;
-      4. rewrite: decisions map back to (tile, local label) via the cid
-         encoding; a cogrouped applyInPandas relabels each touched tile
-         once. Untouched tiles pass through byte-identical.
+         different values → ADJACENCY edges (merge candidates);
+      3. while the metadata — component rows, intra-tile adjacency and
+         the border pairs — numbers at most max_border_edges rows, ONE
+         bounded Arrow collect brings it to the driver, which solves
+         roots, global sizes and the merge decisions in Python
+         (_sieve_decisions), and the rewrite is ONE map stage over the
+         tiles with the decisions broadcast (_rewrite_tiles): the
+         checkpoint job, the collect's two, then the caller's action;
+      4. above the guard (max_border_edges=0 forces it) the decisions
+         stay distributed: the border pairs are checkpointed, roots come
+         from _attach_roots (polygonize's: driver union-find while the
+         equivalence edges alone fit under max_border_edges, pointer
+         doubling beyond), global sizes by a groupBy(root) sum, the
+         decisions by a per-small-root max_by aggregation (sizes fixed +
+         values original for the whole pass make smallest-first order
+         irrelevant), and a cogrouped applyInPandas relabels each
+         touched tile once — no component-count ceiling.
 
-    Tie-break on equal neighbor sizes: smallest global root id
-    (deterministic under any partition order; sieve_array's local-label
-    order is scan-dependent and cannot be reproduced distributed).
+    The phase-1 checkpoints are dropped before the call returns.
+    Untouched tiles pass through byte-identical; with no decision the
+    input `tiles` frame comes back as is. Tie-break on equal neighbor
+    sizes, on both paths: smallest global root id (deterministic under
+    any partition order; sieve_array's local-label order is
+    scan-dependent and cannot be reproduced distributed).
     """
     from pyspark.sql import functions as F
 
-    spark = tiles.sparkSession
     mask_nodata = nodata if use_nodata_mask else None
     tiles = tiles.select("image_id", "band", "level", "block_x", "block_y",
                          "x0", "y0", "bw", "bh", "w", "h", "dtype",
@@ -1120,32 +1271,39 @@ def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
                     "n_pixels", "key", "side", "vals", "cids"]
             yield pd.DataFrame(rows, columns=cols)
 
-    raw = tiles.mapInPandas(phase1, schema=_SV_SCHEMA).persist()
+    raw = tiles.mapInPandas(phase1, schema=_SV_SCHEMA).localCheckpoint(eager=True)
     pairs = None
     try:
+        border = _border_pairs(_strips(raw), eight)
+        # the metadata the driver path collects: phase 1's 'comp' and
+        # intra-tile 'adj' rows, and the border pairs as 'eq' or 'adj' rows
+        meta = _collect_bounded(
+            raw.filter(F.col("kind") != "strip")
+               .select("kind", "image_id", "band", "cid", "cid_b", "value",
+                       "n_pixels")
+               .unionByName(border.select(
+                   F.when(F.col("eq"), "eq").otherwise("adj").alias("kind"),
+                   "image_id", "band", F.col("cid_a").alias("cid"), "cid_b",
+                   F.lit(0.0).alias("value"),
+                   F.lit(0).cast("long").alias("n_pixels"))),
+            max_border_edges)
+        if meta is not None:
+            decisions = _sieve_decisions(meta, threshold)
+            if not decisions:
+                return tiles
+            return _rewrite_tiles(tiles, decisions, eight, mask_nodata)
+
         comps = raw.filter(F.col("kind") == "comp") \
                    .select("image_id", "band", "cid", "value", "n_pixels")
         adj_local = raw.filter(F.col("kind") == "adj") \
                        .select("image_id", "band",
                                F.col("cid").alias("cid_a"), "cid_b")
-        strips = raw.filter(F.col("kind") == "strip") \
-                    .select("image_id", "band", "key", "side", "vals", "cids")
-        # explicit keyed repartition sized from the input: the persist()
-        # keeps AQE from re-optimizing inside the cached fragment
-        # (canChangeCachedPlanOutputPartitioning default), so without it
-        # the pairing exchange runs at the full shuffle-partition count —
-        # 32 reduce tasks for a 6-tile input
-        strips = _declare_parallelism(strips, "image_id", "band", "key")
-        pairs = _border_pairs(strips, eight).persist()
-        # full materialization before _attach_roots' LIMIT-bounded
-        # collect (limits short-circuit -> partial caches -> the rewrite
-        # job re-ran phase1; round-4 scaling series finding)
-        pairs.count()
+        pairs = border.localCheckpoint(eager=True)
         edges_eq = pairs.filter(F.col("eq")).drop("eq")
         edges_adj = pairs.filter(~F.col("eq")).drop("eq") \
                          .unionByName(adj_local)
 
-        comps = _attach_roots(spark, comps, edges_eq, max_border_edges)
+        comps = _attach_roots(comps, edges_eq, max_border_edges)
         cidmap = comps.select("image_id", "band", "cid", "root")
         stats = comps.groupBy("image_id", "band", "root").agg(
             F.sum("n_pixels").alias("size"), F.min("value").alias("value"))
@@ -1186,9 +1344,8 @@ def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
         # FIXED and values ORIGINAL for the whole pass (a chain A→B→C
         # leaves A with B's old value), so "smallest-first" order never
         # feeds back into later decisions. That makes the solve a pure
-        # per-root aggregation — fully distributed, no driver collect,
-        # no component-count ceiling (round-3 verdict item): target =
-        # the neighbor with max size, ties to the smallest root id.
+        # per-root aggregation: target = the neighbor with max size, ties
+        # to the smallest root id.
         ddf = (dec_in.groupBy("image_id", "band", "ra")
                .agg(F.max_by(
                    "value_b",
@@ -1200,47 +1357,37 @@ def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
                                F.shiftrightunsigned("cid", 42).cast("int"))
                    .withColumn("block_y",
                                F.shiftrightunsigned("cid", 21).bitwiseAND(
-                                   F.lit((1 << 21) - 1).cast("long")).cast("int"))
+                                   F.lit(_LOCAL).cast("long")).cast("int"))
                    .select("image_id", "band", "block_x", "block_y",
                            "cid", "new_value"))
-        # checkpoint the SMALL side: cid_dec is bounded by decision
-        # count (metadata rows), and checkpointing it truncates every
-        # cache dependency — so the returned rewrite plan reads only the
-        # ORIGINAL tiles input + this checkpoint, the caches can be
-        # dropped in finally, and the full-size OUTPUT is never
-        # materialized twice (an eager result checkpoint stored the
-        # whole payload volume before the consumer read it — measured
+        # checkpoint the SMALL side: cid_dec is bounded by decision count
+        # (metadata rows), so the returned rewrite plan reads only the
+        # ORIGINAL tiles input + this checkpoint, and the full-size OUTPUT
+        # is never materialized twice (an eager result checkpoint stored
+        # the whole payload volume before the consumer read it — measured
         # as the non-scaling slice of the round-4 sieve series)
         cid_dec = cid_dec.localCheckpoint(eager=True)
         if cid_dec.isEmpty():  # free: reads the checkpointed rows
             return tiles
 
         def rewrite(key, tpdf: pd.DataFrame, dpdf: pd.DataFrame) -> pd.DataFrame:
-            out = tpdf.copy()
             if len(dpdf) == 0:
-                return out
-            payloads = []
-            for r in tpdf.itertuples(index=False):
-                arr, labels, _ = _label_tile(r, eight, mask_nodata)
-                arr = arr.copy()
-                for d in dpdf.itertuples(index=False):
-                    local = int(d.cid) & ((1 << 21) - 1)
-                    arr[labels == local] = np.asarray(
-                        d.new_value).astype(arr.dtype)
-                payloads.append(arr.tobytes())
-            out["payload"] = payloads
-            return out
+                return tpdf
+            local = dpdf["cid"].to_numpy() & _LOCAL
+            new = dpdf["new_value"].to_numpy(dtype=np.float64)
+            return tpdf.assign(payload=[
+                _relabel_tile(r, local, new, eight, mask_nodata)
+                for r in tpdf.itertuples(index=False)])
 
         keys = ["image_id", "band", "block_x", "block_y"]
         from godal_spark.operators.tiling import TILE_SCHEMA
 
-        result = (_declare_parallelism(tiles, *keys).groupBy(*keys)
-                  .cogroup(_declare_parallelism(cid_dec, *keys).groupBy(*keys))
-                  .applyInPandas(rewrite, schema=TILE_SCHEMA))
-        return result
+        return (_declare_parallelism(tiles, *keys).groupBy(*keys)
+                .cogroup(_declare_parallelism(cid_dec, *keys).groupBy(*keys))
+                .applyInPandas(rewrite, schema=TILE_SCHEMA))
     finally:
-        # unpersist in finally so the early no-decision return and any
-        # raise don't leak cached DataFrames for the session (ADVICE r3)
-        raw.unpersist()
+        # the returned plan reads only `tiles` and checkpoints made from
+        # these, so neither phase-1 frame outlives the call
+        _release(raw)
         if pairs is not None:
-            pairs.unpersist()
+            _release(pairs)

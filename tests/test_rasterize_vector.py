@@ -1,5 +1,7 @@
 """Rasterize family + vector surface goldens."""
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -211,24 +213,51 @@ def test_tiles_empty_seam_strip(spark, eight):
         [(0, b""), (1, b"")]
 
 
+def test_seam_strips_empty_axis_raises(spark):
+    """A zero-height tile inside a raster of height 8 borders a neighbor
+    below and above, but has no row to offer either: phase 1 names the
+    tile, the image and the empty axis instead of an IndexError from
+    the strip slicing. The operators raise it too."""
+    from collections import namedtuple
+
+    from godal_spark.operators import polygonize as PZ
+    from godal_spark.operators.tiling import TILE_SCHEMA
+
+    R = namedtuple("R", "image_id block_x block_y x0 y0 bw bh w h")
+    for r, axis in ((R("z", 0, 1, 0, 4, 4, 0, 4, 8), "empty row axis (bh=0)"),
+                    (R("z", 1, 0, 4, 0, 0, 4, 8, 4), "empty column axis (bw=0)")):
+        shape = (r.bh, r.bw)
+        with pytest.raises(ValueError, match=r"tile \(%d,%d\) of image 'z' "
+                           r"has an %s" % (r.block_x, r.block_y,
+                                           re.escape(axis))):
+            PZ._seam_strips(r, np.zeros(shape), np.zeros(shape, np.int64),
+                            0, eight=False)
+    rows = [("z", 0, 0, 0, by, 0, 4 * by, 4, 4 * (1 - by), 4, 8, "uint8",
+             bytes(16 * (1 - by)), None) for by in (0, 1)]
+    tiles = spark.createDataFrame(rows, TILE_SCHEMA)
+    with pytest.raises(Exception, match=r"empty row axis \(bh=0\)"):
+        PZ.sieve_tiles(tiles, 2).collect()
+
+
 def test_polygonize_sieve_job_budget(spark, jobs_of):
     """Spark jobs of polygonize_tiles(...).collect() and
-    sieve_tiles(...).collect() on the toy rasters, 4-connected. Budgets
-    are the counts with a separate Python seam-pairing stage in
-    polygonize (11 and 27 jobs) plus one for AQE; with the shared JVM
-    pairing they run 10 and 26-27."""
+    sieve_tiles(...).collect() on the toy rasters, 4-connected, on the
+    driver path: phase 1's checkpoint, the bounded metadata collect's
+    two jobs, then polygonize's root-map broadcast and its merge (its
+    exchange, its checkpoint), or sieve's map-side rewrite, and the
+    caller's collect. They run 7 and 4; the budgets add one for AQE."""
     from godal_spark.operators import polygonize as PZ, tiling as TL
 
     images = datagen.images_df(spark, [
         datagen.image_row("big", _toy_polygonize_raster(), "raw8")])
     tiles = TL.explode_tiles(images, bw=8, bh=8)
     n, rows = jobs_of(lambda: PZ.polygonize_tiles(tiles).collect())
-    assert rows and n <= 12, f"polygonize_tiles(...).collect() ran {n} jobs"
+    assert rows and n <= 8, f"polygonize_tiles(...).collect() ran {n} jobs"
     images = datagen.images_df(spark, [
         datagen.image_row("sv", _toy_sieve_raster(), "raw8")])
     tiles = TL.explode_tiles(images, bw=8, bh=8)
     n, rows = jobs_of(lambda: PZ.sieve_tiles(tiles, 5).collect())
-    assert len(rows) == 6 and n <= 28, \
+    assert len(rows) == 6 and n <= 5, \
         f"sieve_tiles(...).collect() ran {n} jobs"
 
 
@@ -327,12 +356,44 @@ def _toy_sieve_raster():
     return arr
 
 
-@pytest.mark.parametrize("eight", [False, True])
-def test_sieve_tiles_matches_gathered(spark, eight):
+# the default guard (the driver solve) and max_border_edges=0 (the
+# distributed decision chain)
+_SIEVE_PATHS = {"driver": {}, "dist": {"max_border_edges": 0}}
+
+
+def _sieve_both_paths(tiles, *args, **kw):
+    """sieve_tiles on both paths: their output tiles must be
+    byte-identical; returns them as {(block_x, block_y): row}."""
+    from godal_spark.operators import polygonize as PZ
+
+    got = {}
+    for name, extra in _SIEVE_PATHS.items():
+        rows = PZ.sieve_tiles(tiles, *args, **kw, **extra).collect()
+        got[name] = {(r.block_x, r.block_y): r for r in rows}
+    a, b = got["driver"], got["dist"]
+    assert sorted(a) == sorted(b)
+    for k in a:
+        assert bytes(a[k].payload) == bytes(b[k].payload), k
+    return a
+
+
+def _mosaic(rows, like: np.ndarray) -> np.ndarray:
+    out = np.zeros_like(like)
+    for r in rows:
+        out[r.y0:r.y0 + r.bh, r.x0:r.x0 + r.bw] = \
+            np.frombuffer(r.payload, np.dtype(r.dtype)).reshape(r.bh, r.bw)
+    return out
+
+
+@pytest.mark.parametrize("eight,path", [
+    (False, "driver"), (True, "driver"), (False, "dist"), (True, "dist")],
+    ids=["False", "True", "False-dist", "True-dist"])
+def test_sieve_tiles_matches_gathered(spark, eight, path):
     """Distributed sieve == per-array sieve_array on a multi-tile raster
     whose small components CROSS tile borders (global size must be the
     summed size, not the per-tile size — a 6-px blob straddling a seam
-    must survive threshold 5 even though each half is < 5)."""
+    must survive threshold 5 even though each half is < 5), on the
+    driver-solve path and the forced-distributed one."""
     from godal_spark.operators import polygonize as PZ, tiling as TL
 
     arr = _toy_sieve_raster()
@@ -340,11 +401,8 @@ def test_sieve_tiles_matches_gathered(spark, eight):
     tiles = TL.explode_tiles(images, bw=8, bh=8)
     assert tiles.count() == 6
 
-    got_tiles = PZ.sieve_tiles(tiles, 5, eight=eight).collect()
-    got = np.zeros_like(arr)
-    for t in got_tiles:
-        got[t.y0:t.y0 + t.bh, t.x0:t.x0 + t.bw] = \
-            np.frombuffer(t.payload, np.uint8).reshape(t.bh, t.bw)
+    got = _mosaic(PZ.sieve_tiles(tiles, 5, eight=eight,
+                                 **_SIEVE_PATHS[path]).collect(), arr)
     want = PZ.sieve_array(arr, 5, eight=eight)
     assert np.array_equal(got, want), f"eight={eight}\n{got}\n{want}"
     # the straddling 6-px run survived; the speck and the 4-px blob died
@@ -355,7 +413,7 @@ def test_sieve_tiles_matches_gathered(spark, eight):
 def test_sieve_tiles_chain_and_masked(spark):
     """Chain semantics (small A adjacent to small B adjacent to big C:
     values move ONE step per pass, sieve_array contract) and nodata
-    pixels untouched."""
+    pixels untouched, on both paths."""
     from godal_spark.operators import polygonize as PZ, tiling as TL
 
     arr = np.full((8, 24), 200, dtype=np.uint8)
@@ -364,11 +422,7 @@ def test_sieve_tiles_chain_and_masked(spark):
     arr[0, 0] = 0         # nodata pixel
     images = datagen.images_df(spark, [datagen.image_row("ch", arr, "raw8")])
     tiles = TL.explode_tiles(images, bw=8, bh=8)
-    got_tiles = PZ.sieve_tiles(tiles, 4, nodata=0.0).collect()
-    got = np.zeros_like(arr)
-    for t in got_tiles:
-        got[t.y0:t.y0 + t.bh, t.x0:t.x0 + t.bw] = \
-            np.frombuffer(t.payload, np.uint8).reshape(t.bh, t.bw)
+    got = _mosaic(_sieve_both_paths(tiles, 4, nodata=0.0).values(), arr)
     want = PZ.sieve_array(arr, 4, valid=arr != 0)
     assert np.array_equal(got, want)
     assert got[0, 0] == 0  # nodata untouched
@@ -388,11 +442,28 @@ def test_sieve_tiles_untouched_passthrough_and_dist_path(spark):
     orig = {(t.block_x, t.block_y): t.payload for t in tiles.collect()}
     for t in clean:
         assert bytes(t.payload) == bytes(orig[(t.block_x, t.block_y)])
-    a = PZ.sieve_tiles(tiles, 4).collect()
-    b = PZ.sieve_tiles(tiles, 4, max_border_edges=0).collect()
-    am = {(t.block_x, t.block_y): bytes(t.payload) for t in a}
-    bm = {(t.block_x, t.block_y): bytes(t.payload) for t in b}
-    assert am == bm
+    _sieve_both_paths(tiles, 4)
+
+
+def test_sieve_tiles_fallback_keeps_driver_roots(spark, monkeypatch):
+    """Above the guard, the sieve's roots still come from the driver
+    union-find while the equivalence edges alone fit under it. The toy
+    raster has 27 metadata rows and 9 equivalence edges, so
+    max_border_edges=12 runs the distributed decisions on driver roots:
+    neither the driver solve nor pointer doubling may run, and the
+    result is sieve_array's."""
+    from godal_spark.operators import polygonize as PZ, tiling as TL
+
+    def wrong_path(*args, **kw):
+        raise AssertionError("max_border_edges=12 took the wrong path")
+
+    monkeypatch.setattr(PZ, "_sieve_decisions", wrong_path)
+    monkeypatch.setattr(PZ, "_resolve_roots_distributed", wrong_path)
+    arr = _toy_sieve_raster()
+    images = datagen.images_df(spark, [datagen.image_row("sv", arr, "raw8")])
+    tiles = TL.explode_tiles(images, bw=8, bh=8)
+    got = _mosaic(PZ.sieve_tiles(tiles, 5, max_border_edges=12).collect(), arr)
+    assert np.array_equal(got, PZ.sieve_array(arr, 5))
 
 
 def test_sieve_tiles_megapixel_smoke(spark):
@@ -649,7 +720,7 @@ def test_sieve_tiles_float_nan_border(spark):
     """Round-6 regression: the JVM border pairing must not use Spark's
     NaN = NaN (TRUE) semantics — a NaN|NaN pair across a tile seam is an
     adjacency between two singleton components (numpy semantics), never
-    an equivalence. Distributed result must equal sieve_array."""
+    an equivalence. Both paths must equal sieve_array."""
     from godal_spark import datagen
     from godal_spark.operators import polygonize as PZ, tiling as TL
 
@@ -660,11 +731,8 @@ def test_sieve_tiles_float_nan_border(spark):
     arr[0:3, 12:16] = 7.0
     images = datagen.images_df(spark, [datagen.image_row("f", arr, "rawf32")])
     tiles = TL.explode_tiles(images, bw=8, bh=8)
-    got_rows = PZ.sieve_tiles(tiles, 3, use_nodata_mask=False).collect()
-    out = np.zeros_like(arr)
-    for r in got_rows:
-        a = np.frombuffer(r.payload, np.dtype(r.dtype)).reshape(r.bh, r.bw)
-        out[r.y0:r.y0 + r.bh, r.x0:r.x0 + r.bw] = a
+    out = _mosaic(_sieve_both_paths(tiles, 3, use_nodata_mask=False).values(),
+                  arr)
     want = PZ.sieve_array(arr, 3)
     same = (out == want) | (np.isnan(out) & np.isnan(want))
     assert same.all()
@@ -674,7 +742,8 @@ def test_sieve_tiles_nan_seam_adjacency(spark):
     """A NaN pixel whose only non-NaN neighbor lies across a tile seam:
     NaN reaches the seam pairing as null, and that pair must still count
     as an ADJACENCY (different values), or the speck only sees its NaN
-    neighbors and keeps NaN. sieve_array gives it the 1.0 region."""
+    neighbors and keeps NaN. sieve_array gives it the 1.0 region, and
+    so do both paths."""
     from godal_spark import datagen
     from godal_spark.operators import polygonize as PZ, tiling as TL
 
@@ -683,11 +752,28 @@ def test_sieve_tiles_nan_seam_adjacency(spark):
     arr[3, 6] = np.nan    # (3, 7) is boxed in by NaN inside its tile
     images = datagen.images_df(spark, [datagen.image_row("f", arr, "rawf32")])
     tiles = TL.explode_tiles(images, bw=8, bh=8)
-    got_rows = PZ.sieve_tiles(tiles, 3, use_nodata_mask=False).collect()
-    out = np.zeros_like(arr)
-    for r in got_rows:
-        out[r.y0:r.y0 + r.bh, r.x0:r.x0 + r.bw] = \
-            np.frombuffer(r.payload, np.dtype(r.dtype)).reshape(r.bh, r.bw)
+    out = _mosaic(_sieve_both_paths(tiles, 3, use_nodata_mask=False).values(),
+                  arr)
     want = PZ.sieve_array(arr, 3)
     assert (want == 1.0).all()
     assert np.array_equal(out, want), out
+
+
+def test_sieve_tiles_tie_break_smaller_root(spark):
+    """A 1-px speck whose two neighbors have the same global size (63
+    px) and different values, one across the x=8 seam: both paths give
+    it the value of the neighbor with the smaller root. The left region
+    lies in tile (0,0), so its root (minimum global cid) is smaller than
+    the right region's in tile (1,0); the left region's value is also
+    the smaller, so neither a max-value nor a larger-root rule passes."""
+    from godal_spark.operators import polygonize as PZ, tiling as TL
+
+    arr = np.full((8, 16), 5, dtype=np.uint8)
+    arr[:, :8] = 2        # left region: 64 px
+    arr[7, 0] = 7         # ... less one 1-px speck of its own: 63
+    arr[3, 8] = 9         # the speck in tile (1,0): right region is 63
+    images = datagen.images_df(spark, [datagen.image_row("tb", arr, "raw8")])
+    tiles = TL.explode_tiles(images, bw=8, bh=8)
+    got = _mosaic(_sieve_both_paths(tiles, 2).values(), arr)
+    assert got[3, 8] == 2 and got[7, 0] == 2
+    assert np.array_equal(got, PZ.sieve_array(arr, 2))

@@ -372,6 +372,18 @@ def test_minhash_skew_bucket_identical_docs(spark):
     assert r.jaccard == pytest.approx(1.0)
 
 
+def test_verify_broadcast_guard_follows_driver_heap():
+    """The mid-size verify broadcast is bounded by min(1 GB, heap / 8).
+    The skew-bucket case above: 499,500 pairs of 4 shingles and 64
+    hashes estimate 499,500 * 1,136 B = 541 MiB, under 1 GB but over an
+    eighth of a 2.68 GB driver heap, so it takes the shuffle-join
+    verify; a 16 GB heap may broadcast it; nothing past 1 GB broadcasts."""
+    pairs = 1000 * 999 // 2
+    assert not DD._verify_broadcast_ok(pairs, 4.0, 64, int(2.68 * 2**30))
+    assert DD._verify_broadcast_ok(pairs, 4.0, 64, 16 * 2**30)
+    assert not DD._verify_broadcast_ok(1_000_000, 4.0, 64, 64 * 2**30)
+
+
 def test_jaccard_signature_prefilter_keeps_true_pairs(spark):
     """Prefilter must not drop pairs at/above the threshold."""
     texts = ["a b c d e f g h i j", "a b c d e f g h i XX",  # high overlap
