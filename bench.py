@@ -1,38 +1,54 @@
 #!/usr/bin/env python
-"""Benchmark: headline engine queries at $SPARK_GRAFT_SF_DIR.
-
-Prints ONE JSON line:
-  {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>,
-   "throughput_images_per_sec": <headline pipeline rate>, ...}
-
-The headline pipeline is the north-star path: decode (Arrow batch) →
-block-grid tile explode → cell index → PIP join against footprints
-(broadcast prepared geometries) → aggregate. Throughput is images/sec
-end-to-end including decode.
+"""Benchmark harness: the engine suite, one job family, or an N -> 4N
+executor scaling series, all driven by the FAMILIES table.
 
 Usage:
-  python bench.py              # single run at $SPARK_GRAFT_CPUS (default 32)
-  python bench.py --scaling    # run headline at N and 4N executors,
-                               # print both + efficiency (north_rule >= 0.8)
+  python bench.py                              # suite: ONE JSON line
+  python bench.py --family sieve --size 2500   # one timed run of a family
+  python bench.py --family warp --executors 4  # ... on 4 local-cluster executors
+  python bench.py --scaling dedup --size 20000 # N=1 vs 4N=4 executor series
+
+The suite's line holds the total wall ("value", sec), per-query walls
+and the headline tile+PIP images/s: block-grid tile assignment → cell
+index → PIP join against footprints (broadcast prepared geometries) →
+aggregate, with the decode → tile-explode rate in "headline".
+
+Settable inputs (everything else is a constant of this file):
+  SPARK_GRAFT_SF_DIR  the suite's input directory (default sf0.1)
+  --family NAME       one timed run of a FAMILIES entry, one JSON line
+  --size N            that run's input size (default: the entry's)
+  --executors N       run it on N local-cluster executor JVMs, each of
+                      session.executor_shape(N), instead of local[host]
+  --setup             only write the family's input table (untimed)
+  --scaling NAME      interleaved best-of series, N=1 vs 4N=4 executors
+Cores and memory come from the host through session.get_spark
+(SPARK_GRAFT_CPUS and SPARK_GRAFT_DRIVER_MEM override them there).
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import subprocess
 import sys
 import time
+import traceback
+from typing import Callable, NamedTuple
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from godal_spark.operators import pip as pip_op, tiling, warp as WP  # noqa: E402
+from godal_spark.operators.dedup import minhash_lsh_dedup  # noqa: E402
+from godal_spark.operators.polygonize import sieve_tiles  # noqa: E402
+from perfbench.run import cpu_ticks, fault_probe_ms, loadavg, steal_pct  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
+
 # queries timed from the driver-contract registry (each returns a DataFrame;
 # we force with a cheap count-style action so timing includes full execution)
-BENCH_QUERIES = [
+SUITE_QUERIES = [
     "block_grid", "overview_tiles", "pip_count", "knn", "raster_stats",
     "histogram", "rasterize", "sql_q1", "dedup_exact", "dedup_minhash",
     "text_stats", "ann_topk", "events_window", "events_sessions",
@@ -42,33 +58,32 @@ BENCH_QUERIES = [
     "rasterize_tiles", "sieve", "warp_mode", "substring_dedup",
 ]
 
-
-def _loadavg() -> float:
-    with open("/proc/loadavg") as fh:
-        return float(fh.read().split()[0])
-
-
-# sampled at import, BEFORE any Spark JVM starts: the per-query
-# load_before/load_after readings include the bench's own local[32]
-# activity, so only this value distinguishes an idle host from a
-# contended one when adjudicating the artifact.
-AMBIENT_LOAD = _loadavg()
+HEADLINE_BLOCK = 32   # block-grid tile edge, px
+HEADLINE_RES = 11     # PIP join cell resolution
+HEADLINE_TRIALS = 3   # best-of, after one untimed warm pass
+SCALING_TRIALS = 3    # children per side of an N -> 4N series
 
 
-def _fault_probe_ms() -> float:
-    """Cold-page-fault speed: wall ms to first-touch one fresh 80 MB
-    numpy allocation. Healthy hosts score ~10-40 ms; a hypervisor
-    ballooning/host-swap episode scores SECONDS while loadavg stays
-    near zero — loadavg alone cannot adjudicate that failure mode, so
-    the artifact records both (observed on this shared host: 6200 ms
-    at loadavg 1.1)."""
-    import numpy as _np
-    t0 = time.perf_counter()
-    _np.arange(10_000_000, dtype=_np.int64)
-    return round((time.perf_counter() - t0) * 1000, 1)
+class BenchChildError(RuntimeError):
+    """A bench child process exited non-zero or printed no JSON line."""
+
+    def __init__(self, argv: list[str], returncode: int, tail: str):
+        self.argv, self.returncode, self.tail = argv, returncode, tail
+        super().__init__(f"{' '.join(argv)} exited {returncode}"
+                         f"{'' if returncode else ' with no JSON line'}; "
+                         f"stderr tail:\n{tail}")
 
 
-AMBIENT_FAULT_MS = _fault_probe_ms()
+def _child(argv: list[str], timeout: float = 3600) -> dict:
+    """Run one child process; its last stdout line starting with '{' is
+    its result. A non-zero exit, or no such line, is a BenchChildError
+    carrying the command, the return code and the stderr tail."""
+    p = subprocess.run(argv, capture_output=True, text=True, timeout=timeout)
+    lines = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
+    if p.returncode != 0 or not lines:
+        raise BenchChildError(argv, p.returncode,
+                              (p.stderr or p.stdout)[-2000:])
+    return json.loads(lines[-1])
 
 
 def _sf_of(path: str) -> float:
@@ -79,6 +94,31 @@ def _sf_of(path: str) -> float:
         return -1.0
 
 
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def _timed(fn: Callable) -> dict:
+    """fn() timed, with the host's load and CPU steal around it: the host
+    is shared, and without them a slow trial cannot be told from a real
+    regression."""
+    la0, ticks = loadavg(), cpu_ticks()
+    t0 = time.time()
+    fn()
+    return {"wall_s": round(time.time() - t0, 3), "load_before": la0,
+            "load_after": loadavg(), "steal_pct": round(steal_pct(ticks), 2)}
+
+
+def _warm_workers(spark) -> None:
+    """Spawn the Python worker pool outside any timed region."""
+    n = 2 * spark.sparkContext.defaultParallelism
+    _noop(spark.range(n, numPartitions=n).mapInPandas(lambda it: it, "id long"))
+
+
+# ---------------------------------------------------------------------------
+# input tables: deterministic, written once under the temp dir (untimed)
+# ---------------------------------------------------------------------------
+
 def _bench_tables(spark, n_images: int, n_footprints: int) -> tuple[str, str]:
     """Materialize the synthetic images/footprints tables to parquet once
     (setup, untimed): the production pipeline reads an EXISTING 100 TB
@@ -86,323 +126,20 @@ def _bench_tables(spark, n_images: int, n_footprints: int) -> tuple[str, str]:
     metadata join arm never deserializes `bytes`."""
     import tempfile
 
-    meta_only = bool(os.environ.get("BENCH_META_ONLY"))
-    tag = "meta_" if meta_only else ""
     root = os.path.join(tempfile.gettempdir(),
-                        f"godal_bench2_{tag}{n_images}_{n_footprints}")
+                        f"godal_bench2_{n_images}_{n_footprints}")
     img_path = os.path.join(root, "images")
     fp_path = os.path.join(root, "footprints")
     if not os.path.exists(os.path.join(img_path, "_SUCCESS")):
         from godal_spark import datagen
-        from godal_spark.operators import pip as pip_op
 
         # 128 output files: parquet row groups are the split atoms, so
         # file count bounds scan parallelism for this small-file table
-        datagen.synth_images(spark, n_images, max_dim=96, partitions=128,
-                             meta_only=meta_only) \
+        datagen.synth_images(spark, n_images, max_dim=96, partitions=128) \
             .write.mode("overwrite").parquet(img_path)
         pip_op.with_bbox(datagen.synth_footprints(spark, n_footprints)) \
             .write.mode("overwrite").parquet(fp_path)
     return img_path, fp_path
-
-
-def headline_pipeline(spark, n_images: int, n_footprints: int) -> dict:
-    """The BASELINE metric: images tiled+joined/sec — block-grid tile
-    assignment + cell index + PIP join, all JVM-side except the exact
-    refine on join candidates (Arrow batch over the small candidate set).
-
-    Pixel decode is measured separately (decode_tiles_per_sec): it is a
-    Python-compute stage whose bytes must cross the Arrow boundary; at
-    cluster scale each executor JVM runs 4-8 cores so the per-JVM Arrow
-    transfer contention seen at local[32] does not occur.
-    """
-    from godal_spark.operators import pip as pip_op, tiling
-    from pyspark.sql import functions as F
-
-    img_path, fp_path = _bench_tables(spark, n_images, n_footprints)
-    fps = spark.read.parquet(fp_path)
-
-    # warm the Python worker pool so worker spawn is not inside the timing
-    spark.range(CPUS * 2, numPartitions=CPUS * 2) \
-        .mapInPandas(lambda it: it, "id long") \
-        .write.format("noop").mode("overwrite").save()
-    # warm the decode path (codec LUTs + codegen) — one small untimed
-    # pass; steady-state decode is the metric (measured 12k cold vs 26k
-    # warm on identical input, round 3). Meta-only tables have no pixels
-    # to decode (and the decode metric is skipped below).
-    if not os.environ.get("BENCH_META_ONLY"):
-        tiling.explode_tiles(
-            spark.read.parquet(img_path).limit(CPUS * 16).repartition(CPUS),
-            bw=32, bh=32).write.format("noop").mode("overwrite").save()
-
-    # --- metric 1: tile-assignment + PIP join (column-pruned scan: no
-    # bytes). Best-of-3: the shared host's foreign load swings a single
-    # 1-2 s measurement by 5-8x (round-3: 21.4k vs 3.2k img/s
-    # back-to-back) — three 1-2 s trials buy real robustness
-    bw = int(os.environ.get("BENCH_BLOCK", "32"))
-    trials = int(os.environ.get("BENCH_TRIALS", "3"))
-    join_wall = float("inf")
-    n_pairs = 0
-    join_trials = []
-    for trial in range(trials + 1):
-        # trial 0 is an UNTIMED warm pass: in the fresh-session bench the
-        # join's whole-stage codegen + C2 JIT are young (measured ~1.2 s
-        # first pass vs ~0.8 s steady state); a long-running job is at
-        # steady state, so that's what the metric should capture
-        la0 = _loadavg()
-        t0 = time.time()
-        meta = spark.read.parquet(img_path).select("image_id", "w", "h", "gt")
-        tiles = tiling.with_block_grid(meta, bw=bw, bh=bw)
-        tiles = tiles.withColumn(
-            "lon", F.col("gt")[0] + (F.col("x0") + F.col("bw") / 2.0) * F.col("gt")[1]
-        ).withColumn(
-            "lat", F.col("gt")[3] + (F.col("y0") + F.col("bh") / 2.0) * F.col("gt")[5]
-        ).drop("gt")
-        joined = pip_op.pip_join(tiles, fps, res=int(os.environ.get("BENCH_RES", "11")), broadcast_footprints=True)
-        n_pairs = joined.groupBy().count().first()[0]
-        if trial > 0:
-            wall = time.time() - t0
-            join_wall = min(join_wall, wall)
-            join_trials.append({"wall_s": round(wall, 3),
-                                "load_before": la0,
-                                "load_after": _loadavg()})
-
-    # --- metric 2: decode → tile payload explode (the Arrow-heavy stage)
-    decode_trials = []
-    if os.environ.get("BENCH_SKIP_DECODE") or os.environ.get("BENCH_META_ONLY"):
-        decode_wall = float("nan")
-    else:
-        decode_wall = float("inf")
-        for _ in range(trials):
-            la1 = _loadavg()
-            t1 = time.time()
-            images = spark.read.parquet(img_path)
-            tiling.explode_tiles(images, bw=32, bh=32) \
-                .write.format("noop").mode("overwrite").save()
-            wall = time.time() - t1
-            decode_wall = min(decode_wall, wall)
-            decode_trials.append({"wall_s": round(wall, 3),
-                                  "load_before": la1,
-                                  "load_after": _loadavg()})
-
-    return {"wall_s": join_wall, "images_per_sec": n_images / join_wall,
-            "decode_wall_s": decode_wall,
-            "decode_images_per_sec": n_images / decode_wall,
-            "n_images": n_images, "n_tile_fp_pairs": n_pairs,
-            "join_trials": join_trials, "decode_trials": decode_trials}
-
-
-def run_suite() -> dict:
-    from godal_spark.session import get_spark
-    import __spark_entry__ as entry_mod
-
-    spark = get_spark("bench", cores=CPUS, shuffle_partitions=max(CPUS, 32))
-    sf = _sf_of(SF_DIR)
-    qs = entry_mod.queries()
-    # warm JVM codegen + python worker pool outside the timed region
-    spark.read.parquet(f"{SF_DIR}/part.parquet").count()
-    spark.range(CPUS * 2, numPartitions=CPUS * 2) \
-        .mapInPandas(lambda it: it, "id long").write.format("noop").mode("overwrite").save()
-    # JMH-style warm-up: run every timed query once at the SMALLEST sf so
-    # whole-stage-codegen/catalyst compilation is NOT in the timed region
-    # (measured round 3: simhash_pairs = 7.5 s cold vs 1.5 s warm on a
-    # 30-row corpus — the 5 s BENCH_r02 'wall' was one-time JIT, which a
-    # long-running 100 TB job amortizes to zero). Timed runs then measure
-    # data-proportional work.
-    warm_dir = "/root/testdata/sf0.001"
-    if not os.path.isdir(warm_dir):
-        warm_dir = SF_DIR
-    for name in BENCH_QUERIES:
-        try:
-            qs[name](spark, warm_dir).write.format("noop").mode("overwrite").save()
-        except Exception:
-            pass  # warm-up must never fail the bench
-    # Timed region: best-of-2 per query, with /proc/loadavg recorded
-    # before/after every trial. The host is SHARED — without the load
-    # annotations a slow artifact is indistinguishable from a real
-    # regression (round-4 verdict: BENCH_r04 could not be adjudicated
-    # from its own record). best-of-2 approximates the unloaded machine
-    # the way the scaling series already does.
-    times: dict[str, float] = {}
-    trials_rec: dict[str, list] = {}
-    for name in BENCH_QUERIES:
-        best = float("inf")
-        rec = []
-        walls = []
-        # 2 trials, plus up to 2 adaptive retries while the two BEST
-        # trials disagree by >1.8x: a foreign-tenant burst on this
-        # shared host lasts ~10 s and can land on BOTH base trials of
-        # one query (observed: dedup_minhash 6.2/22.4 s in one
-        # artifact, 7.2/2.0 s minutes later). Extra trials only run
-        # when noise is detected, so a quiet-host artifact costs
-        # exactly 2 trials per query; the reported wall is min().
-        def _unstable(ws):
-            lo, lo2 = sorted(ws)[:2]
-            # relative AND absolute gap: sub-second walls jitter >1.8x
-            # from scheduler noise alone and don't move the suite total
-            return lo2 - lo > 0.5 and lo2 / max(lo, 1e-9) > 1.8
-        while len(walls) < 2 or (_unstable(walls) and len(walls) < 4):
-            la0 = _loadavg()
-            t0 = time.time()
-            df = qs[name](spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            wall = time.time() - t0
-            walls.append(wall)
-            rec.append({"wall_s": round(wall, 3),
-                        "load_before": la0, "load_after": _loadavg()})
-            best = min(best, wall)
-        times[name] = round(best, 3)
-        trials_rec[name] = rec
-
-    n_images = max(2000, int(20000 * (sf / 0.1))) if sf > 0 else 20000
-    spark.stop()
-    # headline + decode throughput measured in a FRESH session (own
-    # subprocess): after the 23-query suite this session carries GC and
-    # Arrow-allocator pressure that halved the decode number
-    # (BENCH_r03: 13.0k in-suite vs 26-27k isolated — r3 verdict #3);
-    # a production decode job is its own application, so the fresh
-    # session is the honest measurement
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=SF_DIR,
-               BENCH_HEADLINE_ONLY="1",
-               BENCH_N_IMAGES=str(n_images),
-               BENCH_N_FOOTPRINTS=str(max(500, n_images // 10)))
-    p = subprocess.run([sys.executable, __file__], env=env,
-                       capture_output=True, text=True, timeout=3600)
-    lines = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
-    if not lines:
-        sys.stderr.write(p.stdout[-2000:] + p.stderr[-2000:])
-        raise RuntimeError("headline subprocess produced no JSON")
-    head = json.loads(lines[-1])["headline"]
-    out = {
-        "metric": (f"engine suite wall time ({len(BENCH_QUERIES)} queries; "
-                   f"ALL {len(qs)} driver entries oracle-checked) "
-                   "+ headline tile+PIP throughput"),
-        "value": round(sum(times.values()) + head["wall_s"], 3),
-        "unit": "sec",
-        "queries": {**times, "headline_tile_pip": round(head["wall_s"], 3)},
-        "sf": sf,
-        "cpus": CPUS,
-        "throughput_images_per_sec": round(head["images_per_sec"], 2),
-        "headline": head,
-        # self-adjudication record: per-query trial walls + host load;
-        # ambient_load is pre-Spark (per-query loads include our own)
-        "ambient_load": AMBIENT_LOAD,
-        "ambient_fault_ms": AMBIENT_FAULT_MS,
-        "fault_ms_after": _fault_probe_ms(),
-        "query_trials": trials_rec,
-        # committed N->4N scaling evidence (reproduce with
-        # bench.py --scaling / --scaling-sieve / --scaling-warp)
-        "scaling_evidence": _scaling_evidence(),
-    }
-    return out
-
-
-def _scaling_evidence() -> list[dict]:
-    """Summarize the committed docs/*scaling*.json series so the suite
-    artifact is self-contained on the north rule's N->4N criterion.
-    Per job family (headline / sieve / warp): the newest PASSING series
-    and, if newer than it, the newest attempt (failing attempts are
-    committed too — the shared host decides which windows pass)."""
-    import glob
-    import re
-
-    docs = os.path.join(os.path.dirname(os.path.abspath(__file__)), "docs")
-
-    def recency(path: str) -> tuple[int, str]:
-        """Round tag from the filename is the recency key (mtimes are
-        flattened by checkout): ..._r4c.json -> (4, 'c'); the two
-        untagged round-1/2 series predate the naming scheme."""
-        base = os.path.basename(path)
-        if base == "scaling_final.json":
-            return (1, "")
-        if base == "scaling_round2.json":
-            return (2, "")
-        m = re.search(r"_r(\d+)([a-z]?)\.json$", base)
-        return (int(m.group(1)), m.group(2)) if m else (0, "")
-
-    fams: dict[str, list[tuple[str, dict]]] = {}
-    for f in sorted(glob.glob(os.path.join(docs, "*scaling*.json")),
-                    key=recency):
-        try:
-            with open(f) as fh:
-                d = json.load(fh)
-        except (OSError, json.JSONDecodeError):
-            continue
-        if "value" not in d:
-            continue
-        base = os.path.basename(f)
-        fam = base.split("_scaling")[0] if "_scaling" in base else "headline"
-        if fam in ("scaling", "headline"):
-            fam = "headline"
-        fams.setdefault(fam, []).append((base, d))
-    rows = []
-    for fam, series in sorted(fams.items()):
-        latest = series[-1]
-        passing = [s for s in series
-                   if s[1].get("pass_north_rule", s[1]["value"] >= 0.8)]
-        pick = [passing[-1]] if passing else []
-        if not pick or pick[0][0] != latest[0]:
-            pick.append(latest)
-        for base, d in pick:
-            rows.append({"family": fam, "file": "docs/" + base,
-                         "efficiency": d["value"],
-                         "pass": bool(d.get("pass_north_rule",
-                                            d["value"] >= 0.8))})
-    return rows
-
-
-def run_scaling(trials: int = 3) -> None:
-    """Evidence for the N→4N scaling rule: same job, same input, at
-    N=2 and 4N=8 executor JVMs (local-cluster mode — separate executor
-    processes with 4 cores each, the honest stand-in for a real cluster;
-    single-JVM local[n] conflates executor scaling with one shared Arrow
-    allocator and is NOT how multi-executor clusters behave).
-
-    The sandbox host is SHARED (load from other tenants fluctuates by
-    many cores), so trials are interleaved N,4N,N,4N,... and the
-    best-of-N throughput per config is reported — best-of approximates
-    the unloaded machine.
-    """
-    # pre-generate the input tables once at full local[32] parallelism so
-    # the (untimed) setup doesn't run under the small cluster
-    setup_env = dict(os.environ, SPARK_GRAFT_CPUS="32", SPARK_GRAFT_SF_DIR=SF_DIR,
-                     BENCH_SETUP_ONLY="1",
-                     BENCH_N_IMAGES=os.environ.get("BENCH_N_IMAGES", "400000"))
-    subprocess.run([sys.executable, __file__], env=setup_env,
-                   capture_output=True, text=True, timeout=3600)
-
-    # N=1 vs 4N=4 executors (4 vs 16 cores): the host is shared, and a
-    # 32-core config cannot get its cores when other tenants hold some —
-    # 16 of 32 leaves headroom so the 4N measurement reflects executor
-    # scaling rather than host contention
-    n_lo = int(os.environ.get("BENCH_EXEC_N", "1"))
-    n_hi = 4 * n_lo
-    results: dict[int, list[float]] = {n_lo: [], n_hi: []}
-    loads: list[str] = []
-    for _ in range(trials):
-        for n_exec in (n_lo, n_hi):
-            env = dict(os.environ, SPARK_GRAFT_SF_DIR=SF_DIR,
-                       BENCH_HEADLINE_ONLY="1", BENCH_EXECUTORS=str(n_exec),
-                       BENCH_N_IMAGES=os.environ.get("BENCH_N_IMAGES", "400000"))
-            p = subprocess.run([sys.executable, __file__], env=env,
-                               capture_output=True, text=True, timeout=3600)
-            lines = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
-            if not lines:
-                sys.stderr.write(p.stdout[-2000:] + p.stderr[-2000:])
-                raise RuntimeError(f"scaling subprocess (executors={n_exec}) produced no JSON")
-            results[n_exec].append(json.loads(lines[-1])["throughput_images_per_sec"])
-            with open("/proc/loadavg") as fh:
-                loads.append(fh.read().split()[0])
-    rn, r4n = max(results[n_lo]), max(results[n_hi])
-    eff = (r4n / rn) / 4.0
-    print(json.dumps({
-        "metric": f"scaling efficiency N={n_lo} -> 4N={n_hi} executors (local-cluster, 4 cores each)",
-        "value": round(eff, 3), "unit": "ratio",
-        "images_per_sec_N": rn, "images_per_sec_4N": r4n,
-        "trials_N": results[n_lo], "trials_4N": results[n_hi],
-        "host_loadavg_after_each_trial": loads,
-        "pass_north_rule": eff >= 0.8,
-    }))
 
 
 def _warp_bench_table(spark, n_images: int) -> str:
@@ -448,39 +185,6 @@ def _warp_bench_table(spark, n_images: int) -> str:
     spark.range(0, n_images, 1, 128).mapInPandas(gen, schema=IMAGES_SCHEMA) \
         .write.mode("overwrite").parquet(path)
     return path
-
-
-def run_warp_only() -> dict:
-    """One timed warp-mosaic run (the SHUFFLE-HEAVY scaling stage: decode
-    + pre-tile mapInPandas -> codegen block-range explode -> exchange on
-    (block_x, block_y) -> groupBy render), at BENCH_EXECUTORS executors."""
-    from godal_spark.session import get_spark
-    from godal_spark.operators import warp as WP
-
-    n_exec = os.environ.get("BENCH_EXECUTORS")
-    extra = {"spark.sql.files.maxPartitionBytes": os.environ.get("BENCH_SPLIT", "1m"),
-             "spark.sql.files.openCostInBytes": "262144"}
-    spark = get_spark("bench-warp", cores=CPUS, shuffle_partitions=max(CPUS, 32),
-                      executors=int(n_exec) if n_exec else None, extra=extra)
-    n_images = int(os.environ.get("BENCH_WARP_IMAGES", "20000"))
-    path = _warp_bench_table(spark, n_images)
-    images = spark.read.parquet(path)
-    # warm worker pool AND the warp plan (codegen/catalyst compile is
-    # one-time JIT, amortized to zero on a long-running job) — untimed
-    spark.range(CPUS * 2, numPartitions=CPUS * 2) \
-        .mapInPandas(lambda it: it, "id long").write.format("noop").mode("overwrite").save()
-    wpath = _warp_bench_table(spark, 4)
-    WP.warp(spark, spark.read.parquet(wpath), ["-r", "nearest"], block=256) \
-        .write.format("noop").mode("overwrite").save()
-    t0 = time.time()
-    WP.warp(spark, images, ["-r", "nearest"], block=256) \
-        .write.format("noop").mode("overwrite").save()
-    wall = time.time() - t0
-    spark.stop()
-    return {"metric": "warp mosaic wall", "value": round(wall, 3), "unit": "sec",
-            "queries": {"warp_mosaic_scaling": round(wall, 3)},
-            "n_images": n_images,
-            "throughput_images_per_sec": round(n_images / wall, 2)}
 
 
 def _sieve_bench_table(spark, n_tiles: int) -> str:
@@ -556,264 +260,331 @@ def _dedup_bench_table(spark, n_docs: int) -> str:
     return path
 
 
-def run_dedup_only() -> dict:
-    """One timed minhash_lsh_dedup run (the hash-shuffle job family:
-    fused shingle+minhash Arrow stage -> banded LSH bucket self-join ->
-    exact-jaccard verify), at BENCH_EXECUTORS executors."""
-    from godal_spark.operators.dedup import minhash_lsh_dedup
+# ---------------------------------------------------------------------------
+# timed operators
+# ---------------------------------------------------------------------------
+
+def headline_pipeline(spark, tables: tuple[str, str], n_images: int) -> dict:
+    """The BASELINE metric: images tiled+joined/sec — block-grid tile
+    assignment + cell index + PIP join, all JVM-side except the exact
+    refine on join candidates (Arrow batch over the small candidate set).
+
+    Pixel decode is measured separately (decode_images_per_sec): it is a
+    Python-compute stage whose bytes must cross the Arrow boundary.
+    """
+    img_path, fp_path = tables
+    fps = spark.read.parquet(fp_path)
+    slots = spark.sparkContext.defaultParallelism
+    # warm the decode path (codec LUTs + codegen) — one small untimed
+    # pass; steady-state decode is the metric (measured 12k cold vs 26k
+    # warm on identical input, round 3)
+    _noop(tiling.explode_tiles(
+        spark.read.parquet(img_path).limit(slots * 16).repartition(slots),
+        bw=32, bh=32))
+
+    def join() -> int:
+        """Tile assignment + PIP join over a column-pruned scan (no bytes)."""
+        meta = spark.read.parquet(img_path).select("image_id", "w", "h", "gt")
+        tiles = tiling.with_block_grid(meta, bw=HEADLINE_BLOCK, bh=HEADLINE_BLOCK)
+        tiles = tiles.withColumn(
+            "lon", F.col("gt")[0] + (F.col("x0") + F.col("bw") / 2.0) * F.col("gt")[1]
+        ).withColumn(
+            "lat", F.col("gt")[3] + (F.col("y0") + F.col("bh") / 2.0) * F.col("gt")[5]
+        ).drop("gt")
+        joined = pip_op.pip_join(tiles, fps, res=HEADLINE_RES, broadcast_footprints=True)
+        return joined.groupBy().count().first()[0]
+
+    # one UNTIMED warm pass: in a fresh session the join's whole-stage
+    # codegen + C2 JIT are young (measured ~1.2 s first pass vs ~0.8 s
+    # steady state); a long-running job is at steady state. Then
+    # best-of: the host's foreign load swings a single 1-2 s measurement
+    # by 5-8x (round 3: 21.4k vs 3.2k img/s back-to-back)
+    n_pairs = join()
+    join_trials = [_timed(join) for _ in range(HEADLINE_TRIALS)]
+    # decode → tile payload explode (the Arrow-heavy stage)
+    decode_trials = [_timed(lambda: _noop(tiling.explode_tiles(
+        spark.read.parquet(img_path), bw=32, bh=32))) for _ in range(HEADLINE_TRIALS)]
+    join_wall = min(t["wall_s"] for t in join_trials)
+    decode_wall = min(t["wall_s"] for t in decode_trials)
+    return {"wall_s": join_wall, "images_per_sec": n_images / join_wall,
+            "decode_wall_s": decode_wall,
+            "decode_images_per_sec": n_images / decode_wall,
+            "n_images": n_images, "n_tile_fp_pairs": n_pairs,
+            "join_trials": join_trials, "decode_trials": decode_trials}
+
+
+def _one_pass(op: Callable, build: Callable, warm: int) -> Callable:
+    """The timed operator of a one-pass family: `op` over the input
+    table once, after one untimed pass over a `warm`-sized table
+    (codegen and JIT are one-time costs a long-running job amortizes)."""
+    def timed(spark, path: str, size: int) -> dict:
+        _noop(op(spark.read.parquet(build(spark, warm))))
+        return _timed(lambda: _noop(op(spark.read.parquet(path))))
+    return timed
+
+
+class Family(NamedTuple):
+    build: Callable       # (spark, size) -> input table, written once
+    timed: Callable       # (spark, table, size) -> {"wall_s": ..., ...}
+    unit: str             # throughput unit: size * per_item / wall_s
+    size: int             # default input size
+    split: str | None     # scan split size (maxPartitionBytes), or Spark's
+    per_item: float = 1.0
+
+
+# The four job families: the headline join (broadcast only), warp (source
+# tiles shuffle to target blocks + groupBy render), sieve (border-strip
+# exchange, root resolution, decisions, rewrite) and minhash dedup (fused
+# Arrow stage, banded bucket self-join, verify). Scan splits track the
+# job's parallelism: a small table at the 128 MB default is a handful of
+# splits, which starves the probe scan.
+FAMILIES = {
+    "headline": Family(
+        lambda spark, n: _bench_tables(spark, n, max(500, n // 10)),
+        headline_pipeline, "images/s", 20_000, "1m"),
+    "warp": Family(_warp_bench_table, _one_pass(
+        lambda df: WP.warp(df.sparkSession, df, ["-r", "nearest"], block=256),
+        _warp_bench_table, 4), "images/s", 20_000, "1m"),
+    "sieve": Family(_sieve_bench_table, _one_pass(
+        lambda df: sieve_tiles(df, 8, use_nodata_mask=False),
+        _sieve_bench_table, 4), "Mpx/s", 1024, "8m", per_item=256 * 256 / 1e6),
+    "dedup": Family(_dedup_bench_table, _one_pass(
+        minhash_lsh_dedup, _dedup_bench_table, 2000), "docs/s", 100_000, None),
+}
+
+
+# ---------------------------------------------------------------------------
+# runners
+# ---------------------------------------------------------------------------
+
+def run_family(name: str, size: int, executors: int | None = None,
+               setup: bool = False) -> dict:
+    """One fresh session: write the family's table, then (unless
+    `setup`) warm the worker pool and run its timed operator."""
     from godal_spark.session import get_spark
 
-    n_exec = os.environ.get("BENCH_EXECUTORS")
-    spark = get_spark("bench-dedup", cores=CPUS,
-                      shuffle_partitions=max(CPUS, 32),
-                      executors=int(n_exec) if n_exec else None)
-    n_docs = int(os.environ.get("BENCH_DEDUP_DOCS", "400000"))
-    path = _dedup_bench_table(spark, n_docs)
-    docs = spark.read.parquet(path)
-    # warm the worker pool + the plan on a tiny slice (untimed JIT)
-    spark.range(CPUS * 2, numPartitions=CPUS * 2) \
-        .mapInPandas(lambda it: it, "id long") \
-        .write.format("noop").mode("overwrite").save()
-    wpath = _dedup_bench_table(spark, 2000)
-    minhash_lsh_dedup(spark.read.parquet(wpath)) \
-        .write.format("noop").mode("overwrite").save()
-    t0 = time.time()
-    minhash_lsh_dedup(docs).write.format("noop").mode("overwrite").save()
-    wall = time.time() - t0
-    spark.stop()
-    return {"metric": "minhash_lsh_dedup wall", "value": round(wall, 3),
-            "unit": "sec", "n_docs": n_docs,
-            "queries": {"dedup_scaling": round(wall, 3)},
-            "throughput_images_per_sec": round(n_docs / wall, 2)}
+    fam = FAMILIES[name]
+    extra = {} if fam.split is None else {
+        "spark.sql.files.maxPartitionBytes": fam.split,
+        "spark.sql.files.openCostInBytes": "262144"}
+    spark = get_spark(f"bench-{name}", executors=executors, extra=extra)
+    try:
+        out = {"family": name, "size": size, "master": spark.sparkContext.master}
+        table = fam.build(spark, size)
+        if setup:
+            return {**out, "table": table}
+        _warm_workers(spark)
+        res = fam.timed(spark, table, size)
+    finally:
+        spark.stop()
+    return {**out, "wall_s": round(res["wall_s"], 3),
+            "rate": round(size * fam.per_item / res["wall_s"], 2),
+            "unit": fam.unit, "result": res}
 
 
-def run_dedup_scaling(trials: int = 3) -> None:
-    """--scaling-dedup: N -> 4N executor series over the minhash LSH
-    pipeline (4th job family next to headline/warp/sieve; throughput
-    unit is docs/s, reported in the shared JSON field)."""
-    setup_env = dict(os.environ, SPARK_GRAFT_CPUS="32",
-                     BENCH_DEDUP_SETUP_ONLY="1")
-    subprocess.run([sys.executable, __file__], env=setup_env,
-                   capture_output=True, text=True, timeout=3600)
-    n_lo = int(os.environ.get("BENCH_EXEC_N", "1"))
-    n_hi = 4 * n_lo
-    results: dict[int, list[float]] = {n_lo: [], n_hi: []}
-    loads: list[str] = []
-    for _ in range(trials):
-        for n_exec in (n_lo, n_hi):
-            env = dict(os.environ, BENCH_DEDUP_ONLY="1",
-                       BENCH_EXECUTORS=str(n_exec))
-            p = subprocess.run([sys.executable, __file__], env=env,
-                               capture_output=True, text=True, timeout=3600)
-            lines = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
-            if not lines:
-                sys.stderr.write(p.stdout[-2000:] + p.stderr[-2000:])
-                raise RuntimeError(
-                    f"dedup scaling subprocess (executors={n_exec}) produced no JSON")
-            results[n_exec].append(
-                json.loads(lines[-1])["throughput_images_per_sec"])
-            with open("/proc/loadavg") as fh:
-                loads.append(fh.read().split()[0])
-    rn, r4n = max(results[n_lo]), max(results[n_hi])
-    eff = (r4n / rn) / 4.0
-    print(json.dumps({
-        "metric": f"minhash_lsh_dedup scaling N={n_lo} -> 4N={n_hi} executors "
-                  "(fused minhash stage + banded bucket self-join + verify)",
-        "value": round(eff, 3), "unit": "ratio",
-        "docs_per_sec_N": rn, "docs_per_sec_4N": r4n,
-        "trials_N": results[n_lo], "trials_4N": results[n_hi],
-        "host_loadavg_after_each_trial": loads,
-        "pass_north_rule": eff >= 0.8,
-    }))
+def run_scaling(name: str, size: int) -> dict:
+    """Evidence for the N→4N rule: the same job on the same input at N=1
+    and 4N=4 executor JVMs (local-cluster mode — separate executor
+    processes, the honest stand-in for a real cluster; one local[n] JVM
+    conflates executor scaling with one shared Arrow allocator). Every
+    executor has session.executor_shape's cores and memory, so the 4N
+    side fits the host. The host is shared, so the children are
+    interleaved N, 4N, N, 4N, ... and each side reports its best."""
+    from godal_spark.session import executor_shape
+
+    fam = FAMILIES[name]
+    base = [sys.executable, os.path.abspath(__file__),
+            "--family", name, "--size", str(size)]
+    _child(base + ["--setup"])    # the table, at the host's full local[]
+    ticks = cpu_ticks()
+    sides = {n: {"executors": n, "trials": []} for n in (1, 4)}
+    loads = []
+    for _ in range(SCALING_TRIALS):
+        for n, side in sides.items():
+            r = _child(base + ["--executors", str(n)])
+            side["trials"].append(r["rate"])
+            side["master"] = r["master"]
+            loads.append(loadavg())
+    cores, mem = executor_shape(4)
+    for side in sides.values():
+        side.update(cores_per_executor=cores, executor_mem_mb=mem,
+                    rate=max(side["trials"]))
+    eff = sides[4]["rate"] / sides[1]["rate"] / 4.0
+    return {"metric": f"{name} scaling N=1 -> 4N=4 executors "
+                      f"({cores} cores, {mem} MB each)",
+            "value": round(eff, 3), "unit": "ratio", "family": name,
+            "size": size, "rate_unit": fam.unit,
+            "N": sides[1], "4N": sides[4],
+            "host_loadavg_after_each_trial": loads,
+            "cpu_steal_pct": round(steal_pct(ticks), 2),
+            "pass_north_rule": eff >= 0.8}
 
 
-def run_sieve_only() -> dict:
-    """One timed sieve_tiles run (the OTHER shuffle-heavy stage: border
-    strips exchange -> root resolution -> decision aggregation ->
-    cogrouped rewrite), at BENCH_EXECUTORS executors."""
-    from godal_spark.operators.polygonize import sieve_tiles
+def _unstable(walls: list[float]) -> bool:
+    """The two best trials disagree: relative AND absolute gap, since
+    sub-second walls jitter >1.8x from scheduler noise alone and don't
+    move the suite total."""
+    lo, lo2 = sorted(walls)[:2]
+    return lo2 - lo > 0.5 and lo2 / max(lo, 1e-9) > 1.8
+
+
+def run_suite() -> dict:
     from godal_spark.session import get_spark
+    import __spark_entry__ as entry_mod
 
-    n_exec = os.environ.get("BENCH_EXECUTORS")
-    extra = {"spark.sql.files.maxPartitionBytes": os.environ.get("BENCH_SPLIT", "8m"),
-             "spark.sql.files.openCostInBytes": "262144"}
-    spark = get_spark("bench-sieve", cores=CPUS, shuffle_partitions=max(CPUS, 32),
-                      executors=int(n_exec) if n_exec else None, extra=extra)
-    n_tiles = int(os.environ.get("BENCH_SIEVE_TILES", "1024"))
-    path = _sieve_bench_table(spark, n_tiles)
-    tiles = spark.read.parquet(path)
-    # warm worker pool + the sieve plan on a tiny table (untimed JIT)
-    spark.range(CPUS * 2, numPartitions=CPUS * 2) \
-        .mapInPandas(lambda it: it, "id long").write.format("noop").mode("overwrite").save()
-    wpath = _sieve_bench_table(spark, 4)
-    sieve_tiles(spark.read.parquet(wpath), 8, use_nodata_mask=False) \
-        .write.format("noop").mode("overwrite").save()
-    t0 = time.time()
-    sieve_tiles(tiles, 8, use_nodata_mask=False) \
-        .write.format("noop").mode("overwrite").save()
-    wall = time.time() - t0
-    spark.stop()
-    px = n_tiles * 256 * 256
-    return {"metric": "sieve_tiles wall", "value": round(wall, 3), "unit": "sec",
-            "queries": {"sieve_tiles_scaling": round(wall, 3)},
-            "n_tiles": n_tiles,
-            "throughput_images_per_sec": round(px / wall / 1e6, 2)}
-
-
-def run_sieve_scaling(trials: int = 3) -> None:
-    """--scaling-sieve: N -> 4N executor series over the distributed
-    sieve (same interleaved best-of protocol as --scaling-warp; the
-    throughput unit is Mpx/s, reported in the same JSON field)."""
-    setup_env = dict(os.environ, SPARK_GRAFT_CPUS="32",
-                     BENCH_SIEVE_SETUP_ONLY="1")
-    subprocess.run([sys.executable, __file__], env=setup_env,
-                   capture_output=True, text=True, timeout=3600)
-    n_lo = int(os.environ.get("BENCH_EXEC_N", "1"))
-    n_hi = 4 * n_lo
-    results: dict[int, list[float]] = {n_lo: [], n_hi: []}
-    loads: list[str] = []
-    for _ in range(trials):
-        for n_exec in (n_lo, n_hi):
-            env = dict(os.environ, BENCH_SIEVE_ONLY="1",
-                       BENCH_EXECUTORS=str(n_exec))
-            p = subprocess.run([sys.executable, __file__], env=env,
-                               capture_output=True, text=True, timeout=3600)
-            lines = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
-            if not lines:
-                sys.stderr.write(p.stdout[-2000:] + p.stderr[-2000:])
-                raise RuntimeError(f"sieve scaling subprocess (executors={n_exec}) produced no JSON")
-            results[n_exec].append(json.loads(lines[-1])["throughput_images_per_sec"])
-            with open("/proc/loadavg") as fh:
-                loads.append(fh.read().split()[0])
-    rn, r4n = max(results[n_lo]), max(results[n_hi])
-    eff = (r4n / rn) / 4.0
-    print(json.dumps({
-        "metric": f"sieve_tiles scaling N={n_lo} -> 4N={n_hi} executors (border exchange + cogroup rewrite)",
-        "value": round(eff, 3), "unit": "ratio",
-        "mpx_per_sec_N": rn, "mpx_per_sec_4N": r4n,
-        "trials_N": results[n_lo], "trials_4N": results[n_hi],
-        "host_loadavg_after_each_trial": loads,
-        "pass_north_rule": eff >= 0.8,
-    }))
-
-
-def run_warp_scaling(trials: int = 3) -> None:
-    """--scaling-warp: the round-2 scaling evidence covered the
-    broadcast-only headline join; this series exercises warp's REAL
-    exchange (source tiles shuffle to target blocks + groupBy render).
-    Same interleaved best-of protocol as run_scaling."""
-    setup_env = dict(os.environ, SPARK_GRAFT_CPUS="32",
-                     BENCH_WARP_SETUP_ONLY="1")
-    subprocess.run([sys.executable, __file__], env=setup_env,
-                   capture_output=True, text=True, timeout=3600)
-    n_lo = int(os.environ.get("BENCH_EXEC_N", "1"))
-    n_hi = 4 * n_lo
-    results: dict[int, list[float]] = {n_lo: [], n_hi: []}
-    loads: list[str] = []
-    for _ in range(trials):
-        for n_exec in (n_lo, n_hi):
-            env = dict(os.environ, BENCH_WARP_ONLY="1",
-                       BENCH_EXECUTORS=str(n_exec))
-            p = subprocess.run([sys.executable, __file__], env=env,
-                               capture_output=True, text=True, timeout=3600)
-            lines = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
-            if not lines:
-                sys.stderr.write(p.stdout[-2000:] + p.stderr[-2000:])
-                raise RuntimeError(f"warp scaling subprocess (executors={n_exec}) produced no JSON")
-            results[n_exec].append(json.loads(lines[-1])["throughput_images_per_sec"])
-            with open("/proc/loadavg") as fh:
-                loads.append(fh.read().split()[0])
-    rn, r4n = max(results[n_lo]), max(results[n_hi])
-    eff = (r4n / rn) / 4.0
-    print(json.dumps({
-        "metric": f"warp-mosaic scaling N={n_lo} -> 4N={n_hi} executors (shuffle-heavy stage)",
-        "value": round(eff, 3), "unit": "ratio",
-        "images_per_sec_N": rn, "images_per_sec_4N": r4n,
-        "trials_N": results[n_lo], "trials_4N": results[n_hi],
-        "host_loadavg_after_each_trial": loads,
-        "pass_north_rule": eff >= 0.8,
-    }))
-
-
-def run_headline_only() -> dict:
-    from godal_spark.session import get_spark
-
-    n_exec = os.environ.get("BENCH_EXECUTORS")
-    # split-size the input scan to the cluster: the 145 MB bench table
-    # coalesces to 8 splits at the 128 MB default, starving a 16-core
-    # cluster at the probe scan (at 100 TB the default is right; split
-    # sizing tracks per-job parallelism)
-    extra = {"spark.sql.files.maxPartitionBytes": os.environ.get("BENCH_SPLIT", "1m"),
-             "spark.sql.files.openCostInBytes": "262144"}
-    elog = os.environ.get("BENCH_EVENT_LOG")
-    if elog:
-        from godal_spark.plans.metrics import event_log_conf
-
-        extra.update(event_log_conf(elog))
-    spark = get_spark("bench-headline", cores=CPUS, shuffle_partitions=max(CPUS, 32),
-                      executors=int(n_exec) if n_exec else None, extra=extra)
+    # before any Spark JVM starts: the per-query load readings include
+    # the bench's own activity, so only this value tells an idle host
+    # from a contended one; the fault probe flags a swapping or
+    # ballooning host, which loadavg does not show
+    ambient_load, ambient_fault_ms = loadavg(), round(fault_probe_ms(), 1)
+    spark = get_spark("bench")
+    slots = spark.sparkContext.defaultParallelism
     sf = _sf_of(SF_DIR)
-    n_images = int(os.environ.get(
-        "BENCH_N_IMAGES", max(2000, int(20000 * (sf / 0.1))) if sf > 0 else 20000))
-    n_fp = int(os.environ.get("BENCH_N_FOOTPRINTS", max(500, n_images // 10)))
-    head = headline_pipeline(spark, n_images, n_fp)
-    out = {"metric": "headline tile+PIP throughput", "value": round(head["wall_s"], 3),
-           "unit": "sec", "queries": {"headline_tile_pip": round(head["wall_s"], 3)},
-           "sf": sf, "cpus": CPUS,
-           "throughput_images_per_sec": round(head["images_per_sec"], 2),
-           "headline": head}
-    spark.stop()
-    if elog:
-        from godal_spark.plans.metrics import task_metrics
+    qs = entry_mod.queries()
+    # warm JVM codegen + python worker pool outside the timed region
+    spark.read.parquet(f"{SF_DIR}/part.parquet").count()
+    _warm_workers(spark)
+    # JMH-style warm-up: run every timed query once at the SMALLEST sf so
+    # whole-stage-codegen/catalyst compilation is NOT in the timed region
+    # (measured round 3: simhash_pairs = 7.5 s cold vs 1.5 s warm on a
+    # 30-row corpus), which a long-running 100 TB job amortizes to zero.
+    warm_dir = os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.001")
+    if not os.path.isdir(warm_dir):
+        warm_dir = SF_DIR
+    for name in SUITE_QUERIES:
+        try:
+            _noop(qs[name](spark, warm_dir))
+        except Exception as e:  # the timed run below reports a real fault
+            print(f"bench warm-up of {name} failed: "
+                  f"{traceback.format_exception_only(e)[-1].strip()}",
+                  file=sys.stderr)
+    # Timed region: best-of-2 per query, plus up to 2 adaptive retries
+    # while the two best trials disagree (a foreign-tenant burst lasts
+    # ~10 s and can land on BOTH base trials of one query; observed:
+    # dedup_minhash 6.2/22.4 s in one artifact, 7.2/2.0 s minutes
+    # later). A quiet host costs exactly 2 trials per query.
+    times: dict[str, float] = {}
+    trials_rec: dict[str, list] = {}
+    for name in SUITE_QUERIES:
+        rec = trials_rec[name] = []
+        while len(rec) < 2 or (_unstable([r["wall_s"] for r in rec]) and len(rec) < 4):
+            rec.append(_timed(lambda: _noop(qs[name](spark, SF_DIR))))
+        times[name] = min(r["wall_s"] for r in rec)
 
-        out["task_metrics"] = task_metrics(elog)
-    return out
+    n_images = max(2000, int(20000 * (sf / 0.1))) if sf > 0 else 20000
+    spark.stop()
+    # headline + decode throughput measured in a FRESH session (own
+    # subprocess): after the 23-query suite this session carries GC and
+    # Arrow-allocator pressure that halved the decode number
+    # (round 3: 13.0k in-suite vs 26-27k isolated); a production
+    # decode job is its own application, so the fresh session is the
+    # honest measurement
+    head = _child([sys.executable, os.path.abspath(__file__), "--family",
+                   "headline", "--size", str(n_images)])["result"]
+    return {
+        "metric": (f"engine suite wall time ({len(SUITE_QUERIES)} queries; "
+                   f"ALL {len(qs)} driver entries oracle-checked) "
+                   "+ headline tile+PIP throughput"),
+        "value": round(sum(times.values()) + head["wall_s"], 3),
+        "unit": "sec",
+        "queries": {**times, "headline_tile_pip": round(head["wall_s"], 3)},
+        "sf": sf,
+        "cpus": slots,
+        "throughput_images_per_sec": round(head["images_per_sec"], 2),
+        "headline": head,
+        # self-adjudication record: per-query trial walls + host load;
+        # ambient_load is pre-Spark (per-query loads include our own)
+        "ambient_load": ambient_load,
+        "ambient_fault_ms": ambient_fault_ms,
+        "fault_ms_after": round(fault_probe_ms(), 1),
+        "query_trials": trials_rec,
+        # committed N->4N scaling evidence (reproduce with
+        # bench.py --scaling FAMILY)
+        "scaling_evidence": _scaling_evidence(),
+    }
+
+
+def _scaling_evidence() -> list[dict]:
+    """Summarize the committed docs/*scaling*.json series so the suite
+    artifact is self-contained on the north rule's N->4N criterion.
+    Per job family: the newest PASSING series and, if newer than it, the
+    newest attempt (failing attempts are committed too — the host
+    decides which windows pass)."""
+    import glob
+    import re
+
+    docs = os.path.join(os.path.dirname(os.path.abspath(__file__)), "docs")
+
+    def recency(path: str) -> tuple[int, str]:
+        """Round tag from the filename is the recency key (mtimes are
+        flattened by checkout): ..._r4c.json -> (4, 'c'). The untagged
+        round-1/2 series (scaling_final, scaling_round2) predate the
+        naming scheme and sort first, in name order."""
+        m = re.search(r"_r(\d+)([a-z]?)\.json$", path)
+        return (int(m.group(1)), m.group(2)) if m else (0, "")
+
+    fams: dict[str, list[tuple[str, dict]]] = {}
+    for f in sorted(sorted(glob.glob(os.path.join(docs, "*scaling*.json"))),
+                    key=recency):
+        try:
+            with open(f) as fh:
+                d = json.load(fh)
+        except (OSError, json.JSONDecodeError):
+            continue
+        if "value" not in d:
+            continue
+        base = os.path.basename(f)
+        fam = base.split("_scaling")[0] if "_scaling" in base else "headline"
+        fams.setdefault(fam, []).append((base, d))
+    rows = []
+    for fam, series in sorted(fams.items()):
+        latest = series[-1]
+        passing = [s for s in series
+                   if s[1].get("pass_north_rule", s[1]["value"] >= 0.8)]
+        pick = [passing[-1]] if passing else []
+        if not pick or pick[0][0] != latest[0]:
+            pick.append(latest)
+        for base, d in pick:
+            rows.append({"family": fam, "file": "docs/" + base,
+                         "efficiency": d["value"],
+                         "pass": bool(d.get("pass_north_rule",
+                                            d["value"] >= 0.8))})
+    return rows
+
+
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(
+        description="godal_spark bench: the suite (no arguments), one job "
+                    "family, or an N -> 4N executor scaling series")
+    mode = ap.add_mutually_exclusive_group()
+    mode.add_argument("--family", choices=FAMILIES,
+                      help="one timed run of this family")
+    mode.add_argument("--scaling", choices=FAMILIES, metavar="FAMILY",
+                      help="N=1 vs 4N=4 executor series of this family")
+    ap.add_argument("--size", type=int,
+                    help="input size of --family/--scaling (default: the family's)")
+    ap.add_argument("--executors", type=int,
+                    help="with --family: run on this many local-cluster executors")
+    ap.add_argument("--setup", action="store_true",
+                    help="with --family: only write the input table")
+    a = ap.parse_args(argv)
+    name = a.family or a.scaling
+    if (a.executors is not None or a.setup) and not a.family \
+            or a.size is not None and not name:
+        ap.error("--executors and --setup need --family; --size needs "
+                 "--family or --scaling")
+    if any(v is not None and v < 1 for v in (a.size, a.executors)):
+        ap.error("--size and --executors must be at least 1")
+    size = a.size or (FAMILIES[name].size if name else None)
+    if a.family:
+        out = run_family(a.family, size, a.executors, a.setup)
+    elif a.scaling:
+        out = run_scaling(a.scaling, size)
+    else:
+        out = run_suite()
+    print(json.dumps(out))
+    return 0
 
 
 if __name__ == "__main__":
-    if "--scaling-dedup" in sys.argv:
-        run_dedup_scaling()
-    elif os.environ.get("BENCH_DEDUP_SETUP_ONLY"):
-        from godal_spark.session import get_spark
-
-        _sp = get_spark("bench-dedup-setup", cores=CPUS)
-        _dedup_bench_table(_sp, int(os.environ.get("BENCH_DEDUP_DOCS",
-                                                   "400000")))
-        _dedup_bench_table(_sp, 2000)
-        _sp.stop()
-    elif os.environ.get("BENCH_DEDUP_ONLY"):
-        print(json.dumps(run_dedup_only()))
-    elif "--scaling-sieve" in sys.argv:
-        run_sieve_scaling()
-    elif os.environ.get("BENCH_SIEVE_SETUP_ONLY"):
-        from godal_spark.session import get_spark
-
-        _sp = get_spark("bench-sieve-setup", cores=CPUS)
-        _sieve_bench_table(_sp, int(os.environ.get("BENCH_SIEVE_TILES", "1024")))
-        _sieve_bench_table(_sp, 4)
-        _sp.stop()
-    elif os.environ.get("BENCH_SIEVE_ONLY"):
-        print(json.dumps(run_sieve_only()))
-    elif "--scaling-warp" in sys.argv:
-        run_warp_scaling()
-    elif "--scaling" in sys.argv:
-        run_scaling()
-    elif os.environ.get("BENCH_WARP_SETUP_ONLY"):
-        from godal_spark.session import get_spark
-
-        _sp = get_spark("bench-warp-setup", cores=CPUS)
-        _warp_bench_table(_sp, int(os.environ.get("BENCH_WARP_IMAGES", "20000")))
-        _sp.stop()
-    elif os.environ.get("BENCH_WARP_ONLY"):
-        print(json.dumps(run_warp_only()))
-    elif os.environ.get("BENCH_SETUP_ONLY"):
-        from godal_spark.session import get_spark
-
-        _sp = get_spark("bench-setup", cores=CPUS)
-        n = int(os.environ.get("BENCH_N_IMAGES", "400000"))
-        _bench_tables(_sp, n, int(os.environ.get("BENCH_N_FOOTPRINTS", max(500, n // 10))))
-        _sp.stop()
-    elif os.environ.get("BENCH_HEADLINE_ONLY"):
-        print(json.dumps(run_headline_only()))
-    else:
-        print(json.dumps(run_suite()))
+    sys.exit(main())

@@ -74,21 +74,13 @@ def _phash(*params) -> int:
 # ---------------------------------------------------------------------------
 
 def synth_images(spark: SparkSession, n: int, *, partitions: int | None = None,
-                 max_dim: int = 96, meta_only: bool = False) -> DataFrame:
+                 max_dim: int = 96) -> DataFrame:
     """n deterministic images; content/format/size derived from the id only
     so any executor can regenerate any row (seed 42 ⇒ id-hash params).
 
     Geospatial placement: images are scattered over a lon/lat window with
     a deliberate hot spot — ~20% of images land inside one 1-degree cell
     (the "dense urban" skew case the north_rule requires handling).
-
-    `meta_only=True` keeps every metadata derivation IDENTICAL (same rng
-    draws for w/h, same placement arithmetic) but writes empty `bytes` —
-    for metadata-arm benchmarks: parquet is columnar, so a query that
-    column-prunes `bytes` reads the same scan bytes either way, and the
-    join-stage plan is identical. Generating pixel payloads for tens of
-    millions of rows would only burn setup time the measurement never
-    touches.
     """
     if partitions is None:
         partitions = max(32, n // 20000)
@@ -106,16 +98,13 @@ def synth_images(spark: SparkSession, n: int, *, partitions: int | None = None,
                 h = 16 + int(rng.integers(0, max_dim - 15))
                 kind = i % 3
                 fmt = ("raw8", "png", "jpeg")[i % 3]
-                if meta_only:
-                    buf = b""
+                if kind == 0:
+                    arr = pixels_ramp(w, h)
+                elif kind == 1:
+                    arr = ((np.add.outer(np.arange(h), np.arange(w)) * (1 + i % 7)) % 256).astype(np.uint8)
                 else:
-                    if kind == 0:
-                        arr = pixels_ramp(w, h)
-                    elif kind == 1:
-                        arr = ((np.add.outer(np.arange(h), np.arange(w)) * (1 + i % 7)) % 256).astype(np.uint8)
-                    else:
-                        arr = pixels_const3(w, h)
-                    buf = codecs.encode(arr, fmt)
+                    arr = pixels_const3(w, h)
+                buf = codecs.encode(arr, fmt)
                 # placement: 20% hot cell at (10..11E, 45..46N), rest spread
                 if i % 5 == 0:
                     lon = 10.0 + (i % 997) / 997.0

@@ -298,9 +298,3 @@ def resample(src: np.ndarray, out_w: int, out_h: int, alg: str = "nearest",
     out = Wy @ src.astype(np.float64) @ Wx.T
     return _round_like(out, out_dtype)
 
-
-def downsample2x2(src: np.ndarray, alg: str = "average", out_dtype=None) -> np.ndarray:
-    """The overview reduce step: one power-of-two level down."""
-    out_h = (src.shape[0] + 1) // 2
-    out_w = (src.shape[1] + 1) // 2
-    return resample(src, out_w, out_h, alg=alg, path="overview", out_dtype=out_dtype)

@@ -374,19 +374,14 @@ def _verify_broadcast_ok(n_cand: int, avg_shingles: float, num_hashes: int,
 
 def minhash_lsh_dedup(docs: DataFrame, *, k: int = 5, num_hashes: int = 64,
                       bands: int = 16, threshold: float = 0.8,
-                      id_col: str = "doc_id", text_col: str = "text",
-                      materialize: bool = True) -> DataFrame:
+                      id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Full near-dup pipeline → verified (id_a, id_b, jaccard) pairs.
 
-    materialize=True (default): the narrow signature frame
-    (id, minhash, shingles) is persisted ONCE, the verified pairs are
-    computed eagerly and lineage-truncated (localCheckpoint — the
-    local-mode analogue of the checkpoint-table write a 100 TB run
-    would do), and the signature cache is unpersisted before returning
-    — no cached blocks leak into later pipeline stages (round 1
-    persisted the full docs frame forever). Without materialization the
-    lazy plan recomputes the minhash UDF once per join branch (4-6×,
-    measured 3x slower end-to-end).
+    The narrow signature frame (id, minhash, shingles) is checkpointed
+    ONCE (localCheckpoint — the local-mode analogue of the
+    checkpoint-table write a 100 TB run would do); a lazy plan would
+    recompute the minhash UDF once per join branch (4-6×, measured 3x
+    slower end-to-end).
 
     bands=16 over num_hashes=64 gives rows=4 — collision p at
     jaccard 0.3 is ~12%, vs rows=2 where boilerplate pairs (j≈0.3)
@@ -396,12 +391,6 @@ def minhash_lsh_dedup(docs: DataFrame, *, k: int = 5, num_hashes: int = 64,
     d = with_shingle_minhash_fused(docs, text_col, k=k, num_hashes=num_hashes,
                                    bands=bands)
     sig = d.select(F.col(id_col), "minhash", "shingle_hashes", "buckets")
-    if not materialize:
-        cand = minhash_lsh_candidates(sig, bands=bands, id_col=id_col,
-                                      num_hashes=num_hashes)
-        return jaccard_verify(sig, cand, id_col=id_col, threshold=threshold,
-                              signature_prefilter=True,
-                              shingle_col="shingle_hashes")
     # Materialize the signature frame ONCE with an eager localCheckpoint:
     # lineage is truncated to the materialized blocks, so every branch
     # below (banding, hot-bucket semi, both verify sides) scans the

@@ -700,20 +700,26 @@ def _assemble_rectilinear(rings_out, ring_of, kaxis, bx, by):
     return list(polys.values())
 
 
-def _resolve_roots_distributed(edges: DataFrame, max_iters: int = 25) -> DataFrame:
+def _resolve_roots_distributed(edges: DataFrame, held: list[DataFrame],
+                               max_iters: int = 25) -> DataFrame:
     """Connected components over the border-equivalence graph WITHOUT
     collecting it: iterative min-label propagation with pointer doubling
     (root ← root-of-root each round ⇒ O(log diameter) convergence — a
     1000-tile river chain resolves in ~10 rounds, not 1000). Used when
-    the edge list exceeds the driver union-find guard."""
+    the edge list exceeds the driver union-find guard.
+
+    Each round's checkpoint is released as soon as the next one
+    supersedes it, the symmetric edge checkpoint once the loop ends; the
+    returned labels' checkpoint goes on `held`, which the caller
+    releases after its last read."""
     from pyspark.sql import functions as F
 
     sym = edges.unionByName(edges.select(
         "image_id", "band", F.col("cid_b").alias("cid_a"),
         F.col("cid_a").alias("cid_b")))
     sym = sym.localCheckpoint(eager=True)
-    lab = (sym.select("image_id", "band", F.col("cid_a").alias("cid")).distinct()
-           .withColumn("root", F.col("cid")))
+    lab = seed = (sym.select("image_id", "band", F.col("cid_a").alias("cid"))
+                  .distinct().withColumn("root", F.col("cid")))
     for _ in range(max_iters):
         nmin = (sym.join(lab.select("image_id", "band",
                                     F.col("cid").alias("cid_b"),
@@ -734,9 +740,14 @@ def _resolve_roots_distributed(edges: DataFrame, max_iters: int = 25) -> DataFra
         changed = (new.join(lab.withColumnRenamed("root", "oroot"),
                             ["image_id", "band", "cid"])
                    .filter(F.col("root") != F.col("oroot")).count())
+        if lab is not seed:
+            _release(lab)
         lab = new
         if changed == 0:
             break
+    if lab is not seed:
+        _release(sym)
+        held.append(lab)
     return lab
 
 
@@ -798,17 +809,18 @@ def _driver_roots(edges) -> dict:
 
 
 def _attach_roots(comps: DataFrame, edges: DataFrame,
-                  max_border_edges: int) -> DataFrame:
+                  max_border_edges: int, held: list[DataFrame]) -> DataFrame:
     """comps + a `root` column from the border-equivalence edge graph:
     driver union-find while the edge list fits under max_border_edges
     (one bounded Arrow collect, the map joined back by broadcast), else
     the fully distributed pointer-doubling propagation — no driver
-    collect at any scale. A cid on no edge is its own root."""
+    collect at any scale; its label checkpoint goes on `held`. A cid on
+    no edge is its own root."""
     from pyspark.sql import functions as F
 
     meta = _collect_bounded(edges, max_border_edges)
     if meta is None:
-        mdf = _resolve_roots_distributed(edges)
+        mdf = _resolve_roots_distributed(edges, held)
     else:
         roots = _driver_roots(zip(*(meta.column(c).to_pylist() for c in (
             "image_id", "band", "cid_a", "cid_b"))))
@@ -1089,20 +1101,22 @@ def polygonize_tiles(tiles: DataFrame, *, eight: bool = False,
                        "x0", "y0", "bw", "bh", "w", "h", "dtype",
                        "payload").mapInPandas(phase1, schema=_P1_SCHEMA) \
         .localCheckpoint(eager=True)
+    held = [raw]
     try:
         comps = raw.filter(F.col("kind") == "comp") \
                    .select("image_id", "band", "cid", "value",
                            "n_pixels", "wkb", "area")
         edges = _border_pairs(_strips(raw), eight).filter(F.col("eq")) \
             .drop("eq")
-        comps = _attach_roots(comps, edges, max_border_edges)
+        comps = _attach_roots(comps, edges, max_border_edges, held)
         out = _declare_parallelism(comps, "image_id", "band", "root",
                                    width_from=raw) \
             .groupBy("image_id", "band", "root").applyInPandas(
             merge, schema=_FEATURES2_SCHEMA)
         return out.localCheckpoint(eager=True)
     finally:
-        _release(raw)
+        for c in held:
+            _release(c)
 
 
 # ---------------------------------------------------------------------------
@@ -1240,7 +1254,8 @@ def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
          irrelevant), and a cogrouped applyInPandas relabels each
          touched tile once — no component-count ceiling.
 
-    The phase-1 checkpoints are dropped before the call returns.
+    Every intermediate checkpoint (phase 1, the border pairs, the
+    pointer-doubling rounds) is dropped before the call returns.
     Untouched tiles pass through byte-identical; with no decision the
     input `tiles` frame comes back as is. Tie-break on equal neighbor
     sizes, on both paths: smallest global root id (deterministic under
@@ -1272,7 +1287,7 @@ def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
             yield pd.DataFrame(rows, columns=cols)
 
     raw = tiles.mapInPandas(phase1, schema=_SV_SCHEMA).localCheckpoint(eager=True)
-    pairs = None
+    held = [raw]
     try:
         border = _border_pairs(_strips(raw), eight)
         # the metadata the driver path collects: phase 1's 'comp' and
@@ -1299,11 +1314,12 @@ def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
                        .select("image_id", "band",
                                F.col("cid").alias("cid_a"), "cid_b")
         pairs = border.localCheckpoint(eager=True)
+        held.append(pairs)
         edges_eq = pairs.filter(F.col("eq")).drop("eq")
         edges_adj = pairs.filter(~F.col("eq")).drop("eq") \
                          .unionByName(adj_local)
 
-        comps = _attach_roots(comps, edges_eq, max_border_edges)
+        comps = _attach_roots(comps, edges_eq, max_border_edges, held)
         cidmap = comps.select("image_id", "band", "cid", "root")
         stats = comps.groupBy("image_id", "band", "root").agg(
             F.sum("n_pixels").alias("size"), F.min("value").alias("value"))
@@ -1387,7 +1403,6 @@ def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
                 .applyInPandas(rewrite, schema=TILE_SCHEMA))
     finally:
         # the returned plan reads only `tiles` and checkpoints made from
-        # these, so neither phase-1 frame outlives the call
-        _release(raw)
-        if pairs is not None:
-            _release(pairs)
+        # these, so no intermediate checkpoint outlives the call
+        for c in held:
+            _release(c)

@@ -21,7 +21,6 @@ storage is behind this module's API).
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 from typing import Iterator
 
@@ -62,10 +61,6 @@ class StatsCache:
             self._d.clear()
         else:
             self._d = {k: v for k, v in self._d.items() if k[0] != image_id}
-
-
-def _sample_rate(n_block_rows: int) -> int:
-    return max(1, int(math.sqrt(n_block_rows)))
 
 
 def compute_statistics(tiles: DataFrame, *, nodata: float | None = None,

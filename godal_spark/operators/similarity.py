@@ -148,22 +148,6 @@ def train_centroids(emb: DataFrame, nlist: int = 16, *, vec_col: str = "embeddin
     return C
 
 
-def with_ivf_assignment(emb: DataFrame, centroids: np.ndarray, *,
-                        vec_col: str = "embedding") -> DataFrame:
-    C = np.asarray(centroids, dtype=np.float64)
-
-    @F.pandas_udf(T.IntegerType())
-    def assign(vecs: pd.Series) -> pd.Series:
-        M = np.array(list(vecs), dtype=np.float64)
-        M /= np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        return pd.Series((M @ C.T).argmax(axis=1).astype(np.int32))
-
-    # guide §4.4: the probe join's isnotnull(ivf_list) pushes below the
-    # UDF and would duplicate the assignment pass — pin one evaluation
-    assign = assign.asNondeterministic()
-    return emb.withColumn("ivf_list", assign(F.col(vec_col)))
-
-
 def ivf_topk(emb: DataFrame, query_ids, k: int = 10, *, nlist: int = 16,
              nprobe: int = 4, id_col: str = "vec_id", vec_col: str = "embedding",
              seed: int = 42, centroids: np.ndarray | None = None) -> DataFrame:

@@ -55,41 +55,9 @@ def st_isempty(wkb: pd.Series) -> pd.Series:
     return pd.Series([G.from_wkb(bytes(b)).is_empty for b in wkb])
 
 
-def st_buffer(dist: float, segs: int = 30):
-    @F.pandas_udf(T.BinaryType())
-    def _buf(wkb: pd.Series) -> pd.Series:
-        return pd.Series([G.to_wkb(G.buffer(G.from_wkb(bytes(b)), dist, segs)) for b in wkb])
-    return _buf
-
-
-def st_simplify(tol: float):
-    @F.pandas_udf(T.BinaryType())
-    def _simp(wkb: pd.Series) -> pd.Series:
-        return pd.Series([G.to_wkb(G.simplify(G.from_wkb(bytes(b)), tol)) for b in wkb])
-    return _simp
-
-
 @F.pandas_udf(T.BooleanType())
 def st_intersects(wkb_a: pd.Series, wkb_b: pd.Series) -> pd.Series:
     return pd.Series([G.intersects(G.from_wkb(bytes(a)), G.from_wkb(bytes(b)))
-                      for a, b in zip(wkb_a, wkb_b)])
-
-
-@F.pandas_udf(T.BinaryType())
-def st_intersection(wkb_a: pd.Series, wkb_b: pd.Series) -> pd.Series:
-    return pd.Series([G.to_wkb(G.intersection(G.from_wkb(bytes(a)), G.from_wkb(bytes(b))))
-                      for a, b in zip(wkb_a, wkb_b)])
-
-
-@F.pandas_udf(T.BinaryType())
-def st_union(wkb_a: pd.Series, wkb_b: pd.Series) -> pd.Series:
-    return pd.Series([G.to_wkb(G.union(G.from_wkb(bytes(a)), G.from_wkb(bytes(b))))
-                      for a, b in zip(wkb_a, wkb_b)])
-
-
-@F.pandas_udf(T.BinaryType())
-def st_difference(wkb_a: pd.Series, wkb_b: pd.Series) -> pd.Series:
-    return pd.Series([G.to_wkb(G.difference(G.from_wkb(bytes(a)), G.from_wkb(bytes(b))))
                       for a, b in zip(wkb_a, wkb_b)])
 
 
@@ -108,10 +76,6 @@ def register_st_functions(spark) -> None:
 # ---------------------------------------------------------------------------
 # layer ops
 # ---------------------------------------------------------------------------
-
-def feature_count(layer: DataFrame) -> int:
-    return layer.count()
-
 
 def layer_bounds(layer: DataFrame, geometry: str = "geometry"):
     """(minx, miny, maxx, maxy) of the layer (godal.go:2596-2623)."""

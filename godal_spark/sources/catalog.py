@@ -55,13 +55,6 @@ def read_images(spark: SparkSession, src: str) -> DataFrame:
     return df
 
 
-def read_footprints(spark: SparkSession, src: str) -> DataFrame:
-    df = read_table(spark, src)
-    if "geometry" not in df.columns:
-        raise ValueError(f"footprints source {src!r} has no geometry column")
-    return df
-
-
 def write_tiles(tiles: DataFrame, dst: str, *, mode: str = "append",
                 prefix_bits: int = 8, num_files: int | None = None) -> None:
     """Tile sink with the (level, cell_bucket) layout.

@@ -281,6 +281,34 @@ def test_polygonize_tiles_distributed_root_resolution(spark):
     assert len(chain) == 1 and chain[0].n_pixels == 64 and chain[0].n_parts == 16
 
 
+def _cached_rdd_ids(spark) -> set:
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+@pytest.mark.parametrize("op", ["polygonize", "sieve"])
+def test_distributed_roots_release_checkpoints(spark, op):
+    """max_border_edges=0 runs pointer doubling: its symmetric edge
+    checkpoint and every round's label checkpoint are released before
+    the call returns, so the one checkpoint the returned plan reads (the
+    polygonize output, the sieve decisions) is the only new block set
+    left in executor storage."""
+    from godal_spark.operators import polygonize as PZ, tiling as TL
+
+    if op == "polygonize":
+        arr, call = _toy_polygonize_raster(), \
+            lambda t: PZ.polygonize_tiles(t, max_border_edges=0)
+    else:
+        arr, call = _toy_sieve_raster(), \
+            lambda t: PZ.sieve_tiles(t, 5, max_border_edges=0)
+    images = datagen.images_df(spark, [datagen.image_row("ck", arr, "raw8")])
+    tiles = TL.explode_tiles(images, bw=8, bh=8)
+    before = _cached_rdd_ids(spark)
+    out = call(tiles)
+    left = _cached_rdd_ids(spark) - before
+    assert len(left) == 1, f"{op} left {len(left)} cached RDDs: {sorted(left)}"
+    assert out.count() > 0
+
+
 def test_polygonize_mask_band_operator(spark):
     """Reference Mask(band) option at the OPERATOR level: a mask band of
     zeros over the top-left 4x4 quarter excludes those pixels. Derived

@@ -27,6 +27,29 @@ def test_driver_mem_default_from_meminfo(monkeypatch, total_kb, want):
     assert session.driver_mem_default() == want
 
 
+def test_executor_shape_fits_a_4_cpu_host(monkeypatch):
+    """The 4N side of a scaling series on a 4-CPU, 15.7 GB host: its
+    cores fit host_cpus() and its executors' memory stays under
+    MemTotal (local-cluster[N, 4, 4096] asked for 16 cores and 16 GB)."""
+    total_kb = int(15.7 * 1024 * 1024)
+    real_open = builtins.open
+
+    def fake_open(path, *args, **kwargs):
+        if path == "/proc/meminfo":
+            return io.StringIO(f"MemTotal:       {total_kb} kB\n")
+        return real_open(path, *args, **kwargs)
+
+    monkeypatch.setattr(builtins, "open", fake_open)
+    monkeypatch.setattr(session, "host_cpus", lambda: 4)
+    for n in (1, 4):
+        cores, mem_mb = session.executor_shape(n)
+        assert (cores, mem_mb) == session.executor_shape(4)   # N and 4N alike
+    assert 4 * cores <= session.host_cpus()
+    assert 4 * mem_mb * 1024 < total_kb
+    with pytest.raises(ValueError, match="do not fit"):
+        session.executor_shape(64)
+
+
 def test_host_cpus_is_the_affinity_count():
     assert session.host_cpus() == len(os.sched_getaffinity(0))
 
