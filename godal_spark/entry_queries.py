@@ -100,6 +100,17 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _read_then_remove(df: DataFrame, tmp_dir: str) -> DataFrame:
+    """df computed into executor memory (an eager localCheckpoint), then
+    `tmp_dir`, which df reads, removed: a query that writes and reads
+    back a scratch table leaves nothing in the temp dir."""
+    import shutil
+
+    out = df.localCheckpoint(eager=True)
+    shutil.rmtree(tmp_dir, ignore_errors=True)
+    return out
+
+
 def _spread(df: DataFrame) -> DataFrame:
     """Driver tables are ONE parquet file with ONE row group each, so any
     scan is a single task no matter the split config (guide §2.2/§6) —
@@ -2253,8 +2264,8 @@ def q_vector_translate(spark, sf_dir):
     from godal_spark.operators import vector as V
 
     fps = _nation_footprints(spark, sf_dir)
-    out_dir = os.path.join(
-        tempfile.mkdtemp(prefix="godal_vt_"), "nations_csv")
+    tmp = tempfile.mkdtemp(prefix="godal_vt_")
+    out_dir = os.path.join(tmp, "nations_csv")
     V.vector_translate(fps.select("fid", "foo", "geometry"), out_dir, "csv")
     back = spark.read.option("header", True).csv(out_dir)
 
@@ -2268,7 +2279,9 @@ def q_vector_translate(spark, sf_dir):
                 out["area"].append(round(g.area(), 4))
             yield pd.DataFrame(out)
 
-    return back.mapInPandas(gen, schema="fid bigint, foo string, area double")
+    return _read_then_remove(
+        back.mapInPandas(gen, schema="fid bigint, foo string, area double"),
+        tmp)
 
 
 SQL_VECTOR_TRANSLATE = f"""
@@ -2429,15 +2442,17 @@ def q_lineage_resume(spark, sf_dir):
                 schema="n_nationkey bigint, n_regionkey bigint"))
         return d
 
-    w = LN.CheckpointedWriter(tempfile.mkdtemp(prefix="godal_lineage_"))
+    tmp = tempfile.mkdtemp(prefix="godal_lineage_")
+    w = LN.CheckpointedWriter(tmp)
     for k in (0, 1):  # first run, then crash
         w.write_partition(k, df_for_key(k, marked=True))
     LN.run_partitioned(w, [0, 1, 2, 3, 4],
                        lambda k: df_for_key(k, marked=False))
-    return (w.read_all(spark)
-            .groupBy("n_regionkey")
-            .agg(F.count("*").cast("bigint").alias("n_rows"),
-                 F.max("n_nationkey").cast("bigint").alias("max_key")))
+    return _read_then_remove(
+        w.read_all(spark)
+        .groupBy("n_regionkey")
+        .agg(F.count("*").cast("bigint").alias("n_rows"),
+             F.max("n_nationkey").cast("bigint").alias("max_key")), tmp)
 
 
 SQL_LINEAGE_RESUME = """
@@ -2470,7 +2485,8 @@ def q_catalog_lod(spark, sf_dir):
         datagen.image_row("cat_b", datagen.pixels_ramp(64, 48), "raw8")])
     t0 = TL.explode_tiles(imgs, bw=16, bh=16)
     ov = TL.build_overviews(t0, min_size=16, block=16)
-    dst = os.path.join(tempfile.mkdtemp(prefix="godal_cat_"), "tiles")
+    tmp = tempfile.mkdtemp(prefix="godal_cat_")
+    dst = os.path.join(tmp, "tiles")
     CAT.write_tiles(t0.unionByName(ov), dst, mode="overwrite")
     parts = []
     for lv in (0, 2):
@@ -2479,7 +2495,9 @@ def q_catalog_lod(spark, sf_dir):
             .groupBy("image_id")
             .agg(F.count("*").cast("bigint").alias("n_tiles"))
             .withColumn("level", F.lit(lv)))
-    return parts[0].unionByName(parts[1]).select("image_id", "level", "n_tiles")
+    return _read_then_remove(
+        parts[0].unionByName(parts[1]).select("image_id", "level", "n_tiles"),
+        tmp)
 
 
 # level 0: ceil(40/16)^2 = 9, ceil(64/16)*ceil(48/16) = 12;
@@ -3129,8 +3147,8 @@ def q_vector_roundtrip(spark, sf_dir):
     from godal_spark.operators import vector as V
 
     fps = _nation_footprints(spark, sf_dir)
-    out = os.path.join(tempfile.gettempdir(),
-                       f"godal_vt_{os.getpid()}")
+    tmp = tempfile.mkdtemp(prefix="godal_vt_")
+    out = os.path.join(tmp, "nations_csv")
     V.vector_translate(fps, out, fmt="csv")
     back = spark.read.option("header", True).csv(out)
 
@@ -3144,10 +3162,11 @@ def q_vector_roundtrip(spark, sf_dir):
             yield pd.DataFrame(o)
 
     per = back.mapInPandas(areas, schema="foo string, area double")
-    return (per.groupBy("foo")
-            .agg(F.count("*").cast("bigint").alias("n"),
-                 F.round(F.sum("area"), 4).alias("sum_area"))
-            .orderBy("foo"))
+    return _read_then_remove(
+        per.groupBy("foo")
+        .agg(F.count("*").cast("bigint").alias("n"),
+             F.round(F.sum("area"), 4).alias("sum_area"))
+        .orderBy("foo"), tmp)
 
 
 SQL_VECTOR_ROUNDTRIP = """

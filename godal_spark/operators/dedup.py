@@ -5,9 +5,13 @@ training-pipeline extensions the engine carries as first-class operators
 over the `documents` table:
 
   * exact_dedup        — md5 hash groupBy (one shuffle on the hash)
-  * minhash_lsh_dedup  — shingle → minhash → band-bucket join; candidate
+  * minhash_lsh_dedup  — shingle → minhash → band buckets; candidate
     pairs verified by true Jaccard. Only bucket-collision pairs are ever
-    joined: no O(n²) pair enumeration.
+    formed: no O(n²) pair enumeration. One eager signature checkpoint;
+    while it and its band pairs fit min(1 GB, driver heap / 8), banding
+    and verify run on the driver in numpy over one bounded Arrow collect
+    (2-3 jobs), else as the distributed bucket self-join and verify
+    joins.
   * simhash_dedup      — 64-bit simhash; Hamming-band (4x16-bit chunks)
     bucket join finds pairs within distance ≤ 3 (pigeonhole over chunks
     guarantees recall for d ≤ 3 with 4 chunks).
@@ -27,6 +31,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
+
+from godal_spark.plans.driver_side import (byte_ceiling, collect_bounded,
+                                           driver_heap, release)
+from godal_spark.plans.skew import spread_small_scan
 
 # ---------------------------------------------------------------------------
 # exact
@@ -56,10 +64,6 @@ def with_shingles(docs: DataFrame, text_col: str = "text", k: int = 5,
         idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
         sh = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)))
     else:
-        txt = F.lower(F.col(text_col))
-        n = F.length(txt)
-        idx = F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1)))
-        sh = F.transform(idx, lambda i: F.substring(txt, 1, 0))  # placeholder
         sh = F.expr(f"transform(sequence(1, greatest(length(lower({text_col})) - {k} + 1, 1)),"
                     f" i -> substr(lower({text_col}), i, {k}))")
     return docs.withColumn("shingles", F.array_distinct(sh))
@@ -106,7 +110,8 @@ def with_minhash(docs: DataFrame, num_hashes: int = 64, seed: int = 42) -> DataF
 def with_shingle_minhash_fused(docs: DataFrame, text_col: str = "text",
                                k: int = 5, num_hashes: int = 64,
                                seed: int = 42,
-                               bands: int | None = None) -> DataFrame:
+                               bands: int | None = None, *,
+                               counts: tuple | None = None) -> DataFrame:
     """Adds `shingle_hashes: array<long>` (sorted distinct 64-bit hashes
     of the word k-grams) and `minhash: array<long>` in ONE Arrow-batched
     pandas UDF. With `bands` set, also adds `buckets: array<long>` — the
@@ -126,6 +131,10 @@ def with_shingle_minhash_fused(docs: DataFrame, text_col: str = "text",
     transform/slice/concat_ws codegen expression on short documents, and
     the Arrow exchange ships one long array per doc instead of a string
     array.
+
+    counts: three accumulators that each output batch adds its totals
+    to, so the job that runs the pass also measures its output: rows,
+    shingle hashes, and the Arrow bytes of every column but the text.
     """
     import hashlib
     import re
@@ -134,9 +143,7 @@ def with_shingle_minhash_fused(docs: DataFrame, text_col: str = "text",
     # a single file under maxPartitionBytes) and the heavy shingle UDF
     # then runs on one core — spread it before the compute. At real
     # table scale the input already has >= cores splits and this no-ops.
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par)
+    docs = spread_small_scan(docs)
 
     a, b = _minhash_params(num_hashes, seed)
     rows_per_band = (num_hashes // bands) if bands else 0
@@ -234,73 +241,50 @@ def with_shingle_minhash_fused(docs: DataFrame, text_col: str = "text",
                 list_arr(mh_parts, fixed_len=num_hashes)]
             if bands:
                 cols.append(list_arr(bk_parts, fixed_len=bands))
+            if counts is not None:
+                n_rows, n_shingles, n_bytes = counts
+                n_rows.add(len(texts))
+                n_shingles.add(int(sh_lens.sum()))
+                n_bytes.add(sum(c.nbytes for i, c in enumerate(cols)
+                                if i != text_ix))
             yield pa.RecordBatch.from_arrays(
                 cols, names=list(out_schema.fieldNames()))
 
     return docs.mapInArrow(fused, schema=out_schema)
 
 
-def minhash_lsh_candidates(docs: DataFrame, bands: int = 16,
-                           id_col: str = "doc_id",
-                           num_hashes: int | None = None) -> DataFrame:
-    """Band the signature, bucket-join: (id_a, id_b) candidate pairs.
+def minhash_lsh_candidates(docs: DataFrame,
+                           id_col: str = "doc_id") -> DataFrame:
+    """Bucket self-join: (id_a, id_b) candidate pairs, id_a < id_b.
 
-    bands × rows = num_hashes; a pair collides if ANY band matches —
-    the standard S-curve. Pairs come from a SELF-EQUI-JOIN on
-    (band, bucket) over (id, bucket) rows only: no `collect_set` of a
-    whole bucket into one row (round 1 did, which put an unbounded array
-    in a single task on a degenerate bucket). The sort-merge join spills,
-    and AQE's skew-join split carves up hot buckets — the memory-safe
-    shape for a 10^12-doc corpus with boilerplate-heavy buckets.
+    `buckets` holds each doc's per-band LSH keys, precomputed in the
+    fused Arrow pass (numpy fold with the band index folded in — see
+    with_shingle_minhash_fused), so banding is a bare explode and
+    everything keys on ONE long column; a pair collides if ANY band
+    matches — the standard S-curve. Pairs come from a SELF-EQUI-JOIN
+    over (id, bucket) rows only: no `collect_set` of a whole bucket into
+    one row (round 1 did, which put an unbounded array in a single task
+    on a degenerate bucket). The sort-merge join spills, and AQE's
+    skew-join split carves up hot buckets — the memory-safe shape for a
+    10^12-doc corpus with boilerplate-heavy buckets.
+
+    Bucket occupancy is counted first (one partial-aggregated exchange
+    of (bucket, count) longs), and the all-pairs self-join runs only on
+    the rows of buckets with >= 2 members — on a real corpus a vanishing
+    fraction; AQE broadcasts the hot-bucket list when it is small.
+    Single-member buckets produce no pairs, so the candidate set is that
+    of the plain self-join.
     """
-    if "buckets" in docs.columns:
-        # bucket keys precomputed in the fused Arrow pass (numpy fold
-        # with the band index folded in — see with_shingle_minhash_fused):
-        # the banding stage is a bare explode, no interpreted per-band
-        # HOF fold, and everything keys on ONE long column. Shape: count
-        # bucket occupancy first (one partial-aggregated exchange of
-        # (bucket, count) longs), keep only buckets with >= 2 members —
-        # on a real corpus a vanishing fraction — and run the all-pairs
-        # self-join on THOSE rows only. This replaces a self-join that
-        # exchanged/broadcast the full banded table twice with one keyed
-        # aggregation plus a join whose inputs are duplicate-bounded
-        # (AQE broadcasts the hot-bucket list when it is small, shuffles
-        # when it is not). Single-member buckets produce no pairs, so
-        # the candidate set is identical.
-        banded = docs.select(
-            F.col(id_col).alias("__id"),
-            F.explode(F.col("buckets")).alias("bucket"))
-        hot_buckets = (banded.groupBy("bucket")
-                       .agg(F.count("*").alias("__n"))
-                       .filter(F.col("__n") >= 2).select("bucket"))
-        hot = banded.join(hot_buckets, "bucket", "left_semi")
-        a = hot.select("bucket", F.col("__id").alias("id_a"))
-        b = hot.select("bucket", F.col("__id").alias("id_b"))
-        return (a.join(b, "bucket")
-                .filter(F.col("id_a") < F.col("id_b"))
-                .select("id_a", "id_b").distinct())
-    nh = num_hashes
-    if nh is None:
-        nh = docs.select(F.size("minhash").alias("n")).first()["n"]
-    rows_per_band = nh // bands
-    # bucket = FNV-style numeric fold of the band's signature slice —
-    # no per-band string building (the previous concat_ws/cast emitted
-    # 16 strings per doc, measured as the dominant JVM cost of the
-    # banding stage at 800k docs). A within-band fold collision only
-    # creates a false CANDIDATE, which exact verify removes.
     banded = docs.select(
         F.col(id_col).alias("__id"),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda bidx: F.aggregate(
-                    F.slice(F.col("minhash"), bidx * rows_per_band + 1,
-                            rows_per_band),
-                    F.lit(-3750763034362895579).cast("long"),  # FNV-1a 64 offset
-                    lambda acc, v: F.xxhash64(acc, v)))).alias("band", "bucket"))
-    a = banded.select("band", "bucket", F.col("__id").alias("id_a"))
-    b = banded.select("band", "bucket", F.col("__id").alias("id_b"))
-    return (a.join(b, ["band", "bucket"])
+        F.explode(F.col("buckets")).alias("bucket"))
+    hot_buckets = (banded.groupBy("bucket")
+                   .agg(F.count("*").alias("__n"))
+                   .filter(F.col("__n") >= 2).select("bucket"))
+    hot = banded.join(hot_buckets, "bucket", "left_semi")
+    a = hot.select("bucket", F.col("__id").alias("id_a"))
+    b = hot.select("bucket", F.col("__id").alias("id_b"))
+    return (a.join(b, "bucket")
             .filter(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b").distinct())
 
@@ -360,16 +344,158 @@ def jaccard_verify(docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
             .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard")))
 
 
-def _verify_broadcast_ok(n_cand: int, avg_shingles: float, num_hashes: int,
+# Bytes minhash_lsh_dedup's driver path may hold, further capped at an
+# eighth of the driver heap: the collected signature rows, and the
+# verify width of every within-bucket pair. 0 forces the distributed
+# chain.
+DRIVER_BUDGET = 1 << 30
+
+
+def _pair_bytes(n_pairs: int, pair_shingles: float, num_hashes: int) -> float:
+    """Width of n_pairs pairs carrying both sides' minhash arrays and,
+    in all, pair_shingles shingle hashes, plus row overhead."""
+    return n_pairs * (16 * num_hashes + 48) + 8 * pair_shingles
+
+
+def _verify_broadcast_ok(n_cand: int, pair_shingles: float, num_hashes: int,
                          max_heap: int) -> bool:
-    """Whether the verify may broadcast n_cand candidate pairs: their
-    estimated build width (both sides' shingle + minhash arrays, plus
-    row overhead) must stay under min(1 GB, max_heap / 8). The driver
+    """Whether the verify may broadcast n_cand candidate pairs whose two
+    sides carry pair_shingles shingle hashes in all: their build width
+    (_pair_bytes) must stay under min(1 GB, max_heap / 8). The driver
     holds the whole build side while it broadcasts, so the ceiling
     follows its heap (max_heap, the JVM's Runtime.maxMemory()); Spark
     itself hard-caps broadcasts at 8 GB."""
-    est_bytes = n_cand * (16 * avg_shingles + 16 * num_hashes + 48)
-    return est_bytes < min(1 << 30, max_heap // 8)
+    return _pair_bytes(n_cand, pair_shingles, num_hashes) \
+        < byte_ceiling(max_heap)
+
+
+def _round6(inter: np.ndarray, union: np.ndarray) -> np.ndarray:
+    """Spark's round(inter / union, 6) for union >= 1: Spark rounds the
+    double's decimal form HALF_UP, which for these ratios is HALF_UP of
+    the exact fraction, so integer arithmetic gives it. A ratio that
+    ties at the 7th digit, such as 1/640, rounds up; Python's round()
+    and HALF_UP of the double's binary value would round some of them
+    down."""
+    return ((2_000_000 * inter + union) // (2 * union)) / 1e6
+
+
+def _chunks(weights: np.ndarray, cap: int):
+    """Consecutive slices of `weights`, each summing to at most `cap` or
+    holding one item: bounds the driver's gathers."""
+    ends = np.cumsum(weights)
+    lo = 0
+    while lo < len(weights):
+        base = ends[lo - 1] if lo else 0
+        hi = max(lo + 1, int(np.searchsorted(ends, base + cap, side="right")))
+        yield slice(lo, hi)
+        lo = hi
+
+
+def _ordered_like_spark(dt) -> bool:
+    """Whether Arrow's sort order of ids of Spark type `dt` is Spark's
+    `<`: integers, and strings under the default binary collation."""
+    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        return True
+    return type(dt) is T.StringType and \
+        getattr(dt, "collation", "UTF8_BINARY") == "UTF8_BINARY"
+
+
+def _driver_dedup(tbl, id_col: str, num_hashes: int, bands: int,
+                  threshold: float, budget: int):
+    """minhash_lsh_dedup's banding, prefilter and exact verify over the
+    collected signature table, in numpy: the verified pairs as an Arrow
+    table, or None to leave the call to the distributed chain (duplicate
+    ids, or band pairs wider than `budget`). Same rows as the chain,
+    jaccard bit-equal."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ids = tbl.column(id_col)
+    # rank r holds the r-th smallest id: r_a < r_b is Spark's id_a < id_b
+    # (numeric for integer ids, binary UTF-8 for strings). Null ids sort
+    # last and are dropped: a null never passes id_a < id_b.
+    by_id = pc.sort_indices(ids, null_placement="at_end")
+    by_id = by_id[:len(ids) - ids.null_count].to_numpy()
+    ids = ids.take(by_id).combine_chunks()
+    n = len(ids)
+    if n > 1 and pc.any(pc.equal(ids[1:], ids[:-1])).as_py():
+        # the chain's joins repeat a pair once per row of a repeated id
+        return None
+
+    def fixed(col, width):
+        arr = tbl.column(col).combine_chunks()
+        return arr.flatten().to_numpy().reshape(-1, width)[by_id]
+
+    mh = fixed("minhash", num_hashes)
+    buckets = fixed("buckets", bands)
+    sh_arr = tbl.column("shingle_hashes").combine_chunks()
+    sh_vals = sh_arr.flatten().to_numpy()
+    sh_len = sh_arr.value_lengths().to_numpy().astype(np.int64)
+    sh_start = (np.cumsum(sh_len) - sh_len)[by_id]
+    sh_len = sh_len[by_id]
+
+    # banding: sort the n x bands keys once; a run of m equal keys is a
+    # bucket holding m pairs' worth of work, C(m, 2)
+    keys = buckets.ravel()
+    order = np.argsort(keys, kind="stable")
+    member = order // bands
+    ks = keys[order]
+    new_run = np.ones(len(ks), dtype=bool)
+    new_run[1:] = ks[1:] != ks[:-1]
+    starts = np.flatnonzero(new_run)
+    sizes = np.diff(np.r_[starts, len(ks)]).astype(np.int64)
+    # the exact band-pair width, before any pair exists: each member of a
+    # run meets the other m - 1 members, carrying its shingle hashes
+    run_sh = np.add.reduceat(sh_len[member], starts) if n else sizes
+    n_band_pairs = int((sizes * (sizes - 1) // 2).sum())
+    if _pair_bytes(n_band_pairs, int(((sizes - 1) * run_sh).sum()),
+                   num_hashes) >= budget:
+        return None
+    hot = sizes >= 2
+    starts, sizes = starts[hot], sizes[hot]
+    # member at offset t of a run of m pairs with the m - 1 - t after it
+    pos = np.repeat(starts, sizes) + (np.arange(sizes.sum())
+                                      - np.repeat(np.cumsum(sizes) - sizes, sizes))
+    later = np.repeat(starts + sizes, sizes) - 1 - pos
+    first = np.repeat(pos, later)
+    second = first + 1 + (np.arange(later.sum())
+                          - np.repeat(np.cumsum(later) - later, later))
+    ra, rb = member[first], member[second]
+    code = np.unique(np.minimum(ra, rb) * n + np.maximum(ra, rb))
+    code = code[code // n != code % n]  # a doc whose two bands share a key
+    ra, rb = code // n, code % n
+
+    # signature prefilter, as jaccard_verify's: matching-component
+    # fraction >= threshold - 2 / sqrt(num_hashes)
+    cutoff = threshold - 2.0 / np.sqrt(float(num_hashes))
+    keep = np.zeros(len(ra), dtype=bool)
+    for sl in _chunks(np.full(len(ra), num_hashes), 1 << 20):
+        eq = (mh[ra[sl]] == mh[rb[sl]]).sum(axis=1)
+        keep[sl] = eq / float(num_hashes) >= cutoff
+    ra, rb = ra[keep], rb[keep]
+
+    # exact Jaccard: both pairs' sorted unique hash runs, tagged by pair;
+    # one lexsort puts a shared hash's two copies side by side. Every doc
+    # has at least one hash (empty text hashes the empty gram), so the
+    # union is never 0.
+    la, lb = sh_len[ra], sh_len[rb]
+    inter = np.zeros(len(ra), dtype=np.int64)
+    for sl in _chunks(la + lb, 1 << 20):
+        seg_len = np.r_[la[sl], lb[sl]]
+        seg_start = np.r_[sh_start[ra[sl]], sh_start[rb[sl]]]
+        pair = np.tile(np.arange(sl.stop - sl.start), 2)
+        idx = np.repeat(seg_start - (np.cumsum(seg_len) - seg_len), seg_len) \
+            + np.arange(seg_len.sum())
+        v, p = sh_vals[idx], np.repeat(pair, seg_len)
+        o = np.lexsort((v, p))
+        v, p = v[o], p[o]
+        same = (p[1:] == p[:-1]) & (v[1:] == v[:-1])
+        inter[sl] = np.bincount(p[1:][same], minlength=sl.stop - sl.start)
+    union = la + lb - inter
+    ok = inter / union >= threshold
+    return pa.table({
+        "id_a": ids.take(ra[ok]), "id_b": ids.take(rb[ok]),
+        "jaccard": pa.array(_round6(inter[ok], union[ok]), pa.float64())})
 
 
 def minhash_lsh_dedup(docs: DataFrame, *, k: int = 5, num_hashes: int = 64,
@@ -377,28 +503,63 @@ def minhash_lsh_dedup(docs: DataFrame, *, k: int = 5, num_hashes: int = 64,
                       id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Full near-dup pipeline → verified (id_a, id_b, jaccard) pairs.
 
-    The narrow signature frame (id, minhash, shingles) is checkpointed
-    ONCE (localCheckpoint — the local-mode analogue of the
+    The narrow signature frame (id, minhash, shingle_hashes, buckets) is
+    checkpointed ONCE (localCheckpoint — the local-mode analogue of the
     checkpoint-table write a 100 TB run would do); a lazy plan would
     recompute the minhash UDF once per join branch (4-6×, measured 3x
-    slower end-to-end).
+    slower end-to-end). The job that writes it also counts its rows,
+    shingle hashes and Arrow bytes (accumulators in the fused pass).
+
+    Driver path: while those bytes are under min(DRIVER_BUDGET, heap /
+    8), the checkpoint comes to the driver in one bounded
+    `limit(N + 1).toArrow()` and the rest is numpy (_driver_dedup):
+    banding by one sort of all bucket keys, the signature prefilter, the
+    exact Jaccard by sorted intersection, Spark's round(x, 6). The result
+    is a local DataFrame — its collect() runs no job — and the checkpoint
+    is released before the call returns: 2 jobs, 3 when AQE splits the
+    limit's exchange off. The driver path declines, after the collect,
+    when ids repeat or the band pairs' verify width, sum C(m, 2) over
+    buckets of m docs, exceeds the same ceiling; integer and string ids
+    only.
+
+    Fallback, the distributed chain: a narrow (id, buckets) checkpoint,
+    the bucket self-join (minhash_lsh_candidates), a checkpoint of the
+    candidate pairs and its count, then jaccard_verify — with the pairs
+    broadcast while _verify_broadcast_ok allows, estimated from the
+    checkpoint's exact shingle total (no extra job).
 
     bands=16 over num_hashes=64 gives rows=4 — collision p at
     jaccard 0.3 is ~12%, vs rows=2 where boilerplate pairs (j≈0.3)
     collide with ~95% and the candidate set degenerates toward
     all-pairs.
     """
-    d = with_shingle_minhash_fused(docs, text_col, k=k, num_hashes=num_hashes,
-                                   bands=bands)
+    sc = docs.sparkSession.sparkContext
+    counts = tuple(sc.accumulator(0) for _ in range(3))
+    d = with_shingle_minhash_fused(docs.select(id_col, text_col), text_col,
+                                   k=k, num_hashes=num_hashes, bands=bands,
+                                   counts=counts)
     sig = d.select(F.col(id_col), "minhash", "shingle_hashes", "buckets")
     # Materialize the signature frame ONCE with an eager localCheckpoint:
-    # lineage is truncated to the materialized blocks, so every branch
-    # below (banding, hot-bucket semi, both verify sides) scans the
-    # checkpoint instead of re-running the Arrow pass. (A persist+count
-    # was not enough: the nondeterministic-marked UDF defeats the cache
-    # manager's sameResult lookup and each branch silently re-ran the
-    # UDF — measured 4x the fused stage in one wall.)
+    # lineage is truncated to the materialized blocks, so every later
+    # read scans the checkpoint instead of re-running the Arrow pass. (A
+    # persist+count was not enough: the nondeterministic-marked UDF
+    # defeats the cache manager's sameResult lookup and each branch
+    # silently re-ran the UDF — measured 4x the fused stage in one wall.)
     sig = sig.localCheckpoint(eager=True)
+    n_rows, n_shingles, n_bytes = (c.value for c in counts)
+    heap = driver_heap(docs)
+    budget = min(DRIVER_BUDGET, byte_ceiling(heap))
+    if n_bytes < budget and _ordered_like_spark(sig.schema[id_col].dataType):
+        tbl = collect_bounded(sig, n_rows)
+        out = None if tbl is None else _driver_dedup(
+            tbl, id_col, num_hashes, bands, threshold, budget)
+        if out is not None:
+            release(sig)
+            f = sig.schema[id_col]
+            return docs.sparkSession.createDataFrame(out, T.StructType([
+                T.StructField("id_a", f.dataType, f.nullable),
+                T.StructField("id_b", f.dataType, f.nullable),
+                T.StructField("jaccard", T.DoubleType())]))
     # a checkpointed-RDD scan has NO column pruning (LogicalRDD hands
     # back full InternalRows), so the two banding-side readers (bucket
     # occupancy agg + hot semi-join) would each deserialize the wide
@@ -407,29 +568,20 @@ def minhash_lsh_dedup(docs: DataFrame, *, k: int = 5, num_hashes: int = 64,
     # bytes per banding scan; the verify branches still read `sig`.
     banded_src = sig.select(F.col(id_col), "buckets") \
         .localCheckpoint(eager=True)
-    cand = minhash_lsh_candidates(banded_src, bands=bands, id_col=id_col,
-                                  num_hashes=num_hashes)
     # Materialize the (id,id) candidate pairs and measure them: when
     # they fit (the normal regime — candidates ~ O(duplicates), not
     # O(corpus)), the verify runs with the pairs BROADCAST, so the
     # signature table is never shuffled (guide §3.1); past the cap it
     # falls back to the shuffle-join verify. The checkpoint also stops
     # the banding subtree from re-running once per verify branch.
-    cand = cand.localCheckpoint(eager=True)
+    cand = minhash_lsh_candidates(banded_src, id_col=id_col) \
+        .localCheckpoint(eager=True)
     n_cand = cand.count()
-    # the broadcast build side of the verify carries each pair's FULL
-    # shingle + minhash arrays, so the guard must bound bytes, not rows:
-    # small pair sets broadcast unconditionally; mid-size sets pay one
-    # cheap agg on the checkpointed signatures to estimate the build
-    # width against the driver heap (_verify_broadcast_ok); anything
-    # larger keeps the round-5 shuffle-join verify
-    broadcast_ok = n_cand <= 200_000
-    if not broadcast_ok and n_cand <= 2_000_000:
-        avg_sh = sig.agg(F.avg(F.size("shingle_hashes"))).first()[0] or 0.0
-        jvm = docs.sparkSession.sparkContext._jvm
-        broadcast_ok = _verify_broadcast_ok(
-            n_cand, avg_sh, num_hashes,
-            jvm.java.lang.Runtime.getRuntime().maxMemory())
+    # the broadcast build side carries each pair's FULL shingle + minhash
+    # arrays, so the guard bounds bytes: the pairs' shingles at the
+    # corpus's exact mean, from the checkpoint pass's own counts
+    broadcast_ok = _verify_broadcast_ok(
+        n_cand, 2 * n_cand * n_shingles / max(n_rows, 1), num_hashes, heap)
     # no output checkpoint: sig and cand are already materialized, so
     # the verify is a cheap narrow plan over checkpointed blocks — an
     # eager result checkpoint would just compute it twice (once into
@@ -672,8 +824,6 @@ def with_winnowing_anchors(docs: DataFrame, *, k: int = 16,
     """
     import zlib
 
-    guard = k  # noqa: F841  (documented: guarantee = k + select_window - 1)
-
     def gen(batches):
         for pdf in batches:
             ids, poss, grams = [], [], []
@@ -703,10 +853,7 @@ def with_winnowing_anchors(docs: DataFrame, *, k: int = 16,
                     grams.append(t[p:p + k])
             yield pd.DataFrame({"__id": ids, "pos": poss, "gram": grams})
 
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    src = docs.select(F.col(id_col), F.col(text_col))
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
+    src = spread_small_scan(docs.select(F.col(id_col), F.col(text_col)))
     return src.mapInPandas(gen, schema="__id long, pos int, gram string")
 
 

@@ -65,6 +65,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from godal_spark.functions import cellindex
+from godal_spark.plans.driver_side import collect_bounded
 
 _XSHIFT = 26
 _RSHIFT = 52
@@ -163,10 +164,10 @@ def _collect_points(points: DataFrame, p_id: str, p_lon: str, p_lat: str):
     first, like Spark's ascending order."""
     import pyarrow.compute as pc
 
-    tbl = points.select(F.col(p_id).alias("id"), F.col(p_lon).alias("x"),
-                        F.col(p_lat).alias("y")) \
-                .limit(BROADCAST_BUDGET + 1).toArrow()
-    if tbl.num_rows > BROADCAST_BUDGET:
+    tbl = collect_bounded(points.select(
+        F.col(p_id).alias("id"), F.col(p_lon).alias("x"),
+        F.col(p_lat).alias("y")), BROADCAST_BUDGET)
+    if tbl is None:
         return None
     tbl = tbl.take(pc.sort_indices(tbl, sort_keys=[("id", "ascending")],
                                    null_placement="at_start"))

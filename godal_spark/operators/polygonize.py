@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from godal_spark.functions import geom as G
+from godal_spark.plans.driver_side import collect_bounded, release
 
 
 # ---------------------------------------------------------------------------
@@ -741,12 +742,12 @@ def _resolve_roots_distributed(edges: DataFrame, held: list[DataFrame],
                             ["image_id", "band", "cid"])
                    .filter(F.col("root") != F.col("oroot")).count())
         if lab is not seed:
-            _release(lab)
+            release(lab)
         lab = new
         if changed == 0:
             break
     if lab is not seed:
-        _release(sym)
+        release(sym)
         held.append(lab)
     return lab
 
@@ -773,15 +774,6 @@ def _declare_parallelism(df: DataFrame, *keys: str,
     # width keeps mid-size scans at full fan-out.
     n = max(8, min(dp * 4, src.rdd.getNumPartitions() * 2))
     return df.repartition(n, *keys)
-
-
-def _collect_bounded(df: DataFrame, max_rows: int):
-    """df as one Arrow table when it has at most max_rows rows, else
-    None. One bounded step, `limit(max_rows + 1).toArrow()`: a single
-    evaluation of the plan, never collect()'s incremental
-    partition-by-partition take (one job per probe round)."""
-    tbl = df.limit(max_rows + 1).toArrow()
-    return None if tbl.num_rows > max_rows else tbl
 
 
 def _driver_roots(edges) -> dict:
@@ -818,7 +810,7 @@ def _attach_roots(comps: DataFrame, edges: DataFrame,
     no edge is its own root."""
     from pyspark.sql import functions as F
 
-    meta = _collect_bounded(edges, max_border_edges)
+    meta = collect_bounded(edges, max_border_edges)
     if meta is None:
         mdf = _resolve_roots_distributed(edges, held)
     else:
@@ -832,13 +824,6 @@ def _attach_roots(comps: DataFrame, edges: DataFrame,
             "image_id string, band int, cid long, root long"))
     return (comps.join(mdf, ["image_id", "band", "cid"], "left")
             .withColumn("root", F.coalesce("root", "cid")))
-
-
-def _release(ckpt: DataFrame) -> None:
-    """Drop the blocks of an eager localCheckpoint now, not when the JVM
-    ContextCleaner next collects its RDD, so no phase-1 data outlives
-    the operator call. Any later read of `ckpt` fails."""
-    ckpt._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def _label_tile(r, eight: bool, nodata: float | None):
@@ -1116,7 +1101,7 @@ def polygonize_tiles(tiles: DataFrame, *, eight: bool = False,
         return out.localCheckpoint(eager=True)
     finally:
         for c in held:
-            _release(c)
+            release(c)
 
 
 # ---------------------------------------------------------------------------
@@ -1292,7 +1277,7 @@ def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
         border = _border_pairs(_strips(raw), eight)
         # the metadata the driver path collects: phase 1's 'comp' and
         # intra-tile 'adj' rows, and the border pairs as 'eq' or 'adj' rows
-        meta = _collect_bounded(
+        meta = collect_bounded(
             raw.filter(F.col("kind") != "strip")
                .select("kind", "image_id", "band", "cid", "cid_b", "value",
                        "n_pixels")
@@ -1405,4 +1390,4 @@ def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
         # the returned plan reads only `tiles` and checkpoints made from
         # these, so no intermediate checkpoint outlives the call
         for c in held:
-            _release(c)
+            release(c)

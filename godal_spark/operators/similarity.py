@@ -81,11 +81,11 @@ def brute_force_topk(emb: DataFrame, query_ids, k: int = 10, *,
             yield pd.DataFrame(rows)
 
     # small-corpus parquet can read as one split — spread the CPU-bound
-    # cosine pass over the cores (no-op when the table already has
-    # >= cores splits; same hazard as dedup.with_shingle_minhash_fused)
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    scan = emb.repartition(par) if emb.rdd.getNumPartitions() < par else emb
-    partial = scan.mapInPandas(gen, schema="qid long, pid long, sim double")
+    # cosine pass over the cores
+    from godal_spark.plans.skew import spread_small_scan
+
+    partial = spread_small_scan(emb).mapInPandas(
+        gen, schema="qid long, pid long, sim double")
     w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("pid").asc())
     return (partial.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k))

@@ -28,9 +28,15 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
     input costs one tiny shuffle and unlocks every core; it no-ops when
     the scan already has >= defaultParallelism splits — the 100 TB case,
     where adding a shuffle of the base table would be the bug instead.
+
+    Runs no job. `df.rdd.getNumPartitions()` executes the query stages
+    of a plan that AQE wraps (one with an exchange or a subquery), and
+    such a plan's width is AQE's run-time choice anyway, so a wrapped
+    plan is spread without asking.
     """
     par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
+    root = df._jdf.queryExecution().executedPlan().getClass().getSimpleName()
+    if root == "AdaptiveSparkPlanExec" or df.rdd.getNumPartitions() < par:
         df = df.repartition(par)
     return df
 

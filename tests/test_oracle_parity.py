@@ -70,3 +70,19 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 0
     assert set(df.columns) == {"n_name", "foo", "n_tiles", "n_images"}
+
+
+def test_scratch_queries_leave_no_temp_dir(spark):
+    """Queries that write a scratch table and read it back remove it: a
+    call and a read of its result leave no new dir in the temp dir."""
+    import tempfile
+
+    def scratch_dirs():
+        return {d for d in os.listdir(tempfile.gettempdir())
+                if d.startswith(("godal_vt_", "godal_lineage_", "godal_cat_"))}
+
+    for name in ("vector_translate", "lineage_resume", "catalog_lod",
+                 "vector_roundtrip"):
+        before = scratch_dirs()
+        assert QUERIES[name](spark, SF_DIR).count() > 0
+        assert scratch_dirs() <= before, name

@@ -367,21 +367,23 @@ def test_minhash_skew_bucket_identical_docs(spark):
                         "text": ["the same exact boilerplate document text"] * n})
     docs = spark.createDataFrame(pdf)
     pairs = DD.minhash_lsh_dedup(docs, k=3, num_hashes=64, bands=16, threshold=0.9)
+    # 16 bands x C(1000, 2) band pairs are far over the driver budget
+    assert not _on_driver(pairs)
     assert pairs.count() == n * (n - 1) // 2
     r = pairs.first()
     assert r.jaccard == pytest.approx(1.0)
 
 
 def test_verify_broadcast_guard_follows_driver_heap():
-    """The mid-size verify broadcast is bounded by min(1 GB, heap / 8).
-    The skew-bucket case above: 499,500 pairs of 4 shingles and 64
-    hashes estimate 499,500 * 1,136 B = 541 MiB, under 1 GB but over an
-    eighth of a 2.68 GB driver heap, so it takes the shuffle-join
+    """The verify broadcast is bounded by min(1 GB, heap / 8).
+    The skew-bucket case above: 499,500 pairs of 4 shingles a side and
+    64 hashes estimate 499,500 * 1,136 B = 541 MiB, under 1 GB but over
+    an eighth of a 2.68 GB driver heap, so it takes the shuffle-join
     verify; a 16 GB heap may broadcast it; nothing past 1 GB broadcasts."""
     pairs = 1000 * 999 // 2
-    assert not DD._verify_broadcast_ok(pairs, 4.0, 64, int(2.68 * 2**30))
-    assert DD._verify_broadcast_ok(pairs, 4.0, 64, 16 * 2**30)
-    assert not DD._verify_broadcast_ok(1_000_000, 4.0, 64, 64 * 2**30)
+    assert not DD._verify_broadcast_ok(pairs, 8 * pairs, 64, int(2.68 * 2**30))
+    assert DD._verify_broadcast_ok(pairs, 8 * pairs, 64, 16 * 2**30)
+    assert not DD._verify_broadcast_ok(1_000_000, 8_000_000, 64, 64 * 2**30)
 
 
 def test_jaccard_signature_prefilter_keeps_true_pairs(spark):
@@ -663,3 +665,123 @@ def test_minhash_bands_not_dividing_num_hashes(spark):
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     # the four identical docs must all pair up
     assert {(0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3)} <= got
+
+
+def _on_driver(pairs) -> bool:
+    """Whether minhash_lsh_dedup answered on the driver: its result is
+    then a local relation, which collect() reads without a job."""
+    plan = pairs._jdf.queryExecution().logical()
+    return plan.getClass().getSimpleName() == "LocalRelation"
+
+
+def _captions(n: int, seed: int) -> list[str]:
+    """A small corpus shaped like the benchmark's captions: per 20 docs,
+    2 templated boilerplate captions (below-threshold candidates), 2
+    bases of at least 14 words with 2 near copies each (one word
+    appended), and 14 unrelated captions of heavy-tailed length."""
+    rng = np.random.default_rng(seed)
+    vocab = np.array([f"w{i}" for i in range(2000)])
+    p = 1.0 / np.arange(1, len(vocab) + 1) ** 1.1
+    p /= p.sum()
+    words = lambda m: " ".join(rng.choice(vocab, m, p=p))  # noqa: E731
+    templates = [words(12) + " {} " + words(6) + " {}" for _ in range(3)]
+    lens = np.minimum(6 + rng.lognormal(2.8, 0.8, n).astype(int), 300)
+    out: list[str] = []
+    while len(out) < n:
+        i, slot = len(out), len(out) % 20
+        if slot in (0, 10):
+            out.append(templates[(i // 10) % 3].format(*rng.choice(vocab, 2)))
+        elif slot in (4, 14):
+            base = words(max(14, int(lens[i])))
+            out += [base] + [f"{base} {rng.choice(vocab)}" for _ in range(2)]
+        else:
+            out.append(words(int(lens[i])))
+    return out[:n]
+
+
+def _parity_case(spark, case: str):
+    """(docs, minhash_lsh_dedup kwargs) for one two-path parity case."""
+    texts = _captions(400, 11)
+    if case == "long_ids":
+        return spark.createDataFrame(
+            [(3 * i + 5, t) for i, t in enumerate(texts)],
+            "doc_id long, text string"), {"threshold": 0.5}
+    if case == "string_ids":
+        # mixed case and non-ASCII ids: the pair order is binary UTF-8
+        ids = [f"{'aZé'[i % 3]}{i:04d}" for i in range(len(texts))]
+        rows = list(zip(ids, texts)) + [(None, texts[4]), (None, texts[5])]
+        return spark.createDataFrame(rows, "doc_id string, text string"), \
+            {"threshold": 0.5}
+    if case == "null_empty_text":
+        small = [None, "", "   ", None, "", "a b c", "a b c", "A  B\tc",
+                 "a b c d", "x y z"] + texts[:40]
+        return spark.createDataFrame(list(enumerate(small)),
+                                     "doc_id long, text string"), \
+            {"k": 3, "threshold": 0.5}
+    if case == "bands_10":
+        return spark.createDataFrame(list(enumerate(texts)),
+                                     "doc_id long, text string"), \
+            {"bands": 10, "threshold": 0.8}
+    # duplicate ids: the driver path declines, both calls are distributed
+    rows = list(enumerate(texts[:60])) + [(4, texts[5]), (4, texts[6])]
+    return spark.createDataFrame(rows, "doc_id long, text string"), \
+        {"threshold": 0.5}
+
+
+@pytest.mark.parametrize("case", ["long_ids", "string_ids", "null_empty_text",
+                                  "bands_10", "duplicate_ids"])
+def test_minhash_driver_path_matches_distributed(spark, monkeypatch, case):
+    """The driver path and the distributed chain (with a broadcast and
+    with a shuffle-join verify) return the same (id_a, id_b, jaccard)
+    rows, jaccard bit-equal."""
+    docs, kw = _parity_case(spark, case)
+
+    def run():
+        pairs = DD.minhash_lsh_dedup(docs, **kw)
+        return _on_driver(pairs), sorted(tuple(r) for r in pairs.collect())
+
+    on_driver, driver = run()
+    assert on_driver == (case != "duplicate_ids")
+    assert driver, "the case must verify some pairs"
+    monkeypatch.setattr(DD, "DRIVER_BUDGET", 0)
+    on_driver, broadcast = run()
+    assert not on_driver
+    monkeypatch.setattr(DD, "_verify_broadcast_ok", lambda *a: False)
+    _, shuffled = run()
+    assert driver == broadcast == shuffled
+
+
+def test_minhash_dedup_job_budget(spark, jobs_of):
+    """On the driver path minhash_lsh_dedup runs the signature
+    checkpoint and one bounded collect (+1 when AQE splits the limit's
+    exchange into its own job); its result collects with no job."""
+    docs = spark.createDataFrame(list(enumerate(_captions(400, 3))),
+                                 "doc_id long, text string")
+    n, pairs = jobs_of(lambda: DD.minhash_lsh_dedup(docs, threshold=0.5))
+    assert n <= 3
+    n, rows = jobs_of(pairs.collect)
+    assert n == 0 and rows
+
+
+def test_minhash_round6_matches_spark_round(spark):
+    """The driver path's round(inter / union, 6) is Spark's: HALF_UP on
+    the decimal value, so every exact 7th-digit tie rounds up."""
+    ties = [(p, q) for q in range(1, 1500) for p in range(q + 1)
+            if (2_000_000 * p) % q == 0 and (2_000_000 * p // q) % 2 == 1]
+    assert len(ties) > 100
+    got = DD._round6(np.array([p for p, _ in ties]),
+                     np.array([q for _, q in ties]))
+    want = spark.createDataFrame(ties, "p long, q long").select(
+        F.round(F.col("p") / F.col("q"), 6).alias("r")).collect()
+    assert got.tolist() == [r.r for r in want]
+
+
+def test_dedup_partition_probes_run_no_job(spark, jobs_of):
+    """Sizing the shingle and winnowing passes reads the input's
+    partition count; under AQE that count executes the stages of a plan
+    with an exchange, so it must not come from such a plan."""
+    docs = spark.createDataFrame(
+        [(i, f"doc {i} text words") for i in range(50)],
+        "doc_id long, text string").repartition(3, "doc_id")
+    assert jobs_of(lambda: DD.with_shingle_minhash_fused(docs, bands=16))[0] == 0
+    assert jobs_of(lambda: DD.with_winnowing_anchors(docs))[0] == 0
