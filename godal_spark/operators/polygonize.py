@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 
 from godal_spark.functions import geom as G
 from godal_spark.plans.driver_side import collect_bounded, release
+from godal_spark.plans.skew import aqe_wrapped
 
 
 # ---------------------------------------------------------------------------
@@ -761,19 +762,20 @@ def _declare_parallelism(df: DataFrame, *keys: str,
     coalescing and satisfy the grouping's required distribution.
 
     The width scales with the partition count of `width_from` (default
-    `df`). Under AQE, `getNumPartitions()` executes the query stages of
-    a plan with an exchange or a broadcast, so pass a frame whose plan
-    has none (a checkpoint scan) to keep the sizing free of jobs."""
+    `df`). A plan AQE wraps (one with an exchange or a broadcast) gets
+    the full width without asking, so the sizing runs no job; pass a
+    checkpoint scan as `width_from` to size from its partitions."""
     dp = df.sparkSession.sparkContext.defaultParallelism
     src = df if width_from is None else width_from
     # width scales with the incoming partitioning: a 6-tile toy input
     # doesn't pay for 4*dp empty tasks, a wide scan still fans out to
     # the full 4*dp. Floor is 8 — not dp — because an empty Python task
-    # still costs a worker round-trip (~0.15 s of pure scheduling per
-    # 32-task stage measured on the toy sieve input); 2x the incoming
+    # still holds a slot: ~0.05 s on a 4-core host, ~0.22 s before the
+    # worker daemon stopped every task re-reading pyspark.zip's
+    # directory (the cost once blamed on scheduling); 2x the incoming
     # width keeps mid-size scans at full fan-out.
-    n = max(8, min(dp * 4, src.rdd.getNumPartitions() * 2))
-    return df.repartition(n, *keys)
+    width = dp * 4 if aqe_wrapped(src) else min(dp * 4, src.rdd.getNumPartitions() * 2)
+    return df.repartition(max(8, width), *keys)
 
 
 def _driver_roots(edges) -> dict:
@@ -1383,8 +1385,10 @@ def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
         keys = ["image_id", "band", "block_x", "block_y"]
         from godal_spark.operators.tiling import TILE_SCHEMA
 
+        # both sides one width, or the cogroup re-shuffles the narrower
         return (_declare_parallelism(tiles, *keys).groupBy(*keys)
-                .cogroup(_declare_parallelism(cid_dec, *keys).groupBy(*keys))
+                .cogroup(_declare_parallelism(cid_dec, *keys, width_from=tiles)
+                         .groupBy(*keys))
                 .applyInPandas(rewrite, schema=TILE_SCHEMA))
     finally:
         # the returned plan reads only `tiles` and checkpoints made from

@@ -239,7 +239,9 @@ def build_overview_level(tiles: DataFrame, factor_from_prev: int = 2,
     # exempt from coalescing and satisfies applyInPandas's required
     # distribution — no second exchange. N derives from the input's own
     # partitioning (plans.skew.adaptive_parallelism) so a near-empty
-    # input doesn't pay a constant 2x-cores of Python task round-trips.
+    # input doesn't pay a constant 2x-cores of Python task round-trips
+    # (each ~0.22 s of a slot while every task re-read pyspark.zip's
+    # directory, ~0.05 s with the worker daemon).
     from godal_spark.plans.skew import adaptive_parallelism
 
     parent = parent.repartition(adaptive_parallelism(parent),

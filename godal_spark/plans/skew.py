@@ -35,10 +35,17 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
     plan is spread without asking.
     """
     par = df.sparkSession.sparkContext.defaultParallelism
-    root = df._jdf.queryExecution().executedPlan().getClass().getSimpleName()
-    if root == "AdaptiveSparkPlanExec" or df.rdd.getNumPartitions() < par:
+    if aqe_wrapped(df) or df.rdd.getNumPartitions() < par:
         df = df.repartition(par)
     return df
+
+
+def aqe_wrapped(df: DataFrame) -> bool:
+    """True when AQE wraps df's plan (it has an exchange or a subquery).
+    Then `df.rdd.getNumPartitions()` is not free: it executes the plan's
+    query stages, and the width it reports is AQE's run-time choice."""
+    root = df._jdf.queryExecution().executedPlan().getClass().getSimpleName()
+    return root == "AdaptiveSparkPlanExec"
 
 
 def adaptive_parallelism(df: DataFrame, floor: int = 8) -> int:
@@ -48,14 +55,18 @@ def adaptive_parallelism(df: DataFrame, floor: int = 8) -> int:
     a few MB of tiles coalesce to 1-2 tasks and serialize the kernel,
     measured 19 s -> 2 s on a 4k-tile overview reduce), but a CONSTANT
     2x-cores fan-out is wrong in the other direction for near-empty
-    inputs (64 Python task round-trips over 6 rows, measured ~0.2 s of
-    pure scheduling per stage in the sieve bench). Derive the count from
-    the input's own partitioning instead: small scans (1-2 splits) get
-    `floor`, real tables (many splits / prior shuffles) get the full
-    2x-cores. Scale-adaptive, no extra job."""
-    sc = df.sparkSession.sparkContext
-    return max(floor, min(sc.defaultParallelism * 2,
-                          df.rdd.getNumPartitions() * 4))
+    inputs (64 Python tasks over 6 rows, measured ~0.2 s a stage in the
+    sieve bench). That cost was not scheduling: on Python < 3.12 each
+    Python task re-read pyspark.zip's directory a dozen times or more
+    until godal_spark.worker_daemon; an empty Python task now holds a
+    slot ~0.05 s, against ~0.22 s before (no-op mapInArrow, 4-core
+    host). Derive the count from the input's own partitioning instead:
+    small scans (1-2 splits) get `floor`, real tables (many splits) get
+    the full 2x-cores, and so does a plan AQE wraps (a prior shuffle),
+    without asking. Runs no job."""
+    full = df.sparkSession.sparkContext.defaultParallelism * 2
+    width = full if aqe_wrapped(df) else min(full, df.rdd.getNumPartitions() * 4)
+    return max(floor, width)
 
 
 def salted_join(large: DataFrame, small: DataFrame, on: str = "cell",

@@ -100,8 +100,11 @@ def get_spark(
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     b = SparkSession.builder
     if not under_submit:
+        # the daemon module must be importable when the daemon starts;
+        # spark-submit's --py-files reach a worker only per task, later
         b = (b.master(master)
              .config("spark.executorEnv.PYTHONPATH", repo_root)
+             .config("spark.python.daemon.module", "godal_spark.worker_daemon")
              .config("spark.executor.memory", executor_mem))
     b = (b
         .appName(app_name)

@@ -805,3 +805,32 @@ def test_sieve_tiles_tie_break_smaller_root(spark):
     got = _mosaic(_sieve_both_paths(tiles, 2).values(), arr)
     assert got[3, 8] == 2 and got[7, 0] == 2
     assert np.array_equal(got, PZ.sieve_array(arr, 2))
+
+
+def test_declare_parallelism_runs_no_job_on_a_shuffled_plan(spark, jobs_of):
+    """Sieve's cogroup sizes its tiles side with no width_from: a plan
+    with an exchange gets the full width without running its stages."""
+    from godal_spark.operators import polygonize as PZ
+
+    shuffled = spark.range(100).repartition(3, "id").groupBy("id").count()
+    n, out = jobs_of(lambda: PZ._declare_parallelism(shuffled, "id"))
+    assert n == 0
+    width = max(8, 4 * spark.sparkContext.defaultParallelism)
+    assert out._jdf.queryExecution().logical().toString().startswith(
+        f"'RepartitionByExpression ['id], {width}\n")
+
+
+def test_sieve_cogroup_sides_share_one_width(spark):
+    """The fallback's rewrite cogroup repartitions both sides to one
+    width, so Spark adds no exchange to co-partition them: a tiles
+    input with an exchange gets the full width, and the decisions'
+    checkpoint must follow it."""
+    from godal_spark.operators import polygonize as PZ, tiling as TL
+
+    images = datagen.images_df(spark, [
+        datagen.image_row("sv", _toy_sieve_raster(), "raw8")])
+    tiles = TL.explode_tiles(images, bw=8, bh=8).repartition(3, "block_x")
+    out = PZ.sieve_tiles(tiles, 5, max_border_edges=0)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapCoGroupsInPandas" in plan
+    assert "ENSURE_REQUIREMENTS" not in plan

@@ -57,3 +57,47 @@ def test_host_cpus_is_the_affinity_count():
 def test_running_session_uses_the_host_sized_heap(spark):
     want = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or session.driver_mem_default()
     assert spark.sparkContext.getConf().get("spark.driver.memory") == want
+
+
+def _one_task(spark, fn):
+    """fn()'s string from inside one mapInArrow task."""
+    def run(batches):
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({"out": [fn()]})
+
+    return spark.range(1, numPartitions=1).mapInArrow(run, "out string") \
+        .collect()[0].out
+
+
+def test_python_workers_run_the_worker_daemon(spark):
+    def main_module():
+        import sys
+
+        return sys.modules["__main__"].__spec__.name
+
+    assert _one_task(spark, main_module) == "godal_spark.worker_daemon"
+
+
+def test_py_file_added_mid_session_is_importable(spark, tmp_path):
+    """A zip shipped with addPyFile after tasks have run is importable by
+    the next task (the contract entry_queries._ensure_workers_can_import
+    relies on): the daemon's import cache must not hide a new archive."""
+    import uuid
+    import zipfile
+
+    _one_task(spark, lambda: "warm")
+    name = f"pyfile_probe_{uuid.uuid4().hex}"
+    path = tmp_path / f"{name}.zip"
+    with zipfile.ZipFile(path, "w") as zf:
+        zf.writestr(f"{name}.py", "ANSWER = 'from the zip'\n")
+    spark.sparkContext.addPyFile(str(path))
+
+    def load():
+        import importlib
+
+        return importlib.import_module(name).ANSWER
+
+    assert _one_task(spark, load) == "from the zip"

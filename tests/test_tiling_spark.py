@@ -168,3 +168,18 @@ def test_python_heavy_stages_declare_parallelism(spark):
         RZ.rasterize_tiles(fps, te=(0, 0, 8, 8), ts=(8, 8), bw=4, bh=4))
     # round-5 export stage follows the same rule
     assert has_repartition(tiling.cog_write(tiles, tile_size=4))
+
+
+def test_adaptive_parallelism_runs_no_job_on_a_shuffled_plan(spark, jobs_of):
+    """Under AQE, getNumPartitions() executes the stages of a plan with an
+    exchange; such a plan gets the full 2x-cores without asking, and an
+    overview level built on it runs no job before its caller's."""
+    from godal_spark.plans.skew import adaptive_parallelism
+
+    shuffled = spark.range(100).repartition(3, "id").groupBy("id").count()
+    n, width = jobs_of(lambda: adaptive_parallelism(shuffled))
+    assert (n, width) == (0, max(8, 2 * spark.sparkContext.defaultParallelism))
+    arr = np.arange(64, dtype=np.uint8).reshape(8, 8)
+    images = datagen.images_df(spark, [datagen.image_row("p", arr, "raw8")])
+    tiles = tiling.explode_tiles(images, bw=4, bh=4).repartition(3, "block_x")
+    assert jobs_of(lambda: tiling.build_overview_level(tiles, 2, block=4))[0] == 0
