@@ -37,12 +37,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from godal_spark.entry_queries import QUERIES
+    from godal_spark.entry_queries import REGISTRY
 
-    return dict(QUERIES)
+    return {name: fn for name, fn, _ in REGISTRY}
 
 
 def oracle_sql() -> dict[str, str]:
-    from godal_spark.entry_queries import ORACLES
+    from godal_spark.entry_queries import REGISTRY
 
-    return dict(ORACLES)
+    return {name: sql for name, _, sql in REGISTRY}

@@ -1347,8 +1347,10 @@ def q_dedup_clusters(spark, sf_dir):
     """Transitive closure over a duplicate-pair graph (the clustering
     tail of every dedup family: a pair list alone can't drop documents
     — survivors come from component labels). Chain components of
-    diameter 4 over the embeddings ids force multi-hop pointer doubling;
-    the oracle derives each node's component label in closed form."""
+    diameter 4 over the embeddings ids: multi-hop closure, on the driver
+    union-find at this size (pointer doubling above
+    driver_side.MAX_ROWS); the oracle derives each node's component
+    label in closed form."""
     _ensure_workers_can_import(spark)
     from godal_spark.operators import dedup as DD
 
@@ -3394,172 +3396,91 @@ FROM pts GROUP BY ball ORDER BY ball
 # registry
 # ---------------------------------------------------------------------------
 
-QUERIES = {
-    # Registry order = driver verification order: the correctness gate
-    # checks the FIRST 50 entries only, and rounds 1-5 grew the registry
-    # past the cap — everything after color_relief had never appeared in
-    # a driver artifact (round-5 verdict #1). The 29 previously-unchecked
-    # entries therefore come FIRST; the long-verified round-1/2 block
-    # follows. Name->function mapping is unchanged.
-    "crs_3857": q_crs_3857,
-    "crs_world": q_crs_world,
-    "geom_overlay": q_geom_overlay,
-    "gcps_fit": q_gcps_fit,
-    "reproject_bounds": q_reproject_bounds,
-    "vector_translate": q_vector_translate,
-    "reproject_layer": q_reproject_layer,
-    "feature_crud": q_feature_crud,
-    "warp_into": q_warp_into,
-    "lineage_resume": q_lineage_resume,
-    "catalog_lod": q_catalog_lod,
-    "token_bpe": q_token_bpe,
-    "fingerprint": q_fingerprint,
-    "crs_osgb": q_crs_osgb,
-    "cog_roundtrip": q_cog_roundtrip,
-    "tiff_ingest": q_tiff_ingest,
-    "cog_jpeg": q_cog_jpeg,
-    "repetition": q_repetition,
-    "decontaminate": q_decontaminate,
-    "pii_scrub": q_pii_scrub,
-    "buildvrt": q_buildvrt,
-    "geom_boolean": q_geom_boolean,
-    "vector_roundtrip": q_vector_roundtrip,
-    "scale_offset_stats": q_scale_offset_stats,
-    "crs_bounds": q_crs_bounds,
-    "gcps_affine": q_gcps_affine,
-    "salted_agg": q_salted_agg,
-    "kmeans_clusters": q_kmeans_clusters,
-    "video_avi": q_video_avi,
-    "block_grid": q_block_grid,
-    "overview_plan": q_overview_plan,
-    "overview_tiles": q_overview_tiles,
-    "pip_count": q_pip_count,
-    "knn": q_knn,
-    "raster_stats": q_raster_stats,
-    "histogram": q_histogram,
-    "rasterize": q_rasterize,
-    "rasterize_tiles": q_rasterize_tiles,
-    "sieve": q_sieve,
-    "warp_mode": q_warp_mode,
-    "jpeg_ingest": q_jpeg_ingest,
-    "substring_dedup": q_substring_dedup,
-    "dedup_clusters": q_dedup_clusters,
-    "stream_dedup": q_stream_dedup,
-    "translate_resize": q_translate_resize,
-    "bounds": q_bounds,
-    "geom_area": q_geom_area,
-    "sql_q1": q_sql_q1,
-    "dedup_exact": q_dedup_exact,
-    "text_stats": q_text_stats,
-    "ann_topk": q_ann_topk,
-    "events_window": q_events_window,
-    "spatial_filter": q_spatial_filter,
-    "stats_approx": q_stats_approx,
-    "events_json": q_events_json,
-    "sql_window": q_sql_window,
-    "dedup_minhash": q_dedup_minhash,
-    "events_sessions": q_events_sessions,
-    "warp_mosaic": q_warp_mosaic,
-    "overview_pixels": q_overview_pixels,
-    "translate_window": q_translate_window,
-    "knn_fine": q_knn_fine,
-    "quality_filter": q_quality_filter,
-    "polygonize_diag": q_polygonize_diag,
-    "polygonize_dist": q_polygonize_dist,
-    "simhash_pairs": q_simhash_pairs,
-    "ann_ivf": q_ann_ivf,
-    "lang_id": q_lang_id,
-    "image_phash": q_image_phash,
-    "dem_plane": q_dem_plane,
-    "viewshed_modes": q_viewshed_modes,
-    "grid_linear": q_grid_linear,
-    "fillnodata": q_fillnodata,
-    "nearblack": q_nearblack,
-    "audio_wav": q_audio_wav,
-    "build_vrt": q_build_vrt,
-    "scale_offset": q_scale_offset,
-    "geom_containers": q_geom_containers,
-    "color_relief": q_color_relief,
-}
-
-ORACLES = {
-    "block_grid": SQL_BLOCK_GRID,
-    "overview_plan": SQL_OVERVIEW_PLAN,
-    "overview_tiles": SQL_OVERVIEW_TILES,
-    "pip_count": SQL_PIP_COUNT,
-    "knn": SQL_KNN,
-    "raster_stats": SQL_RASTER_STATS,
-    "histogram": SQL_HISTOGRAM,
-    "rasterize": SQL_RASTERIZE,
-    "rasterize_tiles": SQL_RASTERIZE_TILES,
-    "sieve": SQL_SIEVE,
-    "warp_mode": SQL_WARP_MODE,
-    "jpeg_ingest": SQL_JPEG_INGEST,
-    "substring_dedup": SQL_SUBSTRING_DEDUP,
-    "dedup_clusters": SQL_DEDUP_CLUSTERS,
-    "stream_dedup": SQL_STREAM_DEDUP,
-    "translate_resize": SQL_TRANSLATE_RESIZE,
-    "bounds": SQL_BOUNDS,
-    "geom_area": SQL_GEOM_AREA,
-    "sql_q1": SQL_Q1,
-    "dedup_exact": SQL_DEDUP_EXACT,
-    "text_stats": SQL_TEXT_STATS,
-    "ann_topk": SQL_ANN_TOPK,
-    "events_window": SQL_EVENTS_WINDOW,
-    "spatial_filter": SQL_SPATIAL_FILTER,
-    "stats_approx": SQL_STATS_APPROX,
-    "events_json": SQL_EVENTS_JSON,
-    "sql_window": SQL_SQL_WINDOW,
-    "dedup_minhash": SQL_DEDUP_MINHASH,
-    "events_sessions": SQL_EVENTS_SESSIONS,
-    "warp_mosaic": SQL_WARP_MOSAIC,
-    "overview_pixels": SQL_OVERVIEW_PIXELS,
-    "translate_window": SQL_TRANSLATE_WINDOW,
-    "knn_fine": SQL_KNN,
-    "quality_filter": SQL_QUALITY_FILTER,
-    "polygonize_diag": SQL_POLYGONIZE_DIAG,
-    "polygonize_dist": SQL_POLYGONIZE_DIAG,
-    "image_phash": SQL_IMAGE_PHASH,
-    "simhash_pairs": SQL_SIMHASH_PAIRS,
-    "ann_ivf": SQL_ANN_IVF,
-    "lang_id": SQL_LANG_ID,
-    "dem_plane": SQL_DEM_PLANE,
-    "viewshed_modes": SQL_VIEWSHED_MODES,
-    "grid_linear": SQL_GRID_LINEAR,
-    "fillnodata": SQL_FILLNODATA,
-    "nearblack": SQL_NEARBLACK,
-    "audio_wav": SQL_AUDIO_WAV,
-    "build_vrt": SQL_BUILD_VRT,
-    "scale_offset": SQL_SCALE_OFFSET,
-    "geom_containers": SQL_GEOM_CONTAINERS,
-    "color_relief": SQL_COLOR_RELIEF,
-    "crs_3857": SQL_CRS_3857,
-    "crs_world": SQL_CRS_WORLD,
-    "geom_overlay": SQL_GEOM_OVERLAY,
-    "gcps_fit": SQL_GCPS_FIT,
-    "reproject_bounds": SQL_REPROJECT_BOUNDS,
-    "vector_translate": SQL_VECTOR_TRANSLATE,
-    "reproject_layer": SQL_REPROJECT_LAYER,
-    "feature_crud": SQL_FEATURE_CRUD,
-    "warp_into": SQL_WARP_INTO,
-    "lineage_resume": SQL_LINEAGE_RESUME,
-    "catalog_lod": SQL_CATALOG_LOD,
-    "token_bpe": SQL_TOKEN_BPE,
-    "fingerprint": SQL_FINGERPRINT,
-    "crs_osgb": SQL_CRS_OSGB,
-    "cog_roundtrip": SQL_COG_ROUNDTRIP,
-    "tiff_ingest": SQL_TIFF_INGEST,
-    "cog_jpeg": SQL_COG_JPEG,
-    "repetition": SQL_REPETITION,
-    "decontaminate": SQL_DECONTAMINATE,
-    "pii_scrub": SQL_PII_SCRUB,
-    "buildvrt": SQL_BUILDVRT,
-    "geom_boolean": SQL_GEOM_BOOLEAN,
-    "vector_roundtrip": SQL_VECTOR_ROUNDTRIP,
-    "scale_offset_stats": SQL_SCALE_OFFSET_STATS,
-    "crs_bounds": SQL_CRS_BOUNDS,
-    "gcps_affine": SQL_GCPS_AFFINE,
-    "salted_agg": SQL_SALTED_AGG,
-    "kmeans_clusters": SQL_KMEANS_CLUSTERS,
-    "video_avi": SQL_VIDEO_AVI,
-}
+REGISTRY = (
+    # (name, query, oracle SQL) in driver verification order: the
+    # correctness gate checks the FIRST 50 entries only, and rounds 1-5
+    # grew the registry past the cap — everything after color_relief had
+    # never appeared in a driver artifact (round-5 verdict #1). The 29
+    # previously-unchecked entries therefore come FIRST; the
+    # long-verified round-1/2 block follows. docs/COVERAGE.md lists the
+    # window (tests/test_oracle_parity.py checks it).
+    ("crs_3857", q_crs_3857, SQL_CRS_3857),
+    ("crs_world", q_crs_world, SQL_CRS_WORLD),
+    ("geom_overlay", q_geom_overlay, SQL_GEOM_OVERLAY),
+    ("gcps_fit", q_gcps_fit, SQL_GCPS_FIT),
+    ("reproject_bounds", q_reproject_bounds, SQL_REPROJECT_BOUNDS),
+    ("vector_translate", q_vector_translate, SQL_VECTOR_TRANSLATE),
+    ("reproject_layer", q_reproject_layer, SQL_REPROJECT_LAYER),
+    ("feature_crud", q_feature_crud, SQL_FEATURE_CRUD),
+    ("warp_into", q_warp_into, SQL_WARP_INTO),
+    ("lineage_resume", q_lineage_resume, SQL_LINEAGE_RESUME),
+    ("catalog_lod", q_catalog_lod, SQL_CATALOG_LOD),
+    ("token_bpe", q_token_bpe, SQL_TOKEN_BPE),
+    ("fingerprint", q_fingerprint, SQL_FINGERPRINT),
+    ("crs_osgb", q_crs_osgb, SQL_CRS_OSGB),
+    ("cog_roundtrip", q_cog_roundtrip, SQL_COG_ROUNDTRIP),
+    ("tiff_ingest", q_tiff_ingest, SQL_TIFF_INGEST),
+    ("cog_jpeg", q_cog_jpeg, SQL_COG_JPEG),
+    ("repetition", q_repetition, SQL_REPETITION),
+    ("decontaminate", q_decontaminate, SQL_DECONTAMINATE),
+    ("pii_scrub", q_pii_scrub, SQL_PII_SCRUB),
+    ("buildvrt", q_buildvrt, SQL_BUILDVRT),
+    ("geom_boolean", q_geom_boolean, SQL_GEOM_BOOLEAN),
+    ("vector_roundtrip", q_vector_roundtrip, SQL_VECTOR_ROUNDTRIP),
+    ("scale_offset_stats", q_scale_offset_stats, SQL_SCALE_OFFSET_STATS),
+    ("crs_bounds", q_crs_bounds, SQL_CRS_BOUNDS),
+    ("gcps_affine", q_gcps_affine, SQL_GCPS_AFFINE),
+    ("salted_agg", q_salted_agg, SQL_SALTED_AGG),
+    ("kmeans_clusters", q_kmeans_clusters, SQL_KMEANS_CLUSTERS),
+    ("video_avi", q_video_avi, SQL_VIDEO_AVI),
+    ("block_grid", q_block_grid, SQL_BLOCK_GRID),
+    ("overview_plan", q_overview_plan, SQL_OVERVIEW_PLAN),
+    ("overview_tiles", q_overview_tiles, SQL_OVERVIEW_TILES),
+    ("pip_count", q_pip_count, SQL_PIP_COUNT),
+    ("knn", q_knn, SQL_KNN),
+    ("raster_stats", q_raster_stats, SQL_RASTER_STATS),
+    ("histogram", q_histogram, SQL_HISTOGRAM),
+    ("rasterize", q_rasterize, SQL_RASTERIZE),
+    ("rasterize_tiles", q_rasterize_tiles, SQL_RASTERIZE_TILES),
+    ("sieve", q_sieve, SQL_SIEVE),
+    ("warp_mode", q_warp_mode, SQL_WARP_MODE),
+    ("jpeg_ingest", q_jpeg_ingest, SQL_JPEG_INGEST),
+    ("substring_dedup", q_substring_dedup, SQL_SUBSTRING_DEDUP),
+    ("dedup_clusters", q_dedup_clusters, SQL_DEDUP_CLUSTERS),
+    ("stream_dedup", q_stream_dedup, SQL_STREAM_DEDUP),
+    ("translate_resize", q_translate_resize, SQL_TRANSLATE_RESIZE),
+    ("bounds", q_bounds, SQL_BOUNDS),
+    ("geom_area", q_geom_area, SQL_GEOM_AREA),
+    ("sql_q1", q_sql_q1, SQL_Q1),
+    ("dedup_exact", q_dedup_exact, SQL_DEDUP_EXACT),
+    ("text_stats", q_text_stats, SQL_TEXT_STATS),
+    ("ann_topk", q_ann_topk, SQL_ANN_TOPK),
+    ("events_window", q_events_window, SQL_EVENTS_WINDOW),
+    ("spatial_filter", q_spatial_filter, SQL_SPATIAL_FILTER),
+    ("stats_approx", q_stats_approx, SQL_STATS_APPROX),
+    ("events_json", q_events_json, SQL_EVENTS_JSON),
+    ("sql_window", q_sql_window, SQL_SQL_WINDOW),
+    ("dedup_minhash", q_dedup_minhash, SQL_DEDUP_MINHASH),
+    ("events_sessions", q_events_sessions, SQL_EVENTS_SESSIONS),
+    ("warp_mosaic", q_warp_mosaic, SQL_WARP_MOSAIC),
+    ("overview_pixels", q_overview_pixels, SQL_OVERVIEW_PIXELS),
+    ("translate_window", q_translate_window, SQL_TRANSLATE_WINDOW),
+    ("knn_fine", q_knn_fine, SQL_KNN),
+    ("quality_filter", q_quality_filter, SQL_QUALITY_FILTER),
+    ("polygonize_diag", q_polygonize_diag, SQL_POLYGONIZE_DIAG),
+    ("polygonize_dist", q_polygonize_dist, SQL_POLYGONIZE_DIAG),
+    ("simhash_pairs", q_simhash_pairs, SQL_SIMHASH_PAIRS),
+    ("ann_ivf", q_ann_ivf, SQL_ANN_IVF),
+    ("lang_id", q_lang_id, SQL_LANG_ID),
+    ("image_phash", q_image_phash, SQL_IMAGE_PHASH),
+    ("dem_plane", q_dem_plane, SQL_DEM_PLANE),
+    ("viewshed_modes", q_viewshed_modes, SQL_VIEWSHED_MODES),
+    ("grid_linear", q_grid_linear, SQL_GRID_LINEAR),
+    ("fillnodata", q_fillnodata, SQL_FILLNODATA),
+    ("nearblack", q_nearblack, SQL_NEARBLACK),
+    ("audio_wav", q_audio_wav, SQL_AUDIO_WAV),
+    ("build_vrt", q_build_vrt, SQL_BUILD_VRT),
+    ("scale_offset", q_scale_offset, SQL_SCALE_OFFSET),
+    ("geom_containers", q_geom_containers, SQL_GEOM_CONTAINERS),
+    ("color_relief", q_color_relief, SQL_COLOR_RELIEF),
+)

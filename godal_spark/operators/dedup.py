@@ -32,8 +32,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from godal_spark.plans.components import component_roots
 from godal_spark.plans.driver_side import (byte_ceiling, collect_bounded,
-                                           driver_heap, release)
+                                           driver_heap, ordered_like_spark,
+                                           release)
 from godal_spark.plans.skew import spread_small_scan
 
 # ---------------------------------------------------------------------------
@@ -391,15 +393,6 @@ def _chunks(weights: np.ndarray, cap: int):
         lo = hi
 
 
-def _ordered_like_spark(dt) -> bool:
-    """Whether Arrow's sort order of ids of Spark type `dt` is Spark's
-    `<`: integers, and strings under the default binary collation."""
-    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return True
-    return type(dt) is T.StringType and \
-        getattr(dt, "collation", "UTF8_BINARY") == "UTF8_BINARY"
-
-
 def _driver_dedup(tbl, id_col: str, num_hashes: int, bands: int,
                   threshold: float, budget: int):
     """minhash_lsh_dedup's banding, prefilter and exact verify over the
@@ -549,7 +542,7 @@ def minhash_lsh_dedup(docs: DataFrame, *, k: int = 5, num_hashes: int = 64,
     n_rows, n_shingles, n_bytes = (c.value for c in counts)
     heap = driver_heap(docs)
     budget = min(DRIVER_BUDGET, byte_ceiling(heap))
-    if n_bytes < budget and _ordered_like_spark(sig.schema[id_col].dataType):
+    if n_bytes < budget and ordered_like_spark(sig.schema[id_col].dataType):
         tbl = collect_bounded(sig, n_rows)
         out = None if tbl is None else _driver_dedup(
             tbl, id_col, num_hashes, bands, threshold, budget)
@@ -739,8 +732,7 @@ def embedding_dedup(emb: DataFrame, *, id_col: str = "vec_id",
 
 
 def duplicate_clusters(pairs: DataFrame, *, id_a: str = "id_a",
-                       id_b: str = "id_b",
-                       max_iter: int = 25) -> DataFrame:
+                       id_b: str = "id_b") -> DataFrame:
     """Connected components over verified duplicate pairs →
     (id, cluster) with cluster = the component's minimum id.
 
@@ -748,47 +740,12 @@ def duplicate_clusters(pairs: DataFrame, *, id_a: str = "id_a",
     (r3 ADVICE follow-on): two members of an oversized LSH bucket never
     get a DIRECT verified pair — both only paired with the bucket
     representative — but closure over those star edges still places them
-    in one cluster. Distributed min-label propagation with pointer
-    doubling (label[n] ← min over neighbors, then hop compression):
-    O(log diameter) rounds, and a star graph converges in 2 — no driver
-    collect at any scale. Same machinery class as the polygonize border
-    graph (operators/polygonize.py _resolve_roots_distributed)."""
-    e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-    edges = e.unionByName(e.select(F.col("b").alias("a"),
-                                   F.col("a").alias("b"))).distinct()
-    edges = edges.localCheckpoint(eager=True)
-    lab = (edges.select(F.col("a").alias("id"))
-           .distinct().withColumn("lab", F.col("id")))
-    for _ in range(max_iter):
-        # neighbor-min pass
-        nbr = (edges.join(lab.withColumnRenamed("id", "b")
-                          .withColumnRenamed("lab", "nl"), "b")
-               .groupBy("a").agg(F.min("nl").alias("nl"))
-               .withColumnRenamed("a", "id"))
-        new = (lab.join(nbr, "id", "left")
-               .select("id", F.least("lab", F.coalesce("nl", "lab"))
-                       .alias("lab")))
-        # pointer doubling: lab ← lab's own label (hop compression)
-        hop = new.select(F.col("id").alias("lab"),
-                         F.col("lab").alias("ll"))
-        new = (new.join(hop, "lab", "left")
-               .select("id", F.least("lab", F.coalesce("ll", "lab"))
-                       .alias("lab")))
-        new = new.localCheckpoint(eager=True)  # truncate iterative lineage
-        changed = (new.join(lab.withColumnRenamed("lab", "ol"), "id")
-                   .filter(F.col("lab") != F.col("ol")).limit(1).count())
-        lab = new
-        if changed == 0:
-            break
-    else:
-        # error-first: a silent non-converged return would hand back
-        # WRONG cluster labels (neighbor-min + pointer jumping compounds,
-        # so 25 rounds cover any realistic diameter — a 299-hop path
-        # converges well within it; hitting this means the graph is
-        # pathological, not that the answer is approximately right)
-        raise RuntimeError(
-            f"duplicate_clusters: no fixpoint after {max_iter} rounds")
-    return lab.select(F.col("id"), F.col("lab").alias("cluster"))
+    in one cluster. plans.components.component_roots solves it: a
+    driver union-find while the pairs fit driver_side.MAX_ROWS (integer
+    or string ids), distributed pointer doubling beyond, whose one
+    checkpoint the returned labels read."""
+    return component_roots(pairs, id_a, id_b, held=[]).select(
+        "id", F.col("root").alias("cluster"))
 
 
 def embedding_dedup_clusters(emb: DataFrame, **kwargs) -> DataFrame:

@@ -9,13 +9,23 @@ Golden contracts (godal_test.go:2175-2281, 3995-4078):
     their largest neighboring component; mask pixels preserved;
     8-connected diagonal of 10 px survives threshold 3.
 
-Distributed design: the work unit is ONE image band — tiles of an image
-gather to a single task (`groupBy(image_id, band).applyInPandas`). At
-10^12-image scale parallelism comes from image count, and a single
-image/dataset is bounded (the reference's Datasets are in-memory
-rasters), so per-image gather is the right plan; a cross-tile
-border-merge join is only needed for single rasters larger than one
-task's memory, which this engine documents as out of scope for v1.
+Two plans over level-0 tiles:
+  * gathered (`polygonize`): the tiles of one (image_id, band) gather
+    into one task (`groupBy(...).applyInPandas`) and polygonize_array
+    runs on the whole plane. Parallelism comes from the image count;
+    each plane must fit one task's memory.
+  * tiled (`polygonize_tiles`, `sieve_tiles`): no raster is ever
+    gathered. Each tile labels its own components and emits its seam
+    strips (_labeled_tiles); _border_pairs pairs pixels across tile
+    borders into equivalence edges (one component) and adjacency edges
+    (sieve's merge candidates); plans.components.component_roots turns
+    the equivalence edges into roots, on the driver while they fit
+    driver_side.MAX_ROWS and by distributed pointer doubling beyond;
+    then the parts merge per root (dissolved geometry, or the sieve's
+    rewrite).
+
+NaN equals nothing, so every NaN pixel is a 1-px component whose value
+is NaN on both polygonize paths.
 
 Geometry emission: components trace to rectilinear rings (interior-left
 directed edge walk). Components whose 8-conn boundary self-touches
@@ -30,6 +40,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from godal_spark.functions import geom as G
+from godal_spark.plans import driver_side
+from godal_spark.plans.components import _driver_roots, component_roots
 from godal_spark.plans.driver_side import collect_bounded, release
 from godal_spark.plans.skew import aqe_wrapped
 
@@ -340,15 +352,17 @@ def polygonize(tiles: DataFrame, *, eight: bool = False,
                mask_band: int | None = None) -> DataFrame:
     """tiles (level 0) → feature rows, one per connected component.
 
-    Gathers each (image_id, band)'s tiles into one task; see module
-    docstring for why this is the scale-correct plan. Pass the images
-    DataFrame to emit geometries in GEO coordinates (its `gt` joins in
-    broadcast-style); otherwise geometries are in pixel space (y-down).
+    Gathers each (image_id, band)'s tiles into one task (the module
+    docstring's gathered plan; polygonize_tiles never gathers). Pass the
+    images DataFrame to emit geometries in GEO coordinates (its `gt`
+    joins in broadcast-style); otherwise geometries are in pixel space
+    (y-down).
 
     mask_band: the reference's `Mask(band)` option (godal.go:348-369) —
     pixels where that band is ZERO are excluded (GDAL mask semantics);
     overrides the nodata mask. The mask tiles ride along in the same
-    gather (one extra band per group), no extra shuffle.
+    gather (one extra band per group), no extra shuffle. A NaN
+    component's value is NaN.
     """
     from pyspark.sql import functions as F
 
@@ -405,9 +419,19 @@ def polygonize(tiles: DataFrame, *, eight: bool = False,
         bands = data.select("image_id", F.col("band").alias("__grp_band")).distinct()
         mask = mask.join(bands, "image_id")
         both = data.unionByName(mask.select(*data.columns))
-        return both.groupBy("image_id", "__grp_band") \
-                   .applyInPandas(run, schema=FEATURES_SCHEMA)
-    return tiles.groupBy("image_id", "band").applyInPandas(run, schema=FEATURES_SCHEMA)
+        return _nan_value(both.groupBy("image_id", "__grp_band")
+                          .applyInPandas(run, schema=FEATURES_SCHEMA))
+    return _nan_value(tiles.groupBy("image_id", "band")
+                      .applyInPandas(run, schema=FEATURES_SCHEMA))
+
+
+def _nan_value(feats: DataFrame) -> DataFrame:
+    """feats with a null `value` read back as NaN: a component's value
+    is never missing, but pandas' NaN crosses Arrow as null."""
+    from pyspark.sql import functions as F
+
+    return feats.withColumn("value",
+                            F.coalesce("value", F.lit(float("nan"))))
 
 
 # ---------------------------------------------------------------------------
@@ -702,57 +726,6 @@ def _assemble_rectilinear(rings_out, ring_of, kaxis, bx, by):
     return list(polys.values())
 
 
-def _resolve_roots_distributed(edges: DataFrame, held: list[DataFrame],
-                               max_iters: int = 25) -> DataFrame:
-    """Connected components over the border-equivalence graph WITHOUT
-    collecting it: iterative min-label propagation with pointer doubling
-    (root ← root-of-root each round ⇒ O(log diameter) convergence — a
-    1000-tile river chain resolves in ~10 rounds, not 1000). Used when
-    the edge list exceeds the driver union-find guard.
-
-    Each round's checkpoint is released as soon as the next one
-    supersedes it, the symmetric edge checkpoint once the loop ends; the
-    returned labels' checkpoint goes on `held`, which the caller
-    releases after its last read."""
-    from pyspark.sql import functions as F
-
-    sym = edges.unionByName(edges.select(
-        "image_id", "band", F.col("cid_b").alias("cid_a"),
-        F.col("cid_a").alias("cid_b")))
-    sym = sym.localCheckpoint(eager=True)
-    lab = seed = (sym.select("image_id", "band", F.col("cid_a").alias("cid"))
-                  .distinct().withColumn("root", F.col("cid")))
-    for _ in range(max_iters):
-        nmin = (sym.join(lab.select("image_id", "band",
-                                    F.col("cid").alias("cid_b"),
-                                    F.col("root").alias("nroot")),
-                         ["image_id", "band", "cid_b"])
-                .groupBy("image_id", "band", "cid_a")
-                .agg(F.min("nroot").alias("mroot"))
-                .withColumnRenamed("cid_a", "cid"))
-        new = (lab.join(nmin, ["image_id", "band", "cid"], "left")
-               .select("image_id", "band", "cid",
-                       F.least("root", F.coalesce("mroot", "root")).alias("root")))
-        hop = new.select("image_id", "band", F.col("cid").alias("root"),
-                         F.col("root").alias("rr"))
-        new = (new.join(hop, ["image_id", "band", "root"], "left")
-               .select("image_id", "band", "cid",
-                       F.coalesce("rr", "root").alias("root")))
-        new = new.localCheckpoint(eager=True)  # truncate iterative lineage
-        changed = (new.join(lab.withColumnRenamed("root", "oroot"),
-                            ["image_id", "band", "cid"])
-                   .filter(F.col("root") != F.col("oroot")).count())
-        if lab is not seed:
-            release(lab)
-        lab = new
-        if changed == 0:
-            break
-    if lab is not seed:
-        release(sym)
-        held.append(lab)
-    return lab
-
-
 def _declare_parallelism(df: DataFrame, *keys: str,
                          width_from: DataFrame | None = None) -> DataFrame:
     """Explicit keyed repartition before a Python-heavy applyInPandas:
@@ -778,53 +751,16 @@ def _declare_parallelism(df: DataFrame, *keys: str,
     return df.repartition(max(8, width), *keys)
 
 
-def _driver_roots(edges) -> dict:
-    """Union-find over equivalence edges, (image_id, band, cid_a, cid_b)
-    tuples, on the driver: {(image_id, band, cid): root} for every cid
-    on an edge. The root is the component's minimum cid, the fixed
-    point of the distributed pointer doubling too."""
-    parent: dict = {}
-
-    def find(k):
-        while parent[k] != k:
-            parent[k] = parent[parent[k]]
-            k = parent[k]
-        return k
-
-    for image_id, band, a, b in edges:
-        ka, kb = (image_id, band, a), (image_id, band, b)
-        parent.setdefault(ka, ka)
-        parent.setdefault(kb, kb)
-        ra, rb = find(ka), find(kb)
-        if ra != rb:
-            lo, hi = (ra, rb) if ra[2] < rb[2] else (rb, ra)
-            parent[hi] = lo
-    return {k: find(k)[2] for k in parent}
-
-
 def _attach_roots(comps: DataFrame, edges: DataFrame,
-                  max_border_edges: int, held: list[DataFrame]) -> DataFrame:
-    """comps + a `root` column from the border-equivalence edge graph:
-    driver union-find while the edge list fits under max_border_edges
-    (one bounded Arrow collect, the map joined back by broadcast), else
-    the fully distributed pointer-doubling propagation — no driver
-    collect at any scale; its label checkpoint goes on `held`. A cid on
-    no edge is its own root."""
+                  held: list[DataFrame]) -> DataFrame:
+    """comps + a `root` column from the border-equivalence edges, by
+    component_roots; a cid on no edge is its own root."""
     from pyspark.sql import functions as F
 
-    meta = collect_bounded(edges, max_border_edges)
-    if meta is None:
-        mdf = _resolve_roots_distributed(edges, held)
-    else:
-        roots = _driver_roots(zip(*(meta.column(c).to_pylist() for c in (
-            "image_id", "band", "cid_a", "cid_b"))))
-        if not roots:
-            return comps.withColumn("root", F.col("cid"))
-        mdf = F.broadcast(comps.sparkSession.createDataFrame(
-            pd.DataFrame([(*k, r) for k, r in roots.items()],
-                         columns=["image_id", "band", "cid", "root"]),
-            "image_id string, band int, cid long, root long"))
-    return (comps.join(mdf, ["image_id", "band", "cid"], "left")
+    roots = component_roots(edges, "cid_a", "cid_b", ("image_id", "band"),
+                            held=held)
+    return (comps.join(roots.withColumnRenamed("id", "cid"),
+                       ["image_id", "band", "cid"], "left")
             .withColumn("root", F.coalesce("root", "cid")))
 
 
@@ -983,8 +919,7 @@ def _border_pairs(strips: DataFrame, eight: bool) -> DataFrame:
 
 def polygonize_tiles(tiles: DataFrame, *, eight: bool = False,
                      use_nodata_mask: bool = True, nodata: float | None = None,
-                     max_geom_parts: int = 256,
-                     max_border_edges: int = 500_000) -> DataFrame:
+                     max_geom_parts: int = 256) -> DataFrame:
     """Distributed polygonize that NEVER gathers an image into one task:
 
       1. per-tile labeling (mapInPandas, the front half shared with
@@ -995,15 +930,12 @@ def polygonize_tiles(tiles: DataFrame, *, eight: bool = False,
       2. border equivalences: the eq pairs of _border_pairs, the seam
          rule sieve_tiles uses too (±1 offsets and tile-corner keys for
          8-connectivity, NaN never equal), in JVM built-ins;
-      3. roots: while the equivalence edges number at most
-         max_border_edges (the metadata rows the driver collects), ONE
-         bounded Arrow collect brings them to the driver, a union-find
-         maps every provisional id to its root (the minimum cid), and
-         a broadcast join attaches the map to the components
-         (_attach_roots). Above the guard (max_border_edges=0 forces
-         it) a fully distributed min-label propagation with pointer
-         doubling (O(log diameter) rounds) runs instead — no driver
-         collect at any scale;
+      3. roots: plans.components.component_roots maps every
+         provisional id to its root (the minimum cid) and a join
+         attaches the map to the components (_attach_roots): while the
+         equivalence edges number at most driver_side.MAX_ROWS, one
+         bounded Arrow collect, a driver union-find and a broadcast
+         join; above it, distributed pointer doubling;
       4. merge: one row per root — n_pixels summed, area summed, and the
          part rings DISSOLVED across tile borders (unit-edge
          decomposition on the integer pixel grid; shared border runs are
@@ -1015,7 +947,8 @@ def polygonize_tiles(tiles: DataFrame, *, eight: bool = False,
     Runs eagerly (phases 2-3 require an action); on the driver path
     that is the checkpoint job, the collect's two, the root map's
     broadcast and the merge's two. The phase-1 checkpoint is dropped
-    before the call returns.
+    before the call returns. A NaN component's value is NaN (Arrow hands
+    it back as null; one projection restores it).
     """
     from pyspark.sql import functions as F
 
@@ -1095,12 +1028,12 @@ def polygonize_tiles(tiles: DataFrame, *, eight: bool = False,
                            "n_pixels", "wkb", "area")
         edges = _border_pairs(_strips(raw), eight).filter(F.col("eq")) \
             .drop("eq")
-        comps = _attach_roots(comps, edges, max_border_edges, held)
+        comps = _attach_roots(comps, edges, held)
         out = _declare_parallelism(comps, "image_id", "band", "root",
                                    width_from=raw) \
             .groupBy("image_id", "band", "root").applyInPandas(
             merge, schema=_FEATURES2_SCHEMA)
-        return out.localCheckpoint(eager=True)
+        return _nan_value(out.localCheckpoint(eager=True))
     finally:
         for c in held:
             release(c)
@@ -1208,8 +1141,8 @@ def _rewrite_tiles(tiles: DataFrame, decisions: dict, eight: bool,
 
 
 def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
-                use_nodata_mask: bool = True, nodata: float | None = None,
-                max_border_edges: int = 500_000) -> DataFrame:
+                use_nodata_mask: bool = True,
+                nodata: float | None = None) -> DataFrame:
     """Distributed SieveFilter: components smaller than `threshold`
     (GLOBAL size, summed across tile borders) take the ORIGINAL value of
     their largest neighboring component — sieve_array semantics lifted
@@ -1225,17 +1158,18 @@ def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
          values across a seam → EQUIVALENCE edges (same component),
          different values → ADJACENCY edges (merge candidates);
       3. while the metadata — component rows, intra-tile adjacency and
-         the border pairs — numbers at most max_border_edges rows, ONE
+         the border pairs — numbers at most driver_side.MAX_ROWS, ONE
          bounded Arrow collect brings it to the driver, which solves
          roots, global sizes and the merge decisions in Python
-         (_sieve_decisions), and the rewrite is ONE map stage over the
-         tiles with the decisions broadcast (_rewrite_tiles): the
-         checkpoint job, the collect's two, then the caller's action;
-      4. above the guard (max_border_edges=0 forces it) the decisions
-         stay distributed: the border pairs are checkpointed, roots come
-         from _attach_roots (polygonize's: driver union-find while the
-         equivalence edges alone fit under max_border_edges, pointer
-         doubling beyond), global sizes by a groupBy(root) sum, the
+         (_sieve_decisions, roots by component_roots' union-find), and
+         the rewrite is ONE map stage over the tiles with the decisions
+         broadcast (_rewrite_tiles): the checkpoint job, the collect's
+         two, then the caller's action;
+      4. above the bound the decisions stay distributed: the border
+         pairs are checkpointed, roots come from _attach_roots
+         (component_roots: the driver union-find while the equivalence
+         edges alone fit, pointer doubling beyond), global sizes by a
+         groupBy(root) sum, the
          decisions by a per-small-root max_by aggregation (sizes fixed +
          values original for the whole pass make smallest-first order
          irrelevant), and a cogrouped applyInPandas relabels each
@@ -1288,7 +1222,7 @@ def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
                    "image_id", "band", F.col("cid_a").alias("cid"), "cid_b",
                    F.lit(0.0).alias("value"),
                    F.lit(0).cast("long").alias("n_pixels"))),
-            max_border_edges)
+            driver_side.MAX_ROWS)
         if meta is not None:
             decisions = _sieve_decisions(meta, threshold)
             if not decisions:
@@ -1306,7 +1240,7 @@ def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
         edges_adj = pairs.filter(~F.col("eq")).drop("eq") \
                          .unionByName(adj_local)
 
-        comps = _attach_roots(comps, edges_eq, max_border_edges, held)
+        comps = _attach_roots(comps, edges_eq, held)
         cidmap = comps.select("image_id", "band", "cid", "root")
         stats = comps.groupBy("image_id", "band", "root").agg(
             F.sum("n_pixels").alias("size"), F.min("value").alias("value"))

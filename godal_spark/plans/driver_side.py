@@ -10,6 +10,12 @@ bound each operator keeps its distributed plan.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
+
+# Metadata rows an operator may collect to decide on the driver
+# (polygonize and sieve metadata, component edges); past it the
+# distributed plan runs. Tests set it to 0 to force that plan.
+MAX_ROWS = 500_000
 
 
 def collect_bounded(df: DataFrame, max_rows: int):
@@ -19,6 +25,16 @@ def collect_bounded(df: DataFrame, max_rows: int):
     partition-by-partition take (one job per probe round)."""
     tbl = df.limit(max_rows + 1).toArrow()
     return None if tbl.num_rows > max_rows else tbl
+
+
+def ordered_like_spark(dt) -> bool:
+    """Whether ids of Spark type `dt` order on the driver as Spark's `<`
+    orders them, both Arrow's sort and Python's `<` over the collected
+    values: integers, and strings under the default binary collation."""
+    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        return True
+    return type(dt) is T.StringType and \
+        getattr(dt, "collation", "UTF8_BINARY") == "UTF8_BINARY"
 
 
 def byte_ceiling(max_heap: int) -> int:

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from godal_spark import datagen
 from godal_spark.functions import geom as G
 from godal_spark.operators import rasterize as RZ, vector as V
+from godal_spark.plans import driver_side
 
 SQ = G.box(100, 0, 101, 1)
 GT3 = [99.1, 1, 0, 1.9, 0, -1]  # 3x3 grid, extent 99.1,-0.9 → 102.1,1.9
@@ -160,10 +161,11 @@ def test_polygonize_tiles_matches_gathered(spark, eight, nan_seams):
     dist = PZ.polygonize_tiles(tiles, eight=eight).collect()
 
     def feats(rows):
-        # a NaN value leaves the Arrow batch as null on both paths;
-        # -1 (no real value) makes the multisets sort and compare
-        return sorted((-1.0 if r.value is None or math.isnan(r.value)
-                       else r.value, r.n_pixels) for r in rows)
+        # a NaN component's value is NaN on both paths; -1 (no real
+        # value) makes the multisets sort and compare
+        assert all(r.value is not None for r in rows)
+        return sorted((-1.0 if math.isnan(r.value) else r.value, r.n_pixels)
+                      for r in rows)
     gm, dm = feats(gathered), feats(dist)
     assert gm == dm
     if nan_seams:
@@ -261,8 +263,8 @@ def test_polygonize_sieve_job_budget(spark, jobs_of):
         f"sieve_tiles(...).collect() ran {n} jobs"
 
 
-def test_polygonize_tiles_distributed_root_resolution(spark):
-    """Force the distributed pointer-doubling path (max_border_edges=0):
+def test_polygonize_tiles_distributed_root_resolution(spark, monkeypatch):
+    """Force the distributed pointer-doubling path (MAX_ROWS = 0):
     must match the gathered result exactly, including a long chain
     component (stress for propagation convergence)."""
     from godal_spark.operators import polygonize as PZ, tiling as TL
@@ -274,7 +276,8 @@ def test_polygonize_tiles_distributed_root_resolution(spark):
     images = datagen.images_df(spark, [datagen.image_row("chain", arr, "raw8")])
     tiles = TL.explode_tiles(images, bw=4, bh=4)
     gathered = PZ.polygonize(tiles, eight=False).collect()
-    dist = PZ.polygonize_tiles(tiles, eight=False, max_border_edges=0).collect()
+    monkeypatch.setattr(driver_side, "MAX_ROWS", 0)
+    dist = PZ.polygonize_tiles(tiles, eight=False).collect()
     assert sorted((r.value, r.n_pixels) for r in gathered) == \
         sorted((r.value, r.n_pixels) for r in dist)
     chain = [r for r in dist if r.value == 7.0]
@@ -285,25 +288,31 @@ def _cached_rdd_ids(spark) -> set:
     return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
 
-@pytest.mark.parametrize("op", ["polygonize", "sieve"])
-def test_distributed_roots_release_checkpoints(spark, op):
-    """max_border_edges=0 runs pointer doubling: its symmetric edge
+@pytest.mark.parametrize("op", ["polygonize", "sieve", "clusters"])
+def test_distributed_roots_release_checkpoints(spark, monkeypatch, op):
+    """MAX_ROWS = 0 runs pointer doubling: its symmetric edge
     checkpoint and every round's label checkpoint are released before
     the call returns, so the one checkpoint the returned plan reads (the
-    polygonize output, the sieve decisions) is the only new block set
-    left in executor storage."""
-    from godal_spark.operators import polygonize as PZ, tiling as TL
+    polygonize output, the sieve decisions, the cluster labels) is the
+    only new block set left in executor storage."""
+    from godal_spark.operators import dedup as DD, polygonize as PZ, \
+        tiling as TL
 
-    if op == "polygonize":
-        arr, call = _toy_polygonize_raster(), \
-            lambda t: PZ.polygonize_tiles(t, max_border_edges=0)
+    if op == "clusters":
+        data = spark.createDataFrame([(2, 5), (5, 7), (7, 3), (20, 21)],
+                                     "id_a long, id_b long")
+        call = DD.duplicate_clusters
     else:
-        arr, call = _toy_sieve_raster(), \
-            lambda t: PZ.sieve_tiles(t, 5, max_border_edges=0)
-    images = datagen.images_df(spark, [datagen.image_row("ck", arr, "raw8")])
-    tiles = TL.explode_tiles(images, bw=8, bh=8)
+        if op == "polygonize":
+            arr, call = _toy_polygonize_raster(), PZ.polygonize_tiles
+        else:
+            arr, call = _toy_sieve_raster(), lambda t: PZ.sieve_tiles(t, 5)
+        images = datagen.images_df(spark, [
+            datagen.image_row("ck", arr, "raw8")])
+        data = TL.explode_tiles(images, bw=8, bh=8)
+    monkeypatch.setattr(driver_side, "MAX_ROWS", 0)
     before = _cached_rdd_ids(spark)
-    out = call(tiles)
+    out = call(data)
     left = _cached_rdd_ids(spark) - before
     assert len(left) == 1, f"{op} left {len(left)} cached RDDs: {sorted(left)}"
     assert out.count() > 0
@@ -384,19 +393,26 @@ def _toy_sieve_raster():
     return arr
 
 
-# the default guard (the driver solve) and max_border_edges=0 (the
-# distributed decision chain)
-_SIEVE_PATHS = {"driver": {}, "dist": {"max_border_edges": 0}}
+# driver_side.MAX_ROWS per path: the default bound (the driver solve)
+# and 0 (the distributed decision chain)
+_SIEVE_PATHS = {"driver": driver_side.MAX_ROWS, "dist": 0}
+
+
+def _sieve_on(path, tiles, *args, **kw):
+    """sieve_tiles(tiles, *args, **kw).collect() on one of _SIEVE_PATHS."""
+    from godal_spark.operators import polygonize as PZ
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(driver_side, "MAX_ROWS", _SIEVE_PATHS[path])
+        return PZ.sieve_tiles(tiles, *args, **kw).collect()
 
 
 def _sieve_both_paths(tiles, *args, **kw):
     """sieve_tiles on both paths: their output tiles must be
     byte-identical; returns them as {(block_x, block_y): row}."""
-    from godal_spark.operators import polygonize as PZ
-
     got = {}
-    for name, extra in _SIEVE_PATHS.items():
-        rows = PZ.sieve_tiles(tiles, *args, **kw, **extra).collect()
+    for name in _SIEVE_PATHS:
+        rows = _sieve_on(name, tiles, *args, **kw)
         got[name] = {(r.block_x, r.block_y): r for r in rows}
     a, b = got["driver"], got["dist"]
     assert sorted(a) == sorted(b)
@@ -429,8 +445,7 @@ def test_sieve_tiles_matches_gathered(spark, eight, path):
     tiles = TL.explode_tiles(images, bw=8, bh=8)
     assert tiles.count() == 6
 
-    got = _mosaic(PZ.sieve_tiles(tiles, 5, eight=eight,
-                                 **_SIEVE_PATHS[path]).collect(), arr)
+    got = _mosaic(_sieve_on(path, tiles, 5, eight=eight), arr)
     want = PZ.sieve_array(arr, 5, eight=eight)
     assert np.array_equal(got, want), f"eight={eight}\n{got}\n{want}"
     # the straddling 6-px run survived; the speck and the 4-px blob died
@@ -458,7 +473,7 @@ def test_sieve_tiles_chain_and_masked(spark):
 
 def test_sieve_tiles_untouched_passthrough_and_dist_path(spark):
     """Rasters with no small components pass through byte-identical;
-    the forced-distributed root path (max_border_edges=0) agrees with
+    the forced-distributed root path (MAX_ROWS = 0) agrees with
     the driver union-find path."""
     from godal_spark.operators import polygonize as PZ, tiling as TL
 
@@ -477,20 +492,22 @@ def test_sieve_tiles_fallback_keeps_driver_roots(spark, monkeypatch):
     """Above the guard, the sieve's roots still come from the driver
     union-find while the equivalence edges alone fit under it. The toy
     raster has 27 metadata rows and 9 equivalence edges, so
-    max_border_edges=12 runs the distributed decisions on driver roots:
+    MAX_ROWS = 12 runs the distributed decisions on driver roots:
     neither the driver solve nor pointer doubling may run, and the
     result is sieve_array's."""
     from godal_spark.operators import polygonize as PZ, tiling as TL
+    from godal_spark.plans import components as CC
 
     def wrong_path(*args, **kw):
-        raise AssertionError("max_border_edges=12 took the wrong path")
+        raise AssertionError("MAX_ROWS = 12 took the wrong path")
 
     monkeypatch.setattr(PZ, "_sieve_decisions", wrong_path)
-    monkeypatch.setattr(PZ, "_resolve_roots_distributed", wrong_path)
+    monkeypatch.setattr(CC, "_distributed_roots", wrong_path)
+    monkeypatch.setattr(driver_side, "MAX_ROWS", 12)
     arr = _toy_sieve_raster()
     images = datagen.images_df(spark, [datagen.image_row("sv", arr, "raw8")])
     tiles = TL.explode_tiles(images, bw=8, bh=8)
-    got = _mosaic(PZ.sieve_tiles(tiles, 5, max_border_edges=12).collect(), arr)
+    got = _mosaic(PZ.sieve_tiles(tiles, 5).collect(), arr)
     assert np.array_equal(got, PZ.sieve_array(arr, 5))
 
 
@@ -820,7 +837,7 @@ def test_declare_parallelism_runs_no_job_on_a_shuffled_plan(spark, jobs_of):
         f"'RepartitionByExpression ['id], {width}\n")
 
 
-def test_sieve_cogroup_sides_share_one_width(spark):
+def test_sieve_cogroup_sides_share_one_width(spark, monkeypatch):
     """The fallback's rewrite cogroup repartitions both sides to one
     width, so Spark adds no exchange to co-partition them: a tiles
     input with an exchange gets the full width, and the decisions'
@@ -830,7 +847,8 @@ def test_sieve_cogroup_sides_share_one_width(spark):
     images = datagen.images_df(spark, [
         datagen.image_row("sv", _toy_sieve_raster(), "raw8")])
     tiles = TL.explode_tiles(images, bw=8, bh=8).repartition(3, "block_x")
-    out = PZ.sieve_tiles(tiles, 5, max_border_edges=0)
+    monkeypatch.setattr(driver_side, "MAX_ROWS", 0)
+    out = PZ.sieve_tiles(tiles, 5)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapCoGroupsInPandas" in plan
     assert "ENSURE_REQUIREMENTS" not in plan
