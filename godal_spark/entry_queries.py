@@ -27,6 +27,7 @@ from godal_spark.operators import knn as knn_op
 from godal_spark.operators import pip as pip_op
 from godal_spark.operators import rasterize as RZ
 from godal_spark.operators import tiling
+from godal_spark.plans.skew import spread_small_scan
 
 # ---------------------------------------------------------------------------
 # shared deterministic derivations (SQL fragments used by BOTH sides)
@@ -111,17 +112,6 @@ def _read_then_remove(df: DataFrame, tmp_dir: str) -> DataFrame:
     return out
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Driver tables are ONE parquet file with ONE row group each, so any
-    scan is a single task no matter the split config (guide §2.2/§6) —
-    heavy downstream work (explodes, Arrow stages, interpreted HOFs)
-    serializes on one core. Round-robin the (column-pruned) scan across
-    the cores; no-op when the table already has enough splits."""
-    from godal_spark.plans.skew import spread_small_scan
-
-    return spread_small_scan(df)
-
-
 def _images_meta(spark, sf_dir, where: str | None = None,
                  spread: bool = False) -> DataFrame:
     # spread=True parallelizes the one-split scan for callers whose
@@ -135,7 +125,7 @@ def _images_meta(spark, sf_dir, where: str | None = None,
                        f"cast({IMG_W} as int) as w",
                        f"cast({IMG_H} as int) as h",
                        f"{IMG_LON} as lon", f"{IMG_LAT} as lat")
-    return _spread(df) if spread else df
+    return spread_small_scan(df) if spread else df
 
 
 def _customer_points(spark, sf_dir) -> DataFrame:
@@ -302,8 +292,7 @@ def q_knn_fine(spark, sf_dir):
     q = _supplier_points(spark, sf_dir)
     p = _customer_points(spark, sf_dir)
     out = knn_op.knn_join(q, p, k=3, q_id="qid", p_id="pid",
-                          res=9, rings=1, guarantee=True,
-                          broadcast_points=True)
+                          res=9, rings=1, broadcast_points=True)
     return out.selectExpr("qid", "cast(rank as bigint) as rank",
                           "neighbor_id", "round(dist, 6) as dist_r")
 
@@ -636,7 +625,8 @@ FROM documents GROUP BY md5(text)
 # ---------------------------------------------------------------------------
 
 def q_text_stats(spark, sf_dir):
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = spread_small_scan(
+        _t(spark, sf_dir, "documents").select("doc_id", "text"))
     toks = F.split(F.trim(F.col("text")), r"\s+")
     stop = F.array([F.lit(s) for s in ("the", "a", "and", "of", "to")])
     return docs.select(
@@ -666,7 +656,8 @@ def q_quality_filter(spark, sf_dir):
     per-bucket counts of the kept/dropped split plus mean quality."""
     from godal_spark.operators import text as TX
 
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = spread_small_scan(
+        _t(spark, sf_dir, "documents").select("doc_id", "text"))
     q = TX.with_quality_score(docs)
     return (q.withColumn("kept", F.col("quality") >= 0.5)
             .groupBy("kept")
@@ -1485,7 +1476,8 @@ FROM r WHERE rank <= 5
 def q_lang_id(spark, sf_dir):
     from godal_spark.operators import text as TX
 
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = spread_small_scan(
+        _t(spark, sf_dir, "documents").select("doc_id", "text"))
     return (TX.with_lang_id(docs).groupBy("lang_pred")
             .agg(F.count("*").cast("bigint").alias("n")))
 

@@ -7,9 +7,8 @@ wrap (consistent with the oracle); ties broken by (dist, p_id). Rows with
 a null or non-finite coordinate are dropped on both sides: such a point
 is nobody's neighbor, and such a query produces no output rows.
 
-Two physical paths. With guarantee=True (default) the broadcast tier runs
-whenever the point side holds at most BROADCAST_BUDGET points; the ring
-tiers run above the budget and for guarantee=False.
+Two physical paths. The broadcast tier runs whenever the point side
+holds at most BROADCAST_BUDGET points; the ring tiers run above it.
 
 Broadcast tier (one job plus the caller's action):
 
@@ -23,8 +22,8 @@ Broadcast tier (one job plus the caller's action):
   `complete` is `|P| >= k`. Its cost is |Q|·|P| distances, so it only
   pays while P is small: see BROADCAST_BUDGET.
 
-Ring tiers (P above the budget, or guarantee=False), each orders of
-magnitude smaller than the one before:
+Ring tiers (P above the budget), each orders of magnitude smaller than
+the one before:
 
   1. ring pass — index both sides at one resolution (JVM arithmetic);
      explode each query point to its ring-0..R candidate cells (built-in
@@ -40,7 +39,7 @@ magnitude smaller than the one before:
      doubling radii (2R, 4R, ...), each pass certified by the same
      argument, until resolved or the radius cap is hit.
   3. brute fallback — queries that found < k candidates in reach (or
-     whose re-probe radius exceeds `max_reprobe_rings`) get an exact
+     whose re-probe radius exceeds MAX_REPROBE_RINGS) get an exact
      cross-join + window pass. Pathological by construction (k close to
      |P|, or a query in an empty region), so the cross join is tiny.
 
@@ -85,6 +84,8 @@ _RSHIFT = 52
 BROADCAST_BUDGET = 1 << 10
 # distances (query x point) held at once per Arrow batch: 8 MB of float64
 _DIST_CAP = 1 << 20
+# widest ring radius the re-probe tier doubles to before the brute pass
+MAX_REPROBE_RINGS = 64
 
 
 def _cell_col(res: int):
@@ -252,28 +253,20 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, *,
              q_id: str, q_lon: str = "lon", q_lat: str = "lat",
              p_id: str, p_lon: str = "lon", p_lat: str = "lat",
              res: int | None = None, rings: int = 2,
-             broadcast_points: bool = False,
-             guarantee: bool = True, max_reprobe_rings: int = 64) -> DataFrame:
+             broadcast_points: bool = False) -> DataFrame:
     """Top-k nearest points per query. Output columns: the query's
     columns, neighbor_id/neighbor_lon/neighbor_lat, dist, rank (1-based),
     and `complete`.
 
-    guarantee=True (default): results are the EXACT top-k and `complete`
-    is `found == k` (false only when k > |P|). A point side of at most
-    BROADCAST_BUDGET points takes the broadcast tier (one job to collect
-    P, then one Arrow stage); `res`, `rings`, `broadcast_points` and
-    `max_reprobe_rings` only shape the ring tiers, which run above the
-    budget: candidates beyond the certification bound (rings·min cell
-    size) are pruned before the top-k sort, and queries left with fewer
-    than k certified candidates are re-probed at doubling radii (exact at
-    every step), falling back to a cross-join brute pass for the
-    (pathological) remainder.
-
-    guarantee=False: single ring pass; `complete` certifies the bound
-    (found ≥ k AND kth dist < rings·min(cell_w, cell_h)) — a false flag
-    means the top-k may be missing a true neighbor just outside the ring
-    block. Round 1 shipped complete = found ≥ k, which wrongly certified
-    results whose true k-th neighbor sat outside the scanned block.
+    Results are the EXACT top-k and `complete` is `found == k` (false
+    only when k > |P|). A point side of at most BROADCAST_BUDGET points
+    takes the broadcast tier (one job to collect P, then one Arrow
+    stage); `res`, `rings` and `broadcast_points` only shape the ring
+    tiers, which run above the budget: candidates beyond the
+    certification bound (rings·min cell size) are pruned before the
+    top-k sort, and queries left with fewer than k certified candidates
+    are re-probed at doubling radii (exact at every step), falling back
+    to a cross-join brute pass for the (pathological) remainder.
 
     Deterministic: ties broken by (dist, p_id). Rows with a null or
     non-finite coordinate are dropped on both sides: a point with one is
@@ -297,11 +290,10 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, *,
 
     queries = spread_small_scan(queries)
 
-    if guarantee:
-        collected = _collect_points(points, p_id, p_lon, p_lat)
-        if collected is not None:
-            return _broadcast_knn(queries, points, collected, k,
-                                  q_lon, q_lat, p_id, p_lon, p_lat)
+    collected = _collect_points(points, p_id, p_lon, p_lat)
+    if collected is not None:
+        return _broadcast_knn(queries, points, collected, k,
+                              q_lon, q_lat, p_id, p_lon, p_lat)
 
     if res is None:
         res = auto_res(points, k, rings, lon=p_lon, lat=p_lat)
@@ -324,18 +316,6 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, *,
     if 2 * rings + 1 >= n:
         cand = cand.dropDuplicates([q_id, "__pid"])
 
-    if not guarantee:
-        ranked = _rank_topk(cand, k, q_id)
-        stats = ranked.groupBy(q_id).agg(F.max("rank").alias("__found"),
-                                         F.max("dist").alias("__kth"))
-        ok = (F.col("__found") >= k) & (F.col("__kth") < bound)
-        out = ranked.join(stats, q_id).withColumn("complete", ok)
-        return out.drop("__found", "__kth") \
-                  .withColumnRenamed("__pid", "neighbor_id") \
-                  .withColumnRenamed("__plon", "neighbor_lon") \
-                  .withColumnRenamed("__plat", "neighbor_lat")
-
-    # ---- guaranteed path --------------------------------------------------
     # EXACT prefilter (guide §2.3 — sort/shuffle fewer rows): a candidate at
     # dist >= bound can never be part of a CERTIFIED top-k (certification
     # requires kth < bound), so drop it before the top-k sort. If a query
@@ -367,10 +347,10 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, *,
     # queries it resolves; the rest widen again. Replaces the old
     # kth-derived single re-probe: with the prefilter above a bad query
     # has no observed kth to derive a radius from, and geometric doubling
-    # reaches the same cap in <= log2(max_reprobe_rings) passes — each
+    # reaches the same cap in <= log2(MAX_REPROBE_RINGS) passes — each
     # over a strictly shrinking query set.
     r = 2 * rings
-    while has_bad and r <= max_reprobe_rings:
+    while has_bad and r <= MAX_REPROBE_RINGS:
         rbound = r * min_cell
         rcand = _ring_candidates(remaining, p, res, F.lit(r), q_id, q_lon, q_lat)
         # per-query rings may wrap the grid — always dedup this (small) tier

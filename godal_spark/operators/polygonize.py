@@ -43,7 +43,7 @@ from godal_spark.functions import geom as G
 from godal_spark.plans import driver_side
 from godal_spark.plans.components import _driver_roots, component_roots
 from godal_spark.plans.driver_side import collect_bounded, release
-from godal_spark.plans.skew import aqe_wrapped
+from godal_spark.plans.skew import adaptive_parallelism
 
 
 # ---------------------------------------------------------------------------
@@ -726,31 +726,6 @@ def _assemble_rectilinear(rings_out, ring_of, kaxis, bx, by):
     return list(polys.values())
 
 
-def _declare_parallelism(df: DataFrame, *keys: str,
-                         width_from: DataFrame | None = None) -> DataFrame:
-    """Explicit keyed repartition before a Python-heavy applyInPandas:
-    AQE's size-based coalescing assumes IO-bound tasks and serializes
-    CPU-bound Arrow kernels (PLANS.md round-3 lesson; measured 19 s -> 3 s
-    on the overview reduce). Explicit-N repartitions are exempt from
-    coalescing and satisfy the grouping's required distribution.
-
-    The width scales with the partition count of `width_from` (default
-    `df`). A plan AQE wraps (one with an exchange or a broadcast) gets
-    the full width without asking, so the sizing runs no job; pass a
-    checkpoint scan as `width_from` to size from its partitions."""
-    dp = df.sparkSession.sparkContext.defaultParallelism
-    src = df if width_from is None else width_from
-    # width scales with the incoming partitioning: a 6-tile toy input
-    # doesn't pay for 4*dp empty tasks, a wide scan still fans out to
-    # the full 4*dp. Floor is 8 — not dp — because an empty Python task
-    # still holds a slot: ~0.05 s on a 4-core host, ~0.22 s before the
-    # worker daemon stopped every task re-reading pyspark.zip's
-    # directory (the cost once blamed on scheduling); 2x the incoming
-    # width keeps mid-size scans at full fan-out.
-    width = dp * 4 if aqe_wrapped(src) else min(dp * 4, src.rdd.getNumPartitions() * 2)
-    return df.repartition(max(8, width), *keys)
-
-
 def _attach_roots(comps: DataFrame, edges: DataFrame,
                   held: list[DataFrame]) -> DataFrame:
     """comps + a `root` column from the border-equivalence edges, by
@@ -1029,10 +1004,10 @@ def polygonize_tiles(tiles: DataFrame, *, eight: bool = False,
         edges = _border_pairs(_strips(raw), eight).filter(F.col("eq")) \
             .drop("eq")
         comps = _attach_roots(comps, edges, held)
-        out = _declare_parallelism(comps, "image_id", "band", "root",
-                                   width_from=raw) \
-            .groupBy("image_id", "band", "root").applyInPandas(
-            merge, schema=_FEATURES2_SCHEMA)
+        # sized from the phase-1 checkpoint: it follows that scan's splits
+        keys = ["image_id", "band", "root"]
+        out = comps.repartition(adaptive_parallelism(raw), *keys) \
+            .groupBy(*keys).applyInPandas(merge, schema=_FEATURES2_SCHEMA)
         return _nan_value(out.localCheckpoint(eager=True))
     finally:
         for c in held:
@@ -1320,9 +1295,9 @@ def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
         from godal_spark.operators.tiling import TILE_SCHEMA
 
         # both sides one width, or the cogroup re-shuffles the narrower
-        return (_declare_parallelism(tiles, *keys).groupBy(*keys)
-                .cogroup(_declare_parallelism(cid_dec, *keys, width_from=tiles)
-                         .groupBy(*keys))
+        n = adaptive_parallelism(tiles)
+        return (tiles.repartition(n, *keys).groupBy(*keys)
+                .cogroup(cid_dec.repartition(n, *keys).groupBy(*keys))
                 .applyInPandas(rewrite, schema=TILE_SCHEMA))
     finally:
         # the returned plan reads only `tiles` and checkpoints made from

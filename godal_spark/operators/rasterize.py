@@ -229,12 +229,11 @@ def rasterize_tiles(footprints: DataFrame, te, ts, *, bw: int = 256,
              .select("block_x", "block_y", F.col(geometry).alias("__geom")))
 
     pairs = grid.join(geoms, ["block_x", "block_y"], "left")
-    # declare burn parallelism: the stage is per-tile CPU-bound Python
-    # (ray cast over tile pixels) — AQE size-coalescing would serialize
-    # it (see PLANS.md round-3 lesson). Explicit-N keyed repartition is
-    # exempt and satisfies applyInPandas's distribution (no 2nd shuffle).
-    n_burn = max(1, min(nbx * nby,
-                        spark.sparkContext.defaultParallelism * 4))
+    # per-tile CPU-bound Python (ray cast over tile pixels): width by the
+    # keyed-stage rule, at most one task a tile, and never repartition(0)
+    from godal_spark.plans.skew import adaptive_parallelism
+
+    n_burn = max(1, min(nbx * nby, adaptive_parallelism(pairs)))
     pairs = pairs.repartition(n_burn, "block_x", "block_y")
     init_b, burn_b = float(init), float(burn)
     at = bool(all_touched)

@@ -231,17 +231,7 @@ def build_overview_level(tiles: DataFrame, factor_from_prev: int = 2,
     parent = (tiles
               .withColumn("pbx", F.floor(F.col("block_x") / 2).cast("int"))
               .withColumn("pby", F.floor(F.col("block_y") / 2).cast("int")))
-    # declare the reduce parallelism: the stage is per-group Python
-    # (mosaic + downsample), so AQE's SIZE-based coalescing is wrong for
-    # it — a few MB of tiles coalesce to 1-2 tasks and serialize the
-    # kernel (measured 19 s -> ~2 s on a 4k-tile level; same lesson as
-    # warp's render, see PLANS.md). Explicit-N keyed repartition is
-    # exempt from coalescing and satisfies applyInPandas's required
-    # distribution — no second exchange. N derives from the input's own
-    # partitioning (plans.skew.adaptive_parallelism) so a near-empty
-    # input doesn't pay a constant 2x-cores of Python task round-trips
-    # (each ~0.22 s of a slot while every task re-read pyspark.zip's
-    # directory, ~0.05 s with the worker daemon).
+    # per-group Python (mosaic + downsample): width by the keyed-stage rule
     from godal_spark.plans.skew import adaptive_parallelism
 
     parent = parent.repartition(adaptive_parallelism(parent),

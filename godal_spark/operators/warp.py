@@ -613,16 +613,12 @@ def warp(spark: SparkSession, images: DataFrame, switches: list[str] | None = No
             "caption": [cap] * len(bands),
         })
 
-    # Declare the render stage's parallelism explicitly: the stage is
-    # CPU-bound Python (inverse mapping per pixel), so AQE's SIZE-based
-    # partition coalescing is wrong for it — an ~80 MB shuffle coalesces
-    # to ~2 tasks and serializes the kernel (measured 22.7 s vs 5.7 s on
-    # a 20k-image mosaic at local[32]). An explicit repartition on the
-    # group keys is exempt from AQE coalescing and satisfies
-    # applyInPandas's required distribution, so no second exchange.
+    # CPU-bound Python (inverse mapping per pixel): width by the
+    # keyed-stage rule, at most one task a block, and never repartition(0)
+    from godal_spark.plans.skew import adaptive_parallelism
+
     nblocks = ((tw + block - 1) // block) * ((th + block - 1) // block)
-    n_render = max(1, min(nblocks,
-                          spark.sparkContext.defaultParallelism * 4))
+    n_render = max(1, min(nblocks, adaptive_parallelism(pairs)))
     pairs = pairs.repartition(n_render, "block_x", "block_y")
     out_tiles = pairs.groupBy("block_x", "block_y").applyInPandas(render, schema=TILE_SCHEMA)
     out_tiles = (out_tiles.withColumn("gt", F.array(*[F.lit(v) for v in tgt_gt_b]))

@@ -22,7 +22,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 
 class CheckpointedWriter:
@@ -42,12 +42,15 @@ class CheckpointedWriter:
     def write_partition(self, key: str, df: DataFrame) -> dict:
         """Materialize one partition; lineage marker written only after
         the data commit (atomic rename by the FS committer), so a crash
-        mid-write leaves the key pending — exactly-once per key."""
+        mid-write leaves the key pending — exactly-once per key. The row
+        count is observed on the written frame, in the write's own job."""
         key = str(key)
         t0 = time.time()
         path = os.path.join(self.root, "data", f"part={key}")
-        df.write.mode("overwrite").parquet(path)
-        rows = df.sparkSession.read.parquet(path).count()
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("rows")) \
+            .write.mode("overwrite").parquet(path)
+        rows = obs.get["rows"]
         nbytes = sum(os.path.getsize(os.path.join(path, f))
                      for f in os.listdir(path) if f.endswith(".parquet"))
         meta = {"key": key, "rows": rows, "bytes": nbytes,

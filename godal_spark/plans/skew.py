@@ -48,25 +48,30 @@ def aqe_wrapped(df: DataFrame) -> bool:
     return root == "AdaptiveSparkPlanExec"
 
 
-def adaptive_parallelism(df: DataFrame, floor: int = 8) -> int:
-    """Partition count for an explicit keyed repartition ahead of a
-    CPU-bound Python kernel (applyInPandas): AQE's SIZE-based coalescing
-    is wrong for those stages (Python cost scales with rows, not bytes —
-    a few MB of tiles coalesce to 1-2 tasks and serialize the kernel,
-    measured 19 s -> 2 s on a 4k-tile overview reduce), but a CONSTANT
-    2x-cores fan-out is wrong in the other direction for near-empty
-    inputs (64 Python tasks over 6 rows, measured ~0.2 s a stage in the
-    sieve bench). That cost was not scheduling: on Python < 3.12 each
-    Python task re-read pyspark.zip's directory a dozen times or more
-    until godal_spark.worker_daemon; an empty Python task now holds a
-    slot ~0.05 s, against ~0.22 s before (no-op mapInArrow, 4-core
-    host). Derive the count from the input's own partitioning instead:
-    small scans (1-2 splits) get `floor`, real tables (many splits) get
-    the full 2x-cores, and so does a plan AQE wraps (a prior shuffle),
-    without asking. Runs no job."""
+def adaptive_parallelism(df: DataFrame) -> int:
+    """The one width rule for every keyed Python stage: the partition
+    count of the explicit `repartition(n, *keys)` ahead of a CPU-bound
+    `groupBy(*keys).applyInPandas` (overview reduce, COG assemble,
+    rasterize burn, warp render, polygonize merge, sieve rewrite).
+
+    AQE's SIZE-based coalescing is wrong for those stages (round-3
+    lesson, docs/PLANS.md): Python cost scales with rows, not bytes, so
+    a few MB of tiles coalesce to 1-2 tasks and serialize the kernel
+    (measured 22.7 s vs 5.7 s on warp's render, 19 s -> 2 s on a 4k-tile
+    overview reduce). An explicit-N repartition is exempt from
+    coalescing and satisfies the grouping's required distribution, so
+    it adds no second exchange. A CONSTANT 2x-cores fan-out is wrong the
+    other way for near-empty inputs: an empty Python task holds a slot
+    ~0.05 s (no-op mapInArrow, 4-core host; ~0.22 s before
+    godal_spark.worker_daemon stopped each task re-reading pyspark.zip).
+
+    So the count follows `df`'s own partitioning: 4x its splits, capped
+    at 2x cores, never below 8. A plan AQE wraps (a prior exchange) gets
+    the full 2x cores without asking, so the rule runs no job; size from
+    a checkpoint scan to follow its partitions."""
     full = df.sparkSession.sparkContext.defaultParallelism * 2
     width = full if aqe_wrapped(df) else min(full, df.rdd.getNumPartitions() * 4)
-    return max(floor, width)
+    return max(8, width)
 
 
 def salted_join(large: DataFrame, small: DataFrame, on: str = "cell",

@@ -825,14 +825,16 @@ def test_sieve_tiles_tie_break_smaller_root(spark):
 
 
 def test_declare_parallelism_runs_no_job_on_a_shuffled_plan(spark, jobs_of):
-    """Sieve's cogroup sizes its tiles side with no width_from: a plan
-    with an exchange gets the full width without running its stages."""
+    """Sieve's cogroup sizes both sides from its tiles input with the one
+    width rule: a plan with an exchange gets the full width without
+    running its stages."""
     from godal_spark.operators import polygonize as PZ
 
     shuffled = spark.range(100).repartition(3, "id").groupBy("id").count()
-    n, out = jobs_of(lambda: PZ._declare_parallelism(shuffled, "id"))
+    n, out = jobs_of(
+        lambda: shuffled.repartition(PZ.adaptive_parallelism(shuffled), "id"))
     assert n == 0
-    width = max(8, 4 * spark.sparkContext.defaultParallelism)
+    width = max(8, 2 * spark.sparkContext.defaultParallelism)
     assert out._jdf.queryExecution().logical().toString().startswith(
         f"'RepartitionByExpression ['id], {width}\n")
 

@@ -104,7 +104,7 @@ def test_knn_guarantee_fine_res(spark):
     pdf = spark.createDataFrame(
         pd.DataFrame({"pid": range(len(ps)), "lon": [p[0] for p in ps], "lat": [p[1] for p in ps]}))
     out = knn.knn_join(qdf, pdf, k=3, q_id="qid", p_id="pid",
-                       res=10, rings=1, guarantee=True).collect()
+                       res=10, rings=1).collect()
     assert all(r.complete for r in out)
     got = {}
     for r in out:
@@ -115,19 +115,6 @@ def test_knn_guarantee_fine_res(spark):
         mine = sorted(got[qid])
         assert [m[1] for m in mine] == [pid for _, pid in d], f"q{qid}"
         np.testing.assert_allclose([m[2] for m in mine], [dd for dd, _ in d], rtol=1e-9)
-
-
-def test_knn_no_guarantee_flags_violators(spark):
-    """guarantee=False: the bound check must set complete=False when the
-    kth distance exceeds rings*min_cell (the round-1 bug certified it)."""
-    # query at origin, 3 points ~2 cells away at res 10 (cell ~0.35 deg)
-    qdf = spark.createDataFrame(pd.DataFrame({"qid": [0], "lon": [0.05], "lat": [0.05]}))
-    pdf = spark.createDataFrame(pd.DataFrame(
-        {"pid": [0, 1, 2], "lon": [0.3, 0.31, 0.32], "lat": [0.05, 0.05, 0.05]}))
-    out = knn.knn_join(qdf, pdf, k=3, q_id="qid", p_id="pid",
-                       res=10, rings=1, guarantee=False).collect()
-    # kth dist ~0.27 deg > 1 * 0.1758 (min cell at res 10) -> not certified
-    assert len(out) == 3 and not any(r.complete for r in out)
 
 
 def test_knn_auto_res(spark):
@@ -226,13 +213,12 @@ def test_knn_rejects_bad_k_and_rings(spark, jobs_of, name):
     p = spark.createDataFrame([(0, 0.1, 0.1)], "pid long, lon double, lat double")
     args = {"k": 3, "rings": 2, name: 0}
 
-    def call(guarantee):
+    def call():
         with pytest.raises(ValueError, match=name):
             knn.knn_join(q, p, args["k"], q_id="qid", p_id="pid",
-                         rings=args["rings"], guarantee=guarantee)
+                         rings=args["rings"])
 
-    for guarantee in (True, False):
-        assert jobs_of(lambda: call(guarantee))[0] == 0
+    assert jobs_of(call)[0] == 0
 
 
 def test_knn_broadcast_job_budget(spark, jobs_of, tmp_path):
@@ -282,6 +268,27 @@ def test_checkpoint_resume(spark, tmp_path):
     lin = w.lineage()
     assert {m["key"] for m in lin} == {"a", "b", "c", "d"}
     assert all(m["rows"] == 10 and m["wall_s"] >= 0 for m in lin)
+
+
+def test_checkpointed_write_observes_its_rows(spark, jobs_of, tmp_path):
+    """A partition write is one job: its row count is observed on the
+    written frame, not read back from the files (8 jobs for 2 keys when
+    it was). The counts still match the files, an empty key included."""
+    src = spark.range(20_000).withColumn("k", F.col("id") % 2).persist()
+    try:
+        src.count()
+        w = lineage.CheckpointedWriter(str(tmp_path / "ckpt"))
+        n, metas = jobs_of(lambda: lineage.run_partitioned(
+            w, [0, 1], lambda k: src.filter(F.col("k") == k)))
+        assert n <= 2
+        empty = w.write_partition(2, src.filter(F.col("k") == 2))
+        for m in metas + [empty]:
+            back = spark.read.parquet(str(tmp_path / "ckpt" / "data"
+                                          / f"part={m['key']}")).count()
+            assert m["rows"] == back
+        assert [m["rows"] for m in metas + [empty]] == [10_000, 10_000, 0]
+    finally:
+        src.unpersist()
 
 
 def test_pip_join_salted_param_equals_plain(spark):

@@ -1,5 +1,7 @@
 """Spark-side tile assignment + overview pyramid vs reference goldens."""
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -139,41 +141,79 @@ def test_clear_overviews(spark):
     assert cleared.count() == l0.count()
 
 
-def test_python_heavy_stages_declare_parallelism(spark):
-    """Plan guard for the round-3 AQE lesson: the CPU-bound Arrow stages
-    (warp render, overview reduce, rasterize burn) must carry an
-    EXPLICIT keyed repartition in their plans — explicit-N repartitions
-    are exempt from AQE size-coalescing, which otherwise serializes the
-    kernels (22.7s vs 5.7s measured on warp; 19s vs 3.4s on overviews)."""
-    import numpy as np
+def _widths(df, *keys):
+    """Widths of the explicit repartitions on exactly `keys` in df's
+    analyzed plan (one per side for a cogroup)."""
+    plan = df._jdf.queryExecution().analyzed().toString()
+    found = re.findall(r"RepartitionByExpression \[([^\]]*)\], (\d+)", plan)
+    return [int(n) for cols, n in found
+            if [c.split("#")[0] for c in cols.split(", ")] == list(keys)]
+
+
+def test_python_heavy_stages_declare_parallelism(spark, monkeypatch):
+    """Plan guard for the round-3 AQE lesson: every CPU-bound keyed Arrow
+    stage (overview reduce, COG assemble, rasterize burn, warp render,
+    polygonize merge, both sides of the sieve fallback's cogroup) carries
+    an EXPLICIT keyed repartition — exempt from AQE size-coalescing,
+    which otherwise serializes the kernels (22.7s vs 5.7s measured on
+    warp; 19s vs 3.4s on overviews) — and takes its width from the one
+    rule, skew.adaptive_parallelism, applied to the stage's source. The
+    rule is wrapped to answer 5, a width no other formula gives."""
     import pandas as pd
-    from godal_spark import datagen
     from godal_spark.functions import geom as G
-    from godal_spark.operators import rasterize as RZ, warp as WP
+    from godal_spark.operators import polygonize as PZ, rasterize as RZ, warp as WP
+    from godal_spark.plans import driver_side, skew
 
-    def has_repartition(df):
-        return "RepartitionByExpression" in \
-            df._jdf.queryExecution().optimizedPlan().toString()
+    seen = []
 
-    arr = np.arange(64, dtype=np.uint8).reshape(8, 8)
+    def rule(df):
+        seen.append(df)
+        return 5
+
+    monkeypatch.setattr(skew, "adaptive_parallelism", rule)
+    monkeypatch.setattr(PZ, "adaptive_parallelism", rule)
+
+    def sources():
+        out = list(seen)
+        seen.clear()
+        return out
+
+    arr = (np.arange(256, dtype=np.uint16) % 7).astype(np.uint8).reshape(16, 16)
     images = datagen.images_df(spark, [
-        datagen.image_row("p", arr, "raw8", gt=[0, 1, 0, 8, 0, -1])])
-    assert has_repartition(WP.warp(spark, images, ["-ts", "4", "4"], block=4))
+        datagen.image_row("p", arr, "raw8", gt=[0, 1, 0, 16, 0, -1])])
+    # 16 target blocks of 4x4, so the one-task-a-block cap is not the width
+    warped = WP.warp(spark, images, ["-ts", "16", "16"], block=4)
+    assert _widths(warped, "block_x", "block_y") == [5]
+    assert len(sources()) == 1
     tiles = tiling.explode_tiles(images, bw=4, bh=4)
-    assert has_repartition(tiling.build_overview_level(tiles, 2))
+    level = tiling.build_overview_level(tiles, 2)
+    assert _widths(level, "image_id", "band", "pbx", "pby") == [5]
+    assert {"pbx", "pby"} <= set(sources()[0].columns)
+    assert _widths(tiling.cog_write(tiles, tile_size=4), "image_id", "band") == [5]
+    assert len(sources()) == 1
     fps = spark.createDataFrame(
         pd.DataFrame({"fid": [0], "geometry": [G.to_wkb(G.box(1, 1, 3, 3))]}),
         "fid long, geometry binary")
-    assert has_repartition(
-        RZ.rasterize_tiles(fps, te=(0, 0, 8, 8), ts=(8, 8), bw=4, bh=4))
-    # round-5 export stage follows the same rule
-    assert has_repartition(tiling.cog_write(tiles, tile_size=4))
+    burned = RZ.rasterize_tiles(fps, te=(0, 0, 16, 16), ts=(16, 16), bw=4, bh=4)
+    assert _widths(burned, "block_x", "block_y") == [5]
+    assert "__geom" in sources()[0].columns
+    # polygonize's merge: the result checkpoint has the rule's width,
+    # sized from the phase-1 checkpoint
+    assert PZ.polygonize_tiles(tiles).rdd.getNumPartitions() == 5
+    assert "kind" in sources()[0].columns
+    # the sieve fallback: both cogroup sides, sized once from the tiles
+    monkeypatch.setattr(driver_side, "MAX_ROWS", 0)
+    sieved = PZ.sieve_tiles(tiles, 3)
+    assert _widths(sieved, "image_id", "band", "block_x", "block_y") == [5, 5]
+    assert [src.columns for src in sources()] == [tiles.columns]
 
 
 def test_adaptive_parallelism_runs_no_job_on_a_shuffled_plan(spark, jobs_of):
     """Under AQE, getNumPartitions() executes the stages of a plan with an
-    exchange; such a plan gets the full 2x-cores without asking, and an
-    overview level built on it runs no job before its caller's."""
+    exchange; the one width rule gives such a plan the full 2x-cores
+    without asking (the sieve fallback sizes its cogroup from a tiles
+    input that may carry one), and an overview level built on it runs
+    no job before its caller's."""
     from godal_spark.plans.skew import adaptive_parallelism
 
     shuffled = spark.range(100).repartition(3, "id").groupBy("id").count()
