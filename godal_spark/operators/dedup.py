@@ -29,7 +29,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.sql import types as T
 
 from godal_spark.plans.components import component_roots
@@ -517,9 +517,10 @@ def minhash_lsh_dedup(docs: DataFrame, *, k: int = 5, num_hashes: int = 64,
 
     Fallback, the distributed chain: a narrow (id, buckets) checkpoint,
     the bucket self-join (minhash_lsh_candidates), a checkpoint of the
-    candidate pairs and its count, then jaccard_verify — with the pairs
-    broadcast while _verify_broadcast_ok allows, estimated from the
-    checkpoint's exact shingle total (no extra job).
+    candidate pairs, counted in the checkpoint's own job, then
+    jaccard_verify — with the pairs broadcast while _verify_broadcast_ok
+    allows, estimated from the checkpoint's exact shingle total (no
+    extra job).
 
     bands=16 over num_hashes=64 gives rows=4 — collision p at
     jaccard 0.3 is ~12%, vs rows=2 where boilerplate pairs (j≈0.3)
@@ -566,10 +567,13 @@ def minhash_lsh_dedup(docs: DataFrame, *, k: int = 5, num_hashes: int = 64,
     # O(corpus)), the verify runs with the pairs BROADCAST, so the
     # signature table is never shuffled (guide §3.1); past the cap it
     # falls back to the shuffle-join verify. The checkpoint also stops
-    # the banding subtree from re-running once per verify branch.
+    # the banding subtree from re-running once per verify branch; the
+    # pairs are counted by an Observation in the checkpoint's own job.
+    obs = Observation()
     cand = minhash_lsh_candidates(banded_src, id_col=id_col) \
+        .observe(obs, F.count(F.lit(1)).alias("rows")) \
         .localCheckpoint(eager=True)
-    n_cand = cand.count()
+    n_cand = obs.get["rows"]
     # the broadcast build side carries each pair's FULL shingle + minhash
     # arrays, so the guard bounds bytes: the pairs' shingles at the
     # corpus's exact mean, from the checkpoint pass's own counts

@@ -9,8 +9,13 @@ Golden contracts (godal_test.go:2380-2521):
     bands; Bands(i)+Values per band; count mismatches and out-of-range
     band indexes error BEFORE touching pixels.
 
-Kernels are numpy (vectorized ray cast on pixel centers). The Spark
-plan is tile-native (the warp pattern, warp.py:214-260):
+Kernels are numpy: a vectorized ray cast on pixel centres, run only
+over each geometry's pixel window (the pixel-space bbox of its vertices'
+geo bbox, padded by a pixel and clamped to the grid; see
+``_center_window``). A footprint that lights one pixel costs a few
+centres, not a whole tile: the cast decides each centre alone, so the
+mask is bit-equal to a whole-grid cast. The Spark plan is tile-native
+(the warp pattern, warp.py:214-260):
 
   1. target block grid from ``spark.range`` — pure codegen, no driver
      list (a 100k x 100k target at 256px tiles is ~153k rows);
@@ -32,6 +37,7 @@ ask for a monolithic payload.
 
 from __future__ import annotations
 
+import math
 from typing import Sequence
 
 import numpy as np
@@ -44,16 +50,48 @@ TILE_SCHEMA = ("block_x int, block_y int, x0 int, y0 int, bw int, bh int, "
                "dtype string, payload binary")
 
 
-def _pixel_centers(gt, w: int, h: int):
-    px = np.arange(w) + 0.5
-    py = np.arange(h) + 0.5
-    gx, gy = np.meshgrid(px, py)
-    return CRS.pixel_to_geo(gt, gx.ravel(), gy.ravel())
+def _center_window(rings, gt, w: int, h: int):
+    """Pixel window (c0, c1, r0, r1), clamped to the (h, w) grid, that
+    holds every pixel whose centre the ray cast could place inside or
+    on ``rings``.
+
+    Such a centre lies in the vertices' geo bbox widened by
+    ``_on_segment``'s 1e-12 tolerance: outside it a point is within
+    1e-12 of no segment, and beyond the vertices' x or y range its ray
+    crosses a closed ring an even number of times (none or every
+    straddling edge). The window is the pixel-space bbox of that
+    box's four corners (``geo_to_pixel``, so rotated grids too), padded
+    by at least one pixel against float rounding. A non-finite vertex
+    or an unclosed ring voids the parity argument: the window is then
+    the whole grid, i.e. the full cast."""
+    rings = [np.asarray(r, dtype=np.float64).reshape(-1, 2) for r in rings]
+    v = np.vstack(rings)
+    if not len(v):
+        return 0, 0, 0, 0
+    (x0, y0), (x1, y1) = v.min(axis=0) - 1e-12, v.max(axis=0) + 1e-12
+    px, py = CRS.geo_to_pixel(gt, np.array([x0, x1, x0, x1]),
+                              np.array([y0, y0, y1, y1]))
+    closed = all(len(r) == 0 or (r[0] == r[-1]).all() for r in rings)
+    if not (closed and np.isfinite(px).all() and np.isfinite(py).all()):
+        return 0, w, 0, h
+    return (max(0, math.floor(px.min()) - 1), min(w, math.ceil(px.max()) + 1),
+            max(0, math.floor(py.min()) - 1), min(h, math.ceil(py.max()) + 1))
 
 
 def _coverage_mask(geom: G.Geom, gt, w: int, h: int, all_touched: bool) -> np.ndarray:
-    cx, cy = _pixel_centers(gt, w, h)
-    mask = G.points_in_polygon(cx, cy, geom).reshape(h, w)
+    # centre-point rule, cast only over the geometry's pixel window: the
+    # centres are the same floats as on the full grid and the cast
+    # decides each one alone, so the mask is bit-equal to a whole-grid
+    # cast at O(window) instead of O(w*h)
+    mask = np.zeros((h, w), dtype=bool)
+    rings = [r for p in geom.polygons() for r in p]
+    if rings:
+        c0, c1, r0, r1 = _center_window(rings, gt, w, h)
+        if c0 < c1 and r0 < r1:
+            cx, cy = CRS.pixel_to_geo(gt, (np.arange(c0, c1) + 0.5)[None, :],
+                                      (np.arange(r0, r1) + 0.5)[:, None])
+            mask[r0:r1, c0:c1] = G.points_in_polygon(
+                cx.ravel(), cy.ravel(), geom).reshape(r1 - r0, c1 - c0)
     if all_touched:
         # pixel square intersects the geometry (not just its center) —
         # batched over every center-miss pixel at once (the per-pixel
@@ -191,9 +229,10 @@ def rasterize_tiles(footprints: DataFrame, te, ts, *, bw: int = 256,
     Scale shape: one bbox Arrow pass over the geometries, a codegen
     block-range explode (each geometry → only the tiles its bbox
     covers), one shuffle on the tile key, and an Arrow-batched burn.
-    Hot tiles (many geometries on one tile) are bounded by the tile's
-    pixel count — the burn is an OR into a bw x bh mask regardless of
-    the geometry count; AQE skew-join splits oversized shuffle reads.
+    A hot tile (many geometries on one tile) costs the sum of its
+    geometries' pixel windows, not geometries x tile pixels: each one
+    is ray-cast only over its own padded bbox and ORed into one
+    bw x bh mask; AQE skew-join splits oversized shuffle reads.
     """
     minx, miny, maxx, maxy = (float(v) for v in te)
     w, h = (int(v) for v in ts)
@@ -229,7 +268,7 @@ def rasterize_tiles(footprints: DataFrame, te, ts, *, bw: int = 256,
              .select("block_x", "block_y", F.col(geometry).alias("__geom")))
 
     pairs = grid.join(geoms, ["block_x", "block_y"], "left")
-    # per-tile CPU-bound Python (ray cast over tile pixels): width by the
+    # per-tile CPU-bound Python (ray cast over geometry windows): width by the
     # keyed-stage rule, at most one task a tile, and never repartition(0)
     from godal_spark.plans.skew import adaptive_parallelism
 

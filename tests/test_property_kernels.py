@@ -265,6 +265,228 @@ def test_rasterize_tile_decomposition_property(seed):
     assert np.array_equal(stitched, mono)
 
 
+# --- frozen reference: the whole-grid coverage kernel, kept verbatim as
+# it stood before the centre cast was restricted to each geometry's pixel
+# window; the windowed kernel must reproduce it bit for bit. It is also
+# what keeps perfbench/prep.py's raster oracle, which calls the live
+# kernel through rasterize_array, an independent check of the burn.
+
+def _pixel_centers(gt, w: int, h: int):
+    px = np.arange(w) + 0.5
+    py = np.arange(h) + 0.5
+    gx, gy = np.meshgrid(px, py)
+    return crs.pixel_to_geo(gt, gx.ravel(), gy.ravel())
+
+
+def _coverage_mask_full_grid(geom: G.Geom, gt, w: int, h: int, all_touched: bool) -> np.ndarray:
+    CRS = crs
+    cx, cy = _pixel_centers(gt, w, h)
+    mask = G.points_in_polygon(cx, cy, geom).reshape(h, w)
+    if all_touched:
+        cand = np.zeros_like(mask)
+        offs = range(-1, 2)
+
+        def mark(cx, cy):
+            for oy in offs:
+                yy = np.clip(cy + oy, 0, h - 1)
+                for ox in offs:
+                    cand[yy, np.clip(cx + ox, 0, w - 1)] = True
+
+        pts = geom._all_points()
+        if len(pts):  # covers Point/MultiPoint (no segments to sample)
+            vx, vy = CRS.geo_to_pixel(gt, pts[:, 0], pts[:, 1])
+            mark(np.floor(vx).astype(np.int64),
+                 np.floor(vy).astype(np.int64))
+        for seg in G._segments(geom):
+            sx, sy = CRS.geo_to_pixel(gt, seg[:, 0], seg[:, 1])
+            for k in range(len(seg) - 1):
+                dx, dy = sx[k + 1] - sx[k], sy[k + 1] - sy[k]
+                n = max(2, int(2 * max(abs(dx), abs(dy))) + 2)
+                ts = np.linspace(0.0, 1.0, n)
+                mark(np.floor(sx[k] + ts * dx).astype(np.int64),
+                     np.floor(sy[k] + ts * dy).astype(np.int64))
+        ys, xs = np.nonzero(cand & ~mask)
+        if len(ys):
+            fx, fy = xs.astype(np.float64), ys.astype(np.float64)
+            if gt[2] != 0.0 or gt[4] != 0.0:
+                pg = G.map_coords(
+                    geom, lambda x, y: CRS.geo_to_pixel(gt, x, y))
+                hit = G.boxes_intersect_geom(fx, fy, fx + 1.0, fy + 1.0, pg)
+            else:
+                corner_x = np.empty((4, len(xs)))
+                corner_y = np.empty((4, len(xs)))
+                for k, (ox, oy) in enumerate([(0, 0), (1, 0), (1, 1), (0, 1)]):
+                    corner_x[k], corner_y[k] = CRS.pixel_to_geo(
+                        gt, fx + ox, fy + oy)
+                hit = G.boxes_intersect_geom(
+                    corner_x.min(axis=0), corner_y.min(axis=0),
+                    corner_x.max(axis=0), corner_y.max(axis=0), geom)
+            mask[ys[hit], xs[hit]] = True
+    return mask
+
+
+_MASK_KINDS = ("polygon", "holes", "multi", "sliver", "outside", "cover",
+               "big", "lines", "empty", "nan", "unclosed")
+
+
+def _random_gt(rng):
+    """Degree-like grids, plus projected-like origins (1e6, where a
+    coordinate's ulp exceeds the 1e-12 on-segment tolerance) and pixels
+    down to 1e-7 units wide."""
+    scale = rng.choice([200.0, 1e6, 1e-3], p=[0.6, 0.25, 0.15])
+    ox, oy = rng.uniform(-scale, scale, 2)
+    px, py = rng.uniform(0.01, 5.0, 2) * (1e-5 if scale < 1 else 1.0)
+    if rng.random() < 0.4:  # rotated (and sheared) grid
+        a, b = rng.uniform(-np.pi, np.pi, 2)
+        return [ox, px * np.cos(a), -py * np.sin(b), oy,
+                px * np.sin(a), -py * np.cos(b)]
+    return [ox, px, 0.0, oy, 0.0, -py]
+
+
+def _star_px(rng, w, h, n, radius, centre=None):
+    """Simple star ring in PIXEL space, vertices sometimes snapped onto
+    pixel centres (k + 0.5) or pixel edges (integers)."""
+    cx, cy = centre if centre is not None else (
+        rng.uniform(-0.5 * w, 1.5 * w), rng.uniform(-0.5 * h, 1.5 * h))
+    ang = 2 * np.pi * (np.arange(n) + rng.uniform(0.05, 0.95, n)) / n
+    r = radius * rng.uniform(0.4, 1.0, n)
+    x, y = cx + r * np.cos(ang), cy + r * np.sin(ang)
+    snap = rng.integers(0, 3)
+    if snap == 1:
+        x, y = np.floor(x) + 0.5, np.floor(y) + 0.5
+    elif snap == 2:
+        x, y = np.round(x), np.round(y)
+    return np.stack([x, y], axis=1)
+
+
+def _to_geo(gt, ring_px):
+    gx, gy = crs.pixel_to_geo(gt, ring_px[:, 0], ring_px[:, 1])
+    return np.stack([gx, gy], axis=1)
+
+
+def _random_mask_geom(rng, kind, gt, w, h):
+    r = max(w, h)
+    if kind == "polygon":
+        return G.polygon(_to_geo(gt, _star_px(rng, w, h, int(rng.integers(3, 12)),
+                                              rng.uniform(0.3, r))))
+    if kind == "holes":
+        c = (rng.uniform(0, w), rng.uniform(0, h))
+        shell = _star_px(rng, w, h, 10, rng.uniform(4, r + 4), c)
+        hole = _star_px(rng, w, h, 6, 0.3 * np.abs(shell - c).min(), c)
+        return G.polygon(_to_geo(gt, shell), [_to_geo(gt, hole)])
+    if kind == "multi":
+        return G.multipolygon([
+            G.polygon(_to_geo(gt, _star_px(rng, w, h, 7, rng.uniform(0.3, r / 2))))
+            for _ in range(int(rng.integers(2, 4)))])
+    if kind == "sliver":  # a long quad far thinner than a pixel
+        (x0, y0), (x1, y1) = rng.uniform(-2, r + 2, (2, 2))
+        d = rng.uniform(1e-6, 0.3)
+        nx, ny = np.array([y0 - y1, x1 - x0]) / max(np.hypot(x1 - x0, y1 - y0), 1e-9)
+        ring = np.array([[x0, y0], [x1, y1], [x1 + d * nx, y1 + d * ny],
+                         [x0 + d * nx, y0 + d * ny]])
+        return G.polygon(_to_geo(gt, ring))
+    if kind == "outside":  # wholly off the tile, on some side of it
+        off = rng.choice([-1, 1], 2) * rng.uniform(1.5, 4.0, 2) * (w, h)
+        c = (w / 2 + off[0], h / 2 + off[1])
+        return G.polygon(_to_geo(gt, _star_px(rng, w, h, 8, rng.uniform(0.3, r), c)))
+    if kind == "cover":  # covers the whole tile
+        m = rng.uniform(0.0, 3.0)
+        ring = np.array([[-m, -m], [w + m, -m], [w + m, h + m], [-m, h + m]])
+        return G.polygon(_to_geo(gt, ring))
+    if kind == "big":  # >= 256 segments: the banded ray cast
+        return G.polygon(_to_geo(gt, _star_px(rng, w, h, int(rng.integers(256, 400)),
+                                              rng.uniform(2, r + 2))))
+    if kind == "lines":
+        pts = _to_geo(gt, rng.uniform(-2, r + 2, (int(rng.integers(2, 6)), 2)))
+        return [G.point(*pts[0]), G.Geom("LineString", pts),
+                G.Geom("MultiPoint", pts),
+                G.Geom("MultiLineString", [pts, pts[::-1] + 0.5])][rng.integers(0, 4)]
+    if kind == "empty":
+        return [G.empty("Polygon"), G.empty("Point"), G.Geom("MultiPolygon", []),
+                G.Geom("Polygon", [np.zeros((0, 2))]),
+                G.Geom("LineString", np.zeros((0, 2)))][rng.integers(0, 5)]
+    if kind == "nan":  # one non-finite vertex (not the closing one)
+        ring = _to_geo(gt, _star_px(rng, w, h, 7, rng.uniform(1, r), (w / 2, h / 2)))
+        ring[rng.integers(1, len(ring)), rng.integers(0, 2)] = \
+            [np.nan, np.inf, -np.inf][rng.integers(0, 3)]
+        return G.polygon(ring)
+    if kind == "unclosed":  # a ring whose last vertex is not its first
+        ring = _to_geo(gt, _star_px(rng, w, h, 6, rng.uniform(1, r), (w / 2, h / 2)))
+        return G.Geom("Polygon", [ring])
+    raise ValueError(kind)
+
+
+def _mask_outcome(kernel, g, gt, w, h, at):
+    """The mask, or the type of the error the kernel raised: with a
+    non-finite vertex the all-touched boundary sampling raises (its
+    int() of a NaN/inf sample count), and both kernels share that."""
+    import warnings
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", RuntimeWarning)  # nan/inf vertices
+        try:
+            return kernel(g, gt, w, h, at)
+        except (ValueError, OverflowError) as e:
+            return type(e)
+
+
+def _same_outcome(a, b) -> bool:
+    if isinstance(a, np.ndarray) and isinstance(b, np.ndarray):
+        return a.shape == b.shape and np.array_equal(a, b)
+    return a is b
+
+
+@settings(deadline=None, max_examples=80)
+@given(st.integers(0, 10**6), st.sampled_from(_MASK_KINDS))
+def test_windowed_coverage_mask_equals_full_grid(seed, kind):
+    """The windowed centre cast is bit-equal to the frozen whole-grid
+    kernel, centre-point and all-touched, for every geometry shape the
+    burn can meet: holes, multipolygons, vertices on pixel centres and
+    edges, sub-pixel slivers, geometries off or over the tile, banded
+    big rings, points and lines, empties, non-finite vertices and
+    unclosed rings, on axis-aligned and rotated grids."""
+    from godal_spark.operators.rasterize import _coverage_mask
+
+    rng = np.random.default_rng(seed)
+    w, h = int(rng.integers(1, 48)), int(rng.integers(1, 48))
+    gt = _random_gt(rng)
+    g = _random_mask_geom(rng, kind, gt, w, h)
+    for at in (False, True):
+        got = _mask_outcome(_coverage_mask, g, gt, w, h, at)
+        if kind == "empty":
+            # the full cast indexed ring 0 of a ring-less Polygon
+            # (IndexError); no vertices now means no cast and no pixel
+            assert got.shape == (h, w) and not got.any()
+            continue
+        ref = _mask_outcome(_coverage_mask_full_grid, g, gt, w, h, at)
+        assert _same_outcome(got, ref), (kind, at)
+
+
+def test_windowed_coverage_mask_fixed_cases():
+    """Named cases the random test draws rarely: the whole-tile cover,
+    a footprint lighting one pixel of a large tile, a NaN vertex (the
+    full cast's mask; all-touched raises as it did), and empties."""
+    from godal_spark.operators.rasterize import _coverage_mask
+
+    gt = [0.0, 1.0, 0.0, 64.0, 0.0, -1.0]
+    cover = G.box(-1.0, -1.0, 65.0, 65.0)
+    assert _coverage_mask(cover, gt, 64, 64, False).all()
+    one = G.box(10.2, 20.2, 10.8, 20.8)   # holds the centre of (43, 10)
+    m = _coverage_mask(one, gt, 64, 64, False)
+    assert m.sum() == 1 and m[43, 10]
+    nan_ring = np.array([[2.0, 2.0], [30.0, 2.0], [np.nan, 20.0],
+                         [2.0, 30.0], [2.0, 2.0]])
+    g = G.Geom("Polygon", [nan_ring])
+    for at in (False, True):
+        ref = _mask_outcome(_coverage_mask_full_grid, g, gt, 64, 64, at)
+        assert _same_outcome(_mask_outcome(_coverage_mask, g, gt, 64, 64, at), ref)
+    assert isinstance(_mask_outcome(_coverage_mask, g, gt, 64, 64, False),
+                      np.ndarray)
+    for e in (G.empty("Polygon"), G.empty("Point"), G.empty("MultiPolygon")):
+        for at in (False, True):
+            assert not _coverage_mask(e, gt, 64, 64, at).any()
+
+
 @settings(deadline=None, max_examples=25)
 @given(st.integers(0, 10**6))
 def test_resample_average_matmul_equals_loop(seed):

@@ -763,6 +763,34 @@ def test_minhash_dedup_job_budget(spark, jobs_of):
     assert n == 0 and rows
 
 
+def test_minhash_fallback_counts_candidates_in_checkpoint_job(
+        spark, monkeypatch, jobs_of):
+    """The distributed chain counts its candidate pairs with an
+    Observation on the pairs' checkpoint: the count equals a recount of
+    the pairs, the rows equal the driver path's, and the chain runs 8
+    jobs on this input (10 while a separate count() followed the
+    checkpoint; the count's exchange is a job of its own under AQE)."""
+    docs = spark.createDataFrame(list(enumerate(_captions(400, 3))),
+                                 "doc_id long, text string")
+    driver = sorted(tuple(r) for r in
+                    DD.minhash_lsh_dedup(docs, threshold=0.5).collect())
+    seen = []
+    verify_ok = DD._verify_broadcast_ok
+
+    def spy(n_cand, *a):
+        seen.append(n_cand)
+        return verify_ok(n_cand, *a)
+
+    monkeypatch.setattr(DD, "DRIVER_BUDGET", 0)
+    monkeypatch.setattr(DD, "_verify_broadcast_ok", spy)
+    n, pairs = jobs_of(lambda: DD.minhash_lsh_dedup(docs, threshold=0.5))
+    assert n <= 8
+    assert sorted(tuple(r) for r in pairs.collect()) == driver
+    sig = DD.with_shingle_minhash_fused(docs, "text", bands=16)
+    want = DD.minhash_lsh_candidates(sig.select("doc_id", "buckets")).count()
+    assert seen == [want] and want > len(driver)
+
+
 def test_minhash_round6_matches_spark_round(spark):
     """The driver path's round(inter / union, 6) is Spark's: HALF_UP on
     the decimal value, so every exact 7th-digit tie rounds up."""
